@@ -352,14 +352,16 @@ def interleave_by_weight(
         F.raise_error(
             F.concat(
                 F.lit("groups without a weight: ['"),
-                F.col(group_col).cast("string"),
+                F.coalesce(F.col(group_col).cast("string"), F.lit("NULL")),
                 F.lit("']"),
             )
         ).cast("double")
     )
     vt = ((F.col("__gr__") - F.col("__off__") + 1) / weight_expr).alias("__vt__")
+    # null-safe: a NULL group must reach the guard, not vanish in the join
+    null_safe = F.col(group_col).eqNullSafe(F.col("__g__"))
     paced = (
-        ranked.join(F.broadcast(offsets), group_col)
+        ranked.join(F.broadcast(offsets.withColumnRenamed(group_col, "__g__")), null_safe)
         .select(*df.columns, "__h__", vt)
     )
     final = zip_with_index(
@@ -439,15 +441,17 @@ def sample_to_token_budget(
     budget_expr = F.raise_error(
         F.concat(
             F.lit("groups without a budget: ['"),
-            F.col(group_col).cast("string"),
+            F.coalesce(F.col(group_col).cast("string"), F.lit("NULL")),
             F.lit("']"),
         )
     ).cast("long")
     for g, b in budgets.items():
         budget_expr = F.when(F.col(group_col) == g, F.lit(int(b))).otherwise(budget_expr)
+    # null-safe: a NULL group must reach the guard, not vanish in the join
+    null_safe = F.col(group_col).eqNullSafe(F.col("__g__"))
     out = (
         tagged.join(F.broadcast(p_off), "__pid__")
-        .join(F.broadcast(g_base), group_col)
+        .join(F.broadcast(g_base.withColumnRenamed(group_col, "__g__")), null_safe)
         .withColumn(
             "group_cumsum",
             F.sum("__sz__").over(w_local) + F.col("__poff__") - F.col("__gbase__"),

@@ -2187,23 +2187,10 @@ def stream_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch gate), and only the per-source counter state persists. The
     oracle recomputes the rules + rollup over the batch table, so a rule
     drifting between the batch and streaming paths fails the hash."""
-    import os
-
     from proteus_engine_spark.datapipe.textstats import gopher_quality_flags
-    from proteus_engine_spark.streaming.sources import (
-        probe_parquet_schema,
-        run_to_completion,
-        state_partitions_for,
-    )
+    from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = probe_parquet_schema(spark, path)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    raw = parquet_stream(spark, sf_dir, "documents.parquet")
     flags = gopher_quality_flags(raw, carry_cols=("source",))
     agg = flags.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2212,10 +2199,7 @@ def stream_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("r_stopwords").cast("long")).alias("n_stopwords_ok"),
         F.sum("n_tokens").alias("total_tokens"),
     )
-    return run_to_completion(
-        agg, "stream_gopher_filter_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir, "documents"),
-    )
+    return run_to_completion(agg, "stream_gopher_filter_sink", "complete")
 
 
 @register(
@@ -3024,22 +3008,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     id checksum — streaming aggregates cannot COUNT DISTINCT, and the
     checksum makes the surviving SET, not just its size, part of the
     hash). Only digests and ids cross the join; text never shuffles."""
-    import os
+    from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
-    from proteus_engine_spark.streaming.sources import (
-        probe_parquet_schema,
-        run_to_completion,
-        state_partitions_for,
-    )
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = probe_parquet_schema(spark, path)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    raw = parquet_stream(spark, sf_dir, "documents.parquet")
     # r17 optimization: pin the static digest set once per query — the
     # static side of a stream-static join re-executes per micro-batch,
     # so the scan+md5+distinct ran once per batch. Values unchanged.
@@ -3059,10 +3030,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_new_docs"),
         F.sum("doc_id").alias("id_checksum"),
     )
-    return run_to_completion(
-        agg, "stream_incr_dedup_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir, "documents"),
-    )
+    return run_to_completion(agg, "stream_incr_dedup_sink", "complete")
 
 
 @register(
@@ -3913,11 +3881,7 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fingerprint table that broadcasts (or persists bucketed by
     (band, value) in a continuous-crawl deployment)."""
     from proteus_engine_spark.datapipe.multimodal import perceptual_hash
-    from proteus_engine_spark.streaming.sources import (
-        probe_parquet_schema,
-        run_to_completion,
-        state_partitions_for,
-    )
+    from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
     ascii_docs = (
         F.length("text") > 0
@@ -3940,14 +3904,7 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docstring's persisted/bucketed corpus fingerprint table.
     corpus_h = perceptual_hash(corpus).localCheckpoint(eager=True)
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = probe_parquet_schema(spark, path)
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = parquet_stream(spark, sf_dir, "documents.parquet")
     batch = (
         stream.filter(ascii_docs)
         .filter(F.col("doc_id") % 3 == 0)
@@ -3991,10 +3948,7 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long").alias("hamming"),
         )
     )
-    return run_to_completion(
-        out, "stream_media_dedup_sink", "append",
-        state_partitions=state_partitions_for(spark, sf_dir, "documents"),
-    )
+    return run_to_completion(out, "stream_media_dedup_sink", "append")
 
 
 @register(
@@ -4139,23 +4093,10 @@ def stream_count_min_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead: total sketch mass = depth × token count, and the
     batch/stream match verdict — the length_percentiles_approx
     engine-side-verification discipline)."""
-    import os
-
     from proteus_engine_spark.datapipe.sketches import count_min_table
-    from proteus_engine_spark.streaming.sources import (
-        probe_parquet_schema,
-        run_to_completion,
-        state_partitions_for,
-    )
+    from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = probe_parquet_schema(spark, path)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    raw = parquet_stream(spark, sf_dir, "documents.parquet")
     stream_toks = raw.select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     )
@@ -4163,7 +4104,6 @@ def stream_count_min_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_table(stream_toks, "token", depth=4, width=256),
         "stream_cms_sink",
         "complete",
-        state_partitions=state_partitions_for(spark, sf_dir, "documents"),
     )
     batch_toks = load_table(spark, sf_dir, "documents").select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")

@@ -140,15 +140,9 @@ def stream_from_elements_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.length("n_name")).alias("total_len"),
     )
-    from proteus_engine_spark.streaming.sources import (
-        run_to_completion,
-        state_partitions_for,
-    )
+    from proteus_engine_spark.streaming.sources import run_to_completion
 
-    out = run_to_completion(
-        agg, "from_elements_gate_sink", "complete",
-        state_partitions=state_partitions_for(spark, sf_dir),
-    )
+    out = run_to_completion(agg, "from_elements_gate_sink", "complete")
     return out.select("n_regionkey", "n", "total_len")
 
 

@@ -10,15 +10,46 @@ file source: bounded input driven to completion with processAllAvailable(),
 which makes streaming results deterministic and comparable to batch SQL —
 the PySpark analogue of the reference's bounded ITCase streams
 (StreamITCase pattern in flink-table tests).
+
+State partitions. Every stateful operator plans
+``spark.sql.shuffle.partitions`` state-store instances, and every
+micro-batch pays a fixed cost per instance (store init and delta-file
+commit, plus one Arrow round trip per partition for Python-stateful
+operators) however few keys it holds. So the runner sizes that count from
+the stream's own input: the file sources of its analyzed plan (the
+``StreamingRelation`` leaves, by their ``path`` and ``pathGlobFilter``
+options, each distinct pair once). The matching data files are summed
+recursively, skipping names that start with ``.`` or ``_``, and the count is
+``clamp(ceil(bytes / 256 KiB), min(4, cap), cap)`` with cap the session's
+``shuffle.partitions``. It never exceeds the session value, so large
+sources keep it; the floor of 4 keeps real parallelism for the
+Python-stateful per-key walks. A plan without a local path-backed file
+source (rate, socket, kafka, memory) keeps the session value.
+
+Structured Streaming copies the session conf into a query at ``start()``,
+so the count is set on the shared session only around that call, under a
+module lock: concurrent starts through the runner never see each other's
+value. The lock does not cover queries started by other code while a
+runner start holds it; those would see the temporary value.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import glob
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_BYTES_PER_PARTITION = 256 * 1024
+_FLOOR = 4
+_HIDDEN = (".", "_")
+_conf_lock = threading.Lock()
 
 
 def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -33,32 +64,41 @@ def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
         return spark.read.parquet(path).schema
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as an unbounded stream (file source monitoring the
-    parquet path — the senv.readFile(PROCESS_CONTINUOUSLY) equivalent).
+def parquet_stream(
+    spark: SparkSession,
+    directory: str,
+    name: str,
+    one_file_per_batch: bool = False,
+) -> DataFrame:
+    """The parquet files in ``directory`` whose names match ``name`` as an
+    unbounded stream (the senv.readFile(PROCESS_CONTINUOUSLY) equivalent;
+    the file source needs a directory, so a single table file is selected
+    with ``pathGlobFilter``). ``one_file_per_batch`` makes each file its
+    own micro-batch, in mtime order.
 
-    The stream schema is PROBED from the batch footer, never assumed: the
-    driver-generated events.parquet stores ts as timestamp[us], which Spark
-    reads natively; only if a layout ships TIMESTAMP(NANOS)-as-long does the
-    nanos→micros division apply (mirroring sources/tables.py's batch path).
-    """
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = probe_parquet_schema(spark, path)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .load(sf_dir)
-    )
-    ts_type = schema["ts"].dataType
+    The stream schema is PROBED from the first matching file's footer,
+    never assumed. A ``ts`` column becomes TIMESTAMP, which watermarks
+    require (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE): TIMESTAMP(NANOS) read as
+    long is divided down to micros (mirroring sources/tables.py's batch
+    path), and TIMESTAMP_NTZ is cast, wall-clock preserving under the UTC
+    session timezone (session.py pins spark.sql.session.timeZone=UTC)."""
+    probe = sorted(glob.glob(os.path.join(glob.escape(directory), name)))
+    schema = probe_parquet_schema(spark, probe[0] if probe else os.path.join(directory, name))
+    reader = spark.readStream.schema(schema).format("parquet").option("pathGlobFilter", name)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    raw = reader.load(directory)
+    ts_type = schema["ts"].dataType if "ts" in schema.names else None
     if isinstance(ts_type, T.LongType):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(ts_type, T.TimestampNTZType):
-        # Watermarks require TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE);
-        # the cast is wall-clock-preserving under the UTC session timezone
-        # (session.py pins spark.sql.session.timeZone=UTC).
         raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return raw
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as an unbounded stream."""
+    return parquet_stream(spark, sf_dir, "events.parquet")
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
@@ -69,88 +109,149 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     )
 
 
-def state_partitions_for(
-    spark: SparkSession,
-    sf_dir: str,
-    *tables: str,
-    bytes_per_partition: int = 256 * 1024,
-    floor: int = 4,
-) -> int | None:
-    """Scale-adaptive state-store partition count for a streaming query
-    (r18, guide §2 — partitioning derived from input size, not a local
-    constant).
+def _file_sources(df: DataFrame) -> set[tuple[str, str]]:
+    """(path, pathGlobFilter) of every file source in ``df``'s analyzed
+    plan; the glob is "*" when the source has none."""
+    jvm = df.sparkSession._jvm
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sources = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        opts = jvm.scala.jdk.javaapi.CollectionConverters.asJava(leaf.dataSource().options())
+        opts = {k.lower(): v for k, v in opts.items()}
+        if "path" in opts:
+            sources.add((opts["path"], opts.get("pathglobfilter", "*")))
+    return sources
 
-    Every stateful operator plans ``spark.sql.shuffle.partitions`` state
-    store instances, and EVERY micro-batch pays a fixed per-instance cost
-    (store init + delta-file commit, plus one Arrow runner round-trip per
-    partition for Python-stateful operators) regardless of how many keys
-    the partition holds. When the source is KB-MB scale those fixed costs
-    dominate the whole query: the r18 interleaved A/B
-    (plans/r18/ab_stream_parts1.json) measured the four heavy streaming
-    gates 1.2-2x faster at 8 partitions than at 32 on a 2 MB source, and
-    the r17 driver's own 8-core bench ran stream_session_windows_chained
-    3x faster purely because its session default was 8.
 
-    The returned value is ``clamp(source_bytes / bytes_per_partition,
-    floor, session shuffle.partitions)`` — it NEVER exceeds the session's
-    configured value, so a production deployment (real shuffle.partitions
-    sizing, multi-GB+ sources) is unchanged; the count only drops toward
-    ``floor`` when the source itself is small enough that per-store fixed
-    costs provably dominate. ``floor`` stays above 1 because the
-    Python-stateful gates' per-key transition walk still wants real
-    parallelism (the A/B shows the delta-trigger walk degrading below 8).
-    Returns None (= keep the session default) when a size cannot be
-    determined."""
-    total = 0
-    for t in tables or ("events",):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
+def _source_bytes(path: str, name: str) -> int | None:
+    """Bytes of the data files matching ``name`` under ``path`` (a file, a
+    directory or a glob), recursively; None for a non-local path."""
+    if path.startswith("file:"):
+        path = "/" + path[len("file:"):].lstrip("/")
+    elif "://" in path:
         return None
-    n = (total + bytes_per_partition - 1) // bytes_per_partition
-    return int(max(min(cap, n), min(floor, cap)))
+    total = 0
+    for top in glob.glob(path):
+        if os.path.isfile(top):
+            walk = [(os.path.dirname(top), [], [os.path.basename(top)])]
+        else:
+            walk = os.walk(top)
+        for root, dirs, files in walk:
+            dirs[:] = [d for d in dirs if not d.startswith(_HIDDEN)]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if not f.startswith(_HIDDEN) and fnmatch.fnmatchcase(f, name)
+            )
+    return total
 
 
-def run_to_completion(
+def _state_partitions(df: DataFrame) -> int | None:
+    """The state partition count for streaming ``df`` (policy in the module
+    docstring), or None to keep the session value."""
+    sizes = [_source_bytes(path, name) for path, name in _file_sources(df)]
+    if not sizes or None in sizes:
+        return None
+    cap = int(df.sparkSession.conf.get(_SHUFFLE_PARTITIONS))
+    n = -(-sum(sizes) // _BYTES_PER_PARTITION)
+    return max(min(cap, n), min(_FLOOR, cap))
+
+
+def _start(writer: DataStreamWriter, df: DataFrame) -> StreamingQuery:
+    """Start ``writer``, a writer of ``df``, with ``df``'s state partition
+    count; the session conf is set (when it differs) and restored under
+    the module lock."""
+    spark = df.sparkSession
+    with _conf_lock:
+        n = _state_partitions(df)
+        prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+        if n is None or str(n) == prev:
+            return writer.start()
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+
+
+def run_to_completion_observed(
     df: DataFrame,
     query_name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
+    output_mode: str = "append",
+) -> tuple[DataFrame, list]:
     """Drive a (bounded) streaming DataFrame to completion into a memory
-    sink and return the final result table. Test/oracle harness only — a
-    production deployment writes to parquet/kafka with checkpointing.
-
-    ``state_partitions`` (r18): number of shuffle/state-store partitions
-    the streaming query plans with (see ``state_partitions_for``). The
-    conf is set only for the ``start()`` call — Structured Streaming
-    clones the session configuration into the query at start, so the
-    running stream keeps the value while the session is restored
-    immediately; keyed-state results are partition-count-independent."""
-    spark = df.sparkSession
-    writer = (
-        df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
-    )
-    if state_partitions:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    else:
-        q = writer.start()
+    sink; return the final result table and the query's progress events
+    (for metric assertions: dropped-late-row counts etc.). Test/oracle
+    harness only — a production deployment writes to parquet/kafka with
+    checkpointing. State partitions are sized from the stream's sources
+    (module docstring)."""
+    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
+    q = _start(writer, df)
     try:
         q.processAllAvailable()
+        progress = list(q.recentProgress)
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.table(query_name)
+    return df.sparkSession.table(query_name), progress
+
+
+def run_to_completion(
+    df: DataFrame, query_name: str, output_mode: str = "complete"
+) -> DataFrame:
+    """``run_to_completion_observed`` returning only the result table."""
+    return run_to_completion_observed(df, query_name, output_mode)[0]
+
+
+def _stage_replay(sf_dir: str, target: str, split) -> str:
+    """Stage ``sf_dir``'s events as numbered files under the repo's
+    ``.scratch/<target>``, once per target: ``split(tbl)`` returns
+    (piece index per row, piece count), piece p is written to
+    ``fNN.parquet`` with a fixed mtime 60 s after piece p - 1, so file
+    arrival order is deterministic. Staging goes to a temporary sibling
+    and is renamed into place atomically (concurrent runs are safe);
+    ``_SUCCESS`` marks a complete stage. Returns the staged directory."""
+    import shutil
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parent = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        ".scratch",
+    )
+    os.makedirs(parent, exist_ok=True)
+    target = os.path.join(parent, target)
+    if os.path.exists(os.path.join(target, "_SUCCESS")):
+        return target
+    tmp = tempfile.mkdtemp(prefix="stage_", dir=parent)
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    piece, n_pieces = split(tbl)
+    mtime_base = 1_000_000_000  # fixed epoch: deterministic ordering
+    for p in range(n_pieces):
+        path = os.path.join(tmp, f"f{p:02d}.parquet")
+        pq.write_table(tbl.filter(pa.array(piece == p)), path)
+        os.utime(path, (mtime_base + 60 * p, mtime_base + 60 * p))
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    os.utime(os.path.join(tmp, "_SUCCESS"), (mtime_base, mtime_base))
+    if os.path.isdir(target) and not os.path.exists(os.path.join(target, "_SUCCESS")):
+        # A previous staging run crashed after creating target but before
+        # its rename completed: os.replace onto a non-empty dir fails
+        # ENOTEMPTY forever, and treating that as "concurrent run won"
+        # would stream from the permanently incomplete dir. Clear it first.
+        shutil.rmtree(target, ignore_errors=True)
+    try:
+        os.replace(tmp, target)  # atomic: same filesystem (sibling dirs)
+    except OSError:
+        if os.path.exists(os.path.join(target, "_SUCCESS")):
+            shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
+        else:
+            raise  # neither ours nor a completed concurrent stage
+    return target
 
 
 def events_stream_ooo(
@@ -164,83 +265,34 @@ def events_stream_ooo(
     operators (the reference's RowTime*Over / WindowOperator ITCases feed
     late elements the same way).
 
-    Staging (once per sf, atomic rename — concurrent runs safe): rows are
-    split into files [head] [b1 b0 b3 b2 b5 b4] [tail], where b0..b5
-    are consecutive `block_ms` event-time blocks starting at 45% of the
-    span and the pair-swap makes every other file arrive BEFORE an
-    earlier-in-event-time file. File mtimes force that arrival order, and
-    maxFilesPerTrigger=1 makes each file its own micro-batch, so a
-    downstream operator sees genuinely late (but within-watermark-delay)
-    data. With 2h blocks the worst lateness is < 4h, so any watermark
-    delay >= 4h (callers use 5h) loses no rows.
+    Rows are staged (``_stage_replay``) into files [head] [b1 b0 b3 b2 b5
+    b4] [tail], where b0..b5 are consecutive `block_ms` event-time blocks
+    starting at 45% of the span and the pair-swap makes every other file
+    arrive BEFORE an earlier-in-event-time file. Each file is its own
+    micro-batch, so a downstream operator sees genuinely late (but
+    within-watermark-delay) data. With 2h blocks the worst lateness is
+    < 4h, so any watermark delay >= 4h (callers use 5h) loses no rows.
     """
-    import shutil
-    import tempfile
 
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def split(tbl):
+        import numpy as np
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    target = os.path.join(parent, f"ooo_events_{sf_tag}_{block_ms}_{n_blocks}")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(prefix="ooo_stage_", dir=parent)
-        tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         ts_us = tbl.column("ts").to_numpy().astype("datetime64[us]").astype("int64")
         lo, hi = int(ts_us.min()), int(ts_us.max())
         swap_start = lo + (hi - lo) * 45 // 100
-        block_us = block_ms * 1000
         # piece index per row: 0 = head, 1..n_blocks = swapped blocks
         # (block i -> piece 1 + (i XOR 1)), n_blocks+1 = tail
-        blk = (ts_us - swap_start) // block_us
+        blk = (ts_us - swap_start) // (block_ms * 1000)
         piece = np.where(
             ts_us < swap_start,
             0,
             np.where(blk >= n_blocks, n_blocks + 1, 1 + (blk ^ 1)),
         ).astype("int64")
-        mtime_base = 1_000_000_000  # fixed epoch: deterministic ordering
-        for p in range(n_blocks + 2):
-            sub = tbl.filter(pa.array(piece == p))
-            path = os.path.join(tmp, f"f{p:02d}.parquet")
-            pq.write_table(sub, path)
-            os.utime(path, (mtime_base + 60 * p, mtime_base + 60 * p))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        os.utime(os.path.join(tmp, "_SUCCESS"), (mtime_base, mtime_base))
-        if os.path.isdir(target) and not os.path.exists(
-            os.path.join(target, "_SUCCESS")
-        ):
-            # A previous staging run crashed after creating target but
-            # before its rename completed: os.replace onto a non-empty
-            # dir fails ENOTEMPTY forever, and treating that as
-            # "concurrent run won" would stream from the permanently
-            # incomplete dir. Clear the stale target first.
-            shutil.rmtree(target, ignore_errors=True)
-        try:
-            os.replace(tmp, target)  # atomic: same filesystem (sibling dirs)
-        except OSError:
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
-            else:
-                raise  # neither ours nor a completed concurrent stage
-    schema = probe_parquet_schema(spark, os.path.join(target, "f00.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(target)
-    )
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+        return piece, n_blocks + 2
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    target = _stage_replay(sf_dir, f"ooo_events_{sf_tag}_{block_ms}_{n_blocks}", split)
+    return parquet_stream(spark, target, "*.parquet", one_file_per_batch=True)
 
 
 # THE single source for the late-replay split point. The staging below,
@@ -282,8 +334,8 @@ def events_stream_late(
     late elements as a side output, Spark as the
     numRowsDroppedByWatermark state-operator metric).
 
-    Staging (same atomic-rename discipline as events_stream_ooo): rows
-    split at cut = lo + (hi - lo) * cut_pct // 100 on epoch-ms —
+    Rows are staged (``_stage_replay``) split at
+    cut = lo + (hi - lo) * cut_pct // 100 on epoch-ms —
       f00: on-time rows (ts_ms >= cut) EXCEPT the earliest one; contains
            the global max ts, so the watermark jumps to hi - delay.
       f01: the single earliest on-time row — a spacer batch, because
@@ -293,103 +345,27 @@ def events_stream_late(
       f02: every row with ts_ms < cut — all far below the filter
            watermark by construction, so ALL of them are dropped and
            counted: drop count == COUNT(ts_ms < cut), SQL-expressible.
-    File mtimes force arrival order; maxFilesPerTrigger=1 makes each file
-    its own micro-batch.
+    Each file is its own micro-batch, in that order.
     """
-    import shutil
-    import tempfile
 
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def split(tbl):
+        import numpy as np
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    target = os.path.join(parent, f"late_events_{sf_tag}_{cut_pct}")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(prefix="late_stage_", dir=parent)
-        tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        ts_ms = (
-            tbl.column("ts").to_numpy().astype("datetime64[us]").astype("int64")
-            // 1000
-        )
+        ts_ms = tbl.column("ts").to_numpy().astype("datetime64[us]").astype("int64") // 1000
         ids = tbl.column("event_id").to_numpy().astype("int64")
         # the one shared formula, over the ts array already in memory
         # (no second read of the file)
-        cut = _late_cut_formula(int(ts_ms.min()), int(ts_ms.max()), cut_pct)
-        on_time = ts_ms >= cut
+        on_time = ts_ms >= _late_cut_formula(int(ts_ms.min()), int(ts_ms.max()), cut_pct)
         # earliest on-time row by (ts_ms, event_id) — the spacer
         ot_idx = np.flatnonzero(on_time)
         spacer = ot_idx[np.lexsort((ids[ot_idx], ts_ms[ot_idx]))[0]]
         piece = np.where(on_time, 0, 2)
         piece[spacer] = 1
-        mtime_base = 1_000_000_000
-        for p in range(3):
-            path = os.path.join(tmp, f"f{p:02d}.parquet")
-            pq.write_table(tbl.filter(pa.array(piece == p)), path)
-            os.utime(path, (mtime_base + 60 * p, mtime_base + 60 * p))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        os.utime(os.path.join(tmp, "_SUCCESS"), (mtime_base, mtime_base))
-        if os.path.isdir(target) and not os.path.exists(
-            os.path.join(target, "_SUCCESS")
-        ):
-            shutil.rmtree(target, ignore_errors=True)  # stale crashed stage
-        try:
-            os.replace(tmp, target)
-        except OSError:
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent run won
-            else:
-                raise
-    schema = probe_parquet_schema(spark, os.path.join(target, "f00.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(target)
-    )
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+        return piece, 3
 
-
-def run_to_completion_observed(
-    df: DataFrame,
-    query_name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> tuple[DataFrame, list]:
-    """run_to_completion variant that also returns the query's progress
-    events, for metric assertions (dropped-late-row counts etc.).
-    ``state_partitions`` as in ``run_to_completion``."""
-    spark = df.sparkSession
-    writer = (
-        df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
-    )
-    if state_partitions:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    else:
-        q = writer.start()
-    try:
-        q.processAllAvailable()
-        progress = list(q.recentProgress)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.table(query_name), progress
+    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    target = _stage_replay(sf_dir, f"late_events_{sf_tag}_{cut_pct}", split)
+    return parquet_stream(spark, target, "*.parquet", one_file_per_batch=True)
 
 
 def dropped_late_rows(progress: list) -> int:

@@ -66,6 +66,8 @@ def main() -> None:
         nf, rf = entry.get("wide_flags", 0), ref.get("wide_flags", 0)
         if nf > rf:
             regressions.append(f"{name}: wide-column flags {rf} -> {nf}")
+        if entry.get("unparsed"):
+            regressions.append(f"{name}: unparsed ReadSchema lines {entry['unparsed']}")
 
     report = {
         "regressions": regressions,

@@ -29,6 +29,11 @@ column entry. (3) the embeddings wide column is 'embedding' (the
 parquet name) — 'vec' was only ever a post-load alias, so the old flag
 could never fire and the 32 embedding scans went unaudited.
 
+A ReadSchema line the parser cannot read in full (no closing '>' at end of
+line, or a column list Spark truncated to '... N more fields') is an audit
+error: it is listed under the gate's "unparsed" key and counted in the
+summary, never dropped.
+
 Usage: python scripts/readschema_audit.py [out.json] [name1,name2,...]
 """
 
@@ -50,6 +55,8 @@ _LOC_RE = re.compile(r"Location: \S+ \[[^\]]*?([a-z_0-9]+)\.parquet\]")
 # greedy to the LAST '>' on the line: nested types (array<float>) must not
 # truncate the captured column list (r18 ADVICE fix)
 _RS_RE = re.compile(r"ReadSchema: struct<(.*)>\s*$", re.MULTILINE)
+_RS_LINE_RE = re.compile(r"ReadSchema:.*$", re.MULTILINE)
+_TRUNCATED_RE = re.compile(r"\.\.\. \d+ more fields")
 
 WIDE = {
     "documents": {"text"},
@@ -81,6 +88,30 @@ def _split_cols(body: str) -> list[str]:
     return [c.strip() for c in cols if c.strip()]
 
 
+def parse_scans(plan: str) -> tuple[list[dict], list[str]]:
+    """(scans, unparsed ReadSchema lines) of a formatted physical plan.
+
+    The formatted plan prints each scan's Location/ReadSchema pair in the
+    numbered detail section; split on the numbered block headers (NOT on
+    every "(" — PushedFilters like IsNotNull(x) carry parens between
+    Location and ReadSchema, which a naive split separates, silently
+    dropping exactly the scans that HAVE pushdown)."""
+    scans: list[dict] = []
+    unparsed: list[str] = []
+    for b in re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE):
+        loc = _LOC_RE.search(b)
+        rs = _RS_RE.search(b)
+        if rs is None or _TRUNCATED_RE.search(rs.group(1)):
+            unparsed += [m.group(0).strip() for m in _RS_LINE_RE.finditer(b)]
+            continue
+        if loc:
+            table = loc.group(1).rsplit("/", 1)[-1]
+            cols = sorted(c.split(":")[0].strip() for c in _split_cols(rs.group(1)))
+            wide = sorted(set(cols) & WIDE.get(table, set()))
+            scans.append({"table": table, "cols": cols, "wide": wide})
+    return scans, unparsed
+
+
 def main() -> None:
     out_path = (
         Path(sys.argv[1])
@@ -106,25 +137,12 @@ def main() -> None:
             report[name] = {"error": repr(e)}
             print(f"ERROR {name}: {e!r}", file=sys.stderr)
             continue
-        # The formatted plan prints each scan's Location/ReadSchema pair in
-        # the numbered detail section; split on the numbered block headers
-        # (NOT on every "(" — PushedFilters like IsNotNull(x) carry parens
-        # between Location and ReadSchema, which a naive split separates,
-        # silently dropping exactly the scans that HAVE pushdown).
-        scans: list[dict] = []
-        blocks = re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE)
-        for b in blocks:
-            loc = _LOC_RE.search(b)
-            rs = _RS_RE.search(b)
-            if loc and rs:
-                table = loc.group(1).rsplit("/", 1)[-1]
-                cols = sorted(
-                    c.split(":")[0].strip() for c in _split_cols(rs.group(1))
-                )
-                wide = sorted(set(cols) & WIDE.get(table, set()))
-                scans.append({"table": table, "cols": cols, "wide": wide})
+        scans, unparsed = parse_scans(plan)
         flagged = [s for s in scans if s["wide"]]
         report[name] = {"scans": scans, "wide_flags": len(flagged)}
+        if unparsed:
+            report[name]["unparsed"] = unparsed
+            print(f"AUDIT ERROR {name}: unparsed {unparsed}", file=sys.stderr)
         if flagged:
             tags = ", ".join(f"{s['table']}[{'+'.join(s['wide'])}]" for s in flagged)
             print(f"{name}: WIDE {tags}")
@@ -132,7 +150,11 @@ def main() -> None:
 
     out_path.write_text(json.dumps(report, indent=1, sort_keys=True))
     n_flagged = sum(1 for e in report.values() if e.get("wide_flags"))
-    print(f"\n{len(report)} gates audited, {n_flagged} with wide-column scans")
+    n_unparsed = sum(len(e.get("unparsed", ())) for e in report.values())
+    print(
+        f"\n{len(report)} gates audited, {n_flagged} with wide-column scans, "
+        f"{n_unparsed} unparsed ReadSchema lines"
+    )
 
 
 if __name__ == "__main__":

@@ -13,9 +13,13 @@ the PySpark analogue of the reference's bounded ITCase streams
 
 State partitions. Every stateful operator plans
 ``spark.sql.shuffle.partitions`` state-store instances, and every
-micro-batch pays a fixed cost per instance (store init and delta-file
-commit, plus one Arrow round trip per partition for Python-stateful
-operators) however few keys it holds. So the runner sizes that count from
+micro-batch pays a cost per instance however few keys it holds: a store
+load and delta-file commit, plus one Arrow round trip per partition for
+Python-stateful operators. The commit measured 3-14 ms per instance and
+batch on the four heavy streaming gates (sf0.1, 4 cores, caps 4 and 8,
+``scripts/ab_stream_parts.py``); it was 48-104 ms while checkpoint files
+went through the FileContext-based manager, which starts a process per
+file operation (session.py). So the runner sizes that count from
 the stream's own input: the file sources of its analyzed plan (the
 ``StreamingRelation`` leaves, by their ``path`` and ``pathGlobFilter``
 options, each distinct pair once). The matching data files are summed

@@ -32,7 +32,8 @@ TABLES = (
 
 
 def _norm(v):
-    # Mirrors the driver gate's dtype-tagged normalization. Applied
+    # Mirrors the driver gate's dtype-tagged normalization; the tier-1
+    # oracle tests import it (tests/conftest.py), so one comparator. Applied
     # IDENTICALLY to both sides (the oracle path uses fetchall(), which
     # yields native date/datetime/int/Decimal — no pandas coercion of DATE
     # to Timestamp, BIGINT-with-NULLs to float64, or LIST to ndarray).

@@ -4,7 +4,6 @@ insensitive value comparison)."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 from pathlib import Path
@@ -23,6 +22,10 @@ _paths = [str(REPO), str(REPO / "tests")]
 os.environ["PYTHONPATH"] = os.pathsep.join(
     _paths + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
 )
+
+# One comparator: the tier-1 oracle tests normalise cells exactly as the
+# local driver-gate replica does.
+from scripts.gatecheck import _norm  # noqa: E402
 
 SF_DIR = os.environ.get("PROTEUS_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = (
@@ -48,28 +51,6 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
-
-
-def _norm(v):
-    """Normalize a cell for order-insensitive comparison.
-
-    Type-tagged: the driver's value hash is dtype-sensitive (BIGINT 10 and
-    DOUBLE 10.0 hash differently), while Python `10 == 10.0` is True — so
-    ints and floats carry an explicit tag to replicate driver behavior.
-    """
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return ("bool", v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("float", "NaN")
-        return ("float", round(v, 6))
-    if isinstance(v, int):
-        return ("int", v)
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    return v
 
 
 def assert_matches_oracle(spark_df, duck_con, oracle_sql: str, check_schema: bool = True):

@@ -10,6 +10,7 @@ import tempfile
 
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from proteus_engine_spark.streaming.cep import Pattern, match_pattern, match_pattern_stream
@@ -375,3 +376,100 @@ def test_savepoint_fork_and_immutability(spark):
 
     with _pytest.raises(ValueError, match="immutable"):
         trigger_savepoint(f"{d}/ckpt_a", sp)
+
+
+def test_checkpoint_manager_refuses_overwrite(spark, tmp_path):
+    """The session's checkpoint file manager is the FileSystem-based one,
+    and its atomic create keeps the no-overwrite contract the metadata logs
+    rely on: a second ``createAtomic(p, overwriteIfPossible=False)`` onto
+    an existing file raises Hadoop's FileAlreadyExistsException (the
+    exception HDFSMetadataLog handles) and leaves the first file intact."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    def write(data):
+        out = manager.createAtomic(jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0")), False)
+        out.write(bytearray(data))
+        out.close()
+
+    write(b"first")
+    with pytest.raises(Py4JJavaError) as err:
+        write(b"second")
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
+def test_stateful_restart_matches_uninterrupted_run(spark, tmp_path):
+    """A keyed tumbling count over three one-file micro-batches, stopped
+    after the first file and restarted from its checkpoint, emits the rows
+    of one uninterrupted run: the window open across the stop is finished
+    from the state delta and checksum files written before it. While the
+    first run is active, a second start on its checkpoint is refused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from proteus_engine_spark.sources.sinks import stream_to_parquet
+    from proteus_engine_spark.streaming.sources import parquet_stream
+    from proteus_engine_spark.streaming.windows import windowed_agg
+
+    files = [  # (user_id, minute); 10-minute windows, no watermark delay
+        [(1, 0), (2, 1), (1, 2)],
+        [(1, 5), (2, 12)],  # closes [0, 10): user 1 counts rows of two files
+        [(1, 25), (2, 31)],
+    ]
+
+    def stage(src, indices):
+        os.makedirs(src, exist_ok=True)
+        for i in indices:
+            users, minutes = zip(*files[i])
+            ts = [pd.Timestamp("2024-01-01", tz="UTC") + pd.Timedelta(minutes=m) for m in minutes]
+            table = pa.table({"user_id": pa.array(users, pa.int64()), "ts": pa.array(ts, pa.timestamp("us", "UTC"))})
+            path = f"{src}/{i:02d}.parquet"
+            pq.write_table(table, path)
+            os.utime(path, (1_700_000_000 + 60 * i,) * 2)  # arrival order = file order
+
+    def start(src, out, ckpt):
+        stream = parquet_stream(spark, src, "*.parquet", one_file_per_batch=True)
+        counts = windowed_agg(stream, "ts", "0 seconds", "10 minutes", ["user_id"], [F.count("*").alias("n")])
+        return stream_to_parquet(counts, out, ckpt)
+
+    def drain(q):
+        q.processAllAvailable()
+        q.stop()
+
+    def rows(out):
+        return sorted(
+            (r["user_id"], r["window_start"].minute, r["n"]) for r in spark.read.parquet(out).collect()
+        )
+
+    whole = tmp_path / "whole"
+    stage(f"{whole}/src", range(3))
+    drain(start(f"{whole}/src", f"{whole}/out", f"{whole}/ckpt"))
+    expected = rows(f"{whole}/out")
+    assert expected == [(1, 0, 3), (1, 20, 1), (2, 0, 1), (2, 10, 1)]
+
+    split = tmp_path / "split"
+    src, out, ckpt = f"{split}/src", f"{split}/out", f"{split}/ckpt"
+    stage(src, [0])
+    q = start(src, out, ckpt)
+    q.processAllAvailable()
+    # By default Spark stops an active run when the same query restarts;
+    # with that off, the concurrent start must be refused outright.
+    spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", "false")
+    try:
+        with pytest.raises(Exception, match="already active"):
+            start(src, f"{split}/out2", ckpt)
+        assert q.isActive
+    finally:
+        spark.conf.unset("spark.sql.streaming.stopActiveRunOnRestart")
+    q.stop()
+    assert rows(out) == []  # the open windows live only in the state store
+
+    stage(src, [1, 2])
+    drain(start(src, out, ckpt))
+    assert rows(out) == expected

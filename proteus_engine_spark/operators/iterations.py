@@ -32,7 +32,6 @@ def iterate(
     step: Callable[[DataFrame, int], DataFrame],
     max_iterations: int,
     converged: Callable[[DataFrame, DataFrame], bool] | None = None,
-    eager: bool = True,
     strict: bool = False,
 ) -> DataFrame:
     """DataSet.iterate parity: apply `step` up to max_iterations times,
@@ -45,9 +44,9 @@ def iterate(
     two clusters, should pass strict=True)."""
     import warnings
 
-    cur = initial.localCheckpoint(eager=eager) if eager else initial
+    cur = initial.localCheckpoint(eager=True)
     for i in range(max_iterations):
-        nxt = step(cur, i).localCheckpoint(eager=eager)
+        nxt = step(cur, i).localCheckpoint(eager=True)
         if converged is not None and converged(cur, nxt):
             return nxt
         cur = nxt

@@ -1492,23 +1492,19 @@ def queryable_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from proteus_engine_spark.streaming.queryable import QueryableStateClient
-    from proteus_engine_spark.streaming.sources import _start
 
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("s")
     )
     ckpt = tempfile.mkdtemp(prefix="proteus_qstate_")
-    writer = (
+    q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName("queryable_state_sink")
         .option("checkpointLocation", ckpt)
+        .start()
     )
-    # state partitions sized as in run_to_completion; the state data
-    # source reads the partition count back from the checkpoint's state
-    # metadata, so the lookup is partition-count-independent
-    q = _start(writer, agg)
     try:
         q.processAllAvailable()
     finally:

@@ -11,49 +11,22 @@ which makes streaming results deterministic and comparable to batch SQL —
 the PySpark analogue of the reference's bounded ITCase streams
 (StreamITCase pattern in flink-table tests).
 
-State partitions. Every stateful operator plans
-``spark.sql.shuffle.partitions`` state-store instances, and every
-micro-batch pays a cost per instance however few keys it holds: a store
-load and delta-file commit, plus one Arrow round trip per partition for
-Python-stateful operators. The commit measured 3-14 ms per instance and
-batch on the four heavy streaming gates (sf0.1, 4 cores, caps 4 and 8,
-``scripts/ab_stream_parts.py``); it was 48-104 ms while checkpoint files
-went through the FileContext-based manager, which starts a process per
-file operation (session.py). So the runner sizes that count from
-the stream's own input: the file sources of its analyzed plan (the
-``StreamingRelation`` leaves, by their ``path`` and ``pathGlobFilter``
-options, each distinct pair once). The matching data files are summed
-recursively, skipping names that start with ``.`` or ``_``, and the count is
-``clamp(ceil(bytes / 256 KiB), min(4, cap), cap)`` with cap the session's
-``shuffle.partitions``. It never exceeds the session value, so large
-sources keep it; the floor of 4 keeps real parallelism for the
-Python-stateful per-key walks. A plan without a local path-backed file
-source (rate, socket, kafka, memory) keeps the session value.
-
-Structured Streaming copies the session conf into a query at ``start()``,
-so the count is set on the shared session only around that call, under a
-module lock: concurrent starts through the runner never see each other's
-value. The lock does not cover queries started by other code while a
-runner start holds it; those would see the temporary value.
+Every stateful operator plans one state-store instance per session shuffle
+partition (``get_session`` defaults that count to the cores): with
+checkpoint files written through the FileSystem-based manager (session.py),
+a state commit costs 3-14 ms per instance and batch on the four heavy
+streaming gates (sf0.1, 4 cores, ``scripts/ab_stream_parts.py``), too
+little to size streams apart from batch queries.
 """
 
 from __future__ import annotations
 
-import fnmatch
 import glob
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-
-_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_BYTES_PER_PARTITION = 256 * 1024
-_FLOOR = 4
-_HIDDEN = (".", "_")
-_conf_lock = threading.Lock()
 
 
 def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -113,74 +86,6 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     )
 
 
-def _file_sources(df: DataFrame) -> set[tuple[str, str]]:
-    """(path, pathGlobFilter) of every file source in ``df``'s analyzed
-    plan; the glob is "*" when the source has none."""
-    jvm = df.sparkSession._jvm
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    sources = set()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "StreamingRelation":
-            continue
-        opts = jvm.scala.jdk.javaapi.CollectionConverters.asJava(leaf.dataSource().options())
-        opts = {k.lower(): v for k, v in opts.items()}
-        if "path" in opts:
-            sources.add((opts["path"], opts.get("pathglobfilter", "*")))
-    return sources
-
-
-def _source_bytes(path: str, name: str) -> int | None:
-    """Bytes of the data files matching ``name`` under ``path`` (a file, a
-    directory or a glob), recursively; None for a non-local path."""
-    if path.startswith("file:"):
-        path = "/" + path[len("file:"):].lstrip("/")
-    elif "://" in path:
-        return None
-    total = 0
-    for top in glob.glob(path):
-        if os.path.isfile(top):
-            walk = [(os.path.dirname(top), [], [os.path.basename(top)])]
-        else:
-            walk = os.walk(top)
-        for root, dirs, files in walk:
-            dirs[:] = [d for d in dirs if not d.startswith(_HIDDEN)]
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(_HIDDEN) and fnmatch.fnmatchcase(f, name)
-            )
-    return total
-
-
-def _state_partitions(df: DataFrame) -> int | None:
-    """The state partition count for streaming ``df`` (policy in the module
-    docstring), or None to keep the session value."""
-    sizes = [_source_bytes(path, name) for path, name in _file_sources(df)]
-    if not sizes or None in sizes:
-        return None
-    cap = int(df.sparkSession.conf.get(_SHUFFLE_PARTITIONS))
-    n = -(-sum(sizes) // _BYTES_PER_PARTITION)
-    return max(min(cap, n), min(_FLOOR, cap))
-
-
-def _start(writer: DataStreamWriter, df: DataFrame) -> StreamingQuery:
-    """Start ``writer``, a writer of ``df``, with ``df``'s state partition
-    count; the session conf is set (when it differs) and restored under
-    the module lock."""
-    spark = df.sparkSession
-    with _conf_lock:
-        n = _state_partitions(df)
-        prev = spark.conf.get(_SHUFFLE_PARTITIONS)
-        if n is None or str(n) == prev:
-            return writer.start()
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
-        try:
-            return writer.start()
-        finally:
-            spark.conf.set(_SHUFFLE_PARTITIONS, prev)
-
-
 def run_to_completion_observed(
     df: DataFrame,
     query_name: str,
@@ -190,10 +95,8 @@ def run_to_completion_observed(
     sink; return the final result table and the query's progress events
     (for metric assertions: dropped-late-row counts etc.). Test/oracle
     harness only — a production deployment writes to parquet/kafka with
-    checkpointing. State partitions are sized from the stream's sources
-    (module docstring)."""
-    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
-    q = _start(writer, df)
+    checkpointing."""
+    q = df.writeStream.outputMode(output_mode).format("memory").queryName(query_name).start()
     try:
         q.processAllAvailable()
         progress = list(q.recentProgress)

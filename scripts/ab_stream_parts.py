@@ -11,15 +11,15 @@ The driver's own 8-core run (BENCH_r17_c8) ran stream_session_windows_chained
 3x faster with 8 partitions — this script resolves the partition-count curve
 in ONE session, interleaved, so co-tenant drift hits every leg equally.
 
-The session value is the cap of the runner's state-partition clamp
-(streaming/sources.py), so each leg runs with at most that many state-store
-instances. Every run's progress events are kept: per (query, cap) the
-output also holds the state-store instance count and the state commit time
-summed over batches and operators, in total and per instance and batch.
+Each leg sets the session value, which is the state-store instance count
+of every stateful operator the leg's streams start. Every run's progress
+events are kept: per (query, parts) the output also holds the state-store
+instance count and the state commit time summed over batches and
+operators, in total and per instance and batch.
 
-Usage: python scripts/ab_stream_parts.py [rounds] [cap,cap,...]
+Usage: python scripts/ab_stream_parts.py [rounds] [parts,parts,...]
 Prints one JSON object: the cpu calibration probe per round, and per
-(query, cap) all wall samples + median and the state commit figures.
+(query, parts) all wall samples + median and the state commit figures.
 """
 from __future__ import annotations
 

@@ -1,140 +1,43 @@
-"""Round-18 optimization tests: scale-adaptive streaming state
-partitions, pagerank loop restructure, NB score label carry, BM25
+"""Round-18 optimization tests: streaming state partitions follow the
+session, pagerank loop restructure, NB score label carry, BM25
 postings pin — each optimization's internals pinned by a focused test
 (results themselves stay covered by the oracle gates)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
 
+class TestStreamStatePartitions:
+    def test_stream_plans_session_partitions(self, spark, tmp_path):
+        """A keyed count over a few-KB parquet source plans one state-store
+        instance per session shuffle partition, and the session conf is
+        unchanged afterwards."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-def _write_parts(directory, n_files: int, rows: int, seed: int) -> int:
-    """``n_files`` parquet part files of (k, v) rows under ``directory``,
-    plus a ``_SUCCESS`` marker; v is random doubles, so the bytes scale
-    with ``rows``. Returns the bytes of the part files."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(directory, exist_ok=True)
-    rng = np.random.default_rng(seed)
-    for i in range(n_files):
-        pq.write_table(
-            pa.table({"k": rng.integers(0, 50, rows), "v": rng.random(rows)}),
-            os.path.join(directory, f"part-{i:05d}.parquet"),
-        )
-    open(os.path.join(directory, "_SUCCESS"), "w").close()
-    return sum(
-        os.path.getsize(os.path.join(directory, f))
-        for f in os.listdir(directory)
-        if f.startswith("part-")
-    )
-
-
-def _clamp(n_bytes: int, cap: int) -> int:
-    return max(min(cap, -(-n_bytes // (256 * 1024))), min(4, cap))
-
-
-def _keyed_count(spark, directory):
-    from proteus_engine_spark.streaming.sources import parquet_stream
-
-    return parquet_stream(spark, str(directory), "*.parquet").groupBy("k").count()
-
-
-def _instances(progress) -> set[int]:
-    return {
-        p.stateOperators[0].numStateStoreInstances
-        for p in progress
-        if p.stateOperators
-    }
-
-
-class TestStatePartitionsFor:
-    def test_small_source_hits_floor(self, spark):
         from proteus_engine_spark.streaming.sources import (
-            _state_partitions,
-            events_stream,
+            parquet_stream,
+            run_to_completion_observed,
         )
 
-        # sf0.001 events.parquet is a few KB -> floor (4), never below
-        assert _state_partitions(events_stream(spark, SF_DIR)) == 4
-
-    def test_never_exceeds_session_cap(self, spark, monkeypatch):
-        from proteus_engine_spark.streaming import sources
-
-        monkeypatch.setattr(sources, "_BYTES_PER_PARTITION", 1)
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # huge byte-derived count clamps to the session value
-        assert sources._state_partitions(sources.events_stream(spark, SF_DIR)) == cap
-
-    def test_unknown_source_keeps_default(self, spark):
-        from proteus_engine_spark.streaming.sources import _state_partitions, rate_stream
-
-        assert _state_partitions(rate_stream(spark)) is None
-
-    def test_stream_plans_with_derived_partitions(self, spark, tmp_path):
-        """The count derived from the stream's own files (recursive byte
-        sum, markers skipped) reaches the stateful operator, and the
-        session conf is unchanged afterwards."""
-        from proteus_engine_spark.streaming.sources import run_to_completion_observed
-
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_bytes = _write_parts(tmp_path / "src", n_files=5, rows=28_000, seed=1)
-        want = _clamp(n_bytes, cap)
-        assert 4 < want < cap, (n_bytes, want)  # distinguishable from floor and cap
-        out, progress = run_to_completion_observed(
-            _keyed_count(spark, tmp_path / "src"), "r18_sp_probe", "update"
+        cap = spark.conf.get("spark.sql.shuffle.partitions")
+        assert cap == "8"  # the tier-1 session (tests/conftest.py)
+        src = tmp_path / "src"
+        src.mkdir()
+        pq.write_table(
+            pa.table({"k": [i % 50 for i in range(500)], "v": [i * 0.5 for i in range(500)]}),
+            src / "part-00000.parquet",
         )
-        assert _instances(progress) == {want}
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(cap)
-        assert out.count() > 0
-
-    def test_concurrent_starts_keep_their_own_counts(self, spark, tmp_path):
-        """Streams started at the same moment from more threads than
-        cores, whose derived counts differ (floor vs cap), each plan with
-        their own count; the session value is restored."""
-        import sys
-        import threading
-
-        from proteus_engine_spark.streaming.sources import run_to_completion_observed
-
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        small = _write_parts(tmp_path / "small", n_files=2, rows=1_000, seed=2)
-        big = _write_parts(tmp_path / "big", n_files=5, rows=60_000, seed=3)
-        want = {"small": _clamp(small, cap), "big": _clamp(big, cap)}
-        assert want == {"small": 4, "big": cap}, (small, big)
-        labels = ["small", "big"] * 3
-        barrier = threading.Barrier(len(labels))
-        got, errors = {}, []
-
-        def run(i, label):
-            try:
-                df = _keyed_count(spark, tmp_path / label)
-                barrier.wait(timeout=60)
-                _, progress = run_to_completion_observed(df, f"r18_race_{i}", "update")
-                got[i] = _instances(progress)
-            except Exception as e:  # noqa: BLE001 - reported by the assert below
-                errors.append(e)
-
-        interval = sys.getswitchinterval()
-        sys.setswitchinterval(1e-6)
-        try:
-            threads = [threading.Thread(target=run, args=a) for a in enumerate(labels)]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join(timeout=300)
-        finally:
-            sys.setswitchinterval(interval)
-        assert not any(t.is_alive() for t in threads)
-        assert not errors, errors
-        assert got == {i: {want[label]} for i, label in enumerate(labels)}
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(cap)
+        df = parquet_stream(spark, str(src), "*.parquet").groupBy("k").count()
+        out, progress = run_to_completion_observed(df, "r18_sp_probe", "update")
+        instances = {
+            p.stateOperators[0].numStateStoreInstances for p in progress if p.stateOperators
+        }
+        assert instances == {8}
+        assert spark.conf.get("spark.sql.shuffle.partitions") == cap
+        assert out.count() == 50
 
 
 class TestPagerankRestructure:

@@ -894,6 +894,43 @@ def _match_row(pattern: Pattern, m: dict) -> list:
     return row
 
 
+def _output_spec(pattern: Pattern, key_col: str, output: str) -> tuple[list[str], str]:
+    """Validate a pattern/output pair and return the output (columns,
+    DDL schema) shared by the batch and streaming CEP entry points."""
+    pattern.validate()
+    if output not in ("matches", "timeouts"):
+        raise ValueError(f"unknown output {output!r}: expected 'matches' or 'timeouts'")
+    if output == "timeouts" and pattern.within_ms is None:
+        raise ValueError("output='timeouts' requires a within() bound")
+    out_cols = [key_col] + _match_columns(pattern)
+    if output == "timeouts":
+        out_cols = out_cols + ["timeout_ts"]
+    return out_cols, f"{key_col} long, " + ", ".join(f"{c} long" for c in out_cols[1:])
+
+
+def _output_frame(
+    pattern: Pattern, out_cols: list[str], output: str, key,
+    matches: list[dict], timed_out: list[dict],
+) -> pd.DataFrame | None:
+    """One key's output rows, `[key] + _match_row(...)`: the completed
+    matches, or for ``output='timeouts'`` the timed-out partials plus
+    their expiry. None when there is nothing to emit."""
+    if output == "matches":
+        rows = [[key] + _match_row(pattern, m) for m in matches]
+    else:
+        rows = [
+            [key] + _match_row(pattern, p["events"]) + [int(p["__timeout_ts__"])]
+            for p in timed_out
+        ]
+    if not rows:
+        return None
+    out = pd.DataFrame(rows, columns=out_cols)
+    # Fork-twins (optional skip / oneOrMore branch) can expire with
+    # identical matched prefixes — emit each distinct partial once, like
+    # the reference's timeout handler sees each ComputationState.
+    return out if output == "matches" else out.drop_duplicates()
+
+
 def match_pattern(
     df: DataFrame,
     pattern: Pattern,
@@ -913,32 +950,15 @@ def match_pattern(
     when a later event for its key arrives past the window; partials still
     inside the window at end of input remain open, not timed out — the same
     watermark-relative semantics the reference's NFA cleanup has."""
-    pattern.validate()
-    if output not in ("matches", "timeouts"):
-        raise ValueError(f"unknown output {output!r}: expected 'matches' or 'timeouts'")
-    if output == "timeouts" and pattern.within_ms is None:
-        raise ValueError("output='timeouts' requires a within() bound")
-    out_cols = [key_col] + _match_columns(pattern)
-    if output == "timeouts":
-        out_cols = out_cols + ["timeout_ts"]
-    schema = f"{key_col} long, " + ", ".join(f"{c} long" for c in out_cols[1:])
+    out_cols, schema = _output_spec(pattern, key_col, output)
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
         found, _open, expired = _run_nfa(pdf, pattern, ts_col, id_col)
-        key = pdf[key_col].iloc[0]
-        if output == "matches":
-            rows = [[key] + _match_row(pattern, m) for m in found]
-        else:
-            # Fork-twins (optional skip / oneOrMore branch) can expire with
-            # identical matched prefixes — emit each distinct partial once,
-            # like the reference's timeout handler sees each ComputationState.
-            rows = [
-                [key] + _match_row(pattern, p["events"]) + [int(p["__timeout_ts__"])]
-                for p in expired
-            ]
-        out = pd.DataFrame(rows, columns=out_cols)
-        return out.drop_duplicates() if output == "timeouts" else out
+        out = _output_frame(
+            pattern, out_cols, output, pdf[key_col].iloc[0], found, expired
+        )
+        return pd.DataFrame(columns=out_cols) if out is None else out
 
     # Semantics-preserving predicate pushdown for relaxed-contiguity
     # patterns: only candidate rows cross into Python (and the filter
@@ -990,32 +1010,9 @@ def match_pattern_stream(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pattern.validate()
-    if output not in ("matches", "timeouts"):
-        raise ValueError(f"unknown output {output!r}: expected 'matches' or 'timeouts'")
-    if output == "timeouts" and pattern.within_ms is None:
-        raise ValueError("output='timeouts' requires a within() bound")
-    out_cols = [key_col] + _match_columns(pattern)
-    if output == "timeouts":
-        out_cols = out_cols + ["timeout_ts"]
-    schema = f"{key_col} long, " + ", ".join(f"{c} long" for c in out_cols[1:])
-    use_wm = watermark_delay is not None
+    from proteus_engine_spark.streaming.stateful import _watermark_buffered
 
-    def emit(key, matches):
-        return pd.DataFrame(
-            [[key[0]] + _match_row(pattern, m) for m in matches], columns=out_cols
-        )
-
-    def emit_timeouts(key, timed_out):
-        # fork-twins can expire with identical matched prefixes — one row
-        # per distinct ComputationState, like the batch path
-        return pd.DataFrame(
-            [
-                [key[0]] + _match_row(pattern, p["events"]) + [int(p["__timeout_ts__"])]
-                for p in timed_out
-            ],
-            columns=out_cols,
-        ).drop_duplicates()
+    out_cols, schema = _output_spec(pattern, key_col, output)
 
     def transition_replay(key, pdfs, state: GroupState):
         partials = pickle.loads(state.get[0]) if state.exists else []
@@ -1037,87 +1034,46 @@ def match_pattern_stream(
             state.update((pickle.dumps(partials),))
         elif state.exists:
             state.remove()
-        if output == "timeouts":
-            if timed_out:
-                yield emit_timeouts(key, timed_out)
-        elif matches:
-            yield emit(key, matches)
+        out = _output_frame(pattern, out_cols, output, key[0], matches, timed_out)
+        if out is not None:
+            yield out
 
-    def transition_buffered(key, pdfs, state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        st = pickle.loads(state.get[0]) if state.exists else {"buf": [], "partials": []}
-        frontier = st.get("frontier", 0)
-        if not state.hasTimedOut:
-            batches = [p for p in pdfs]
-            if batches:
-                pdf = pd.concat(batches)
-                ts_ms = pdf[ts_col].values.astype("datetime64[ms]").astype("int64").tolist()
-                for r, t in zip(pdf.to_dict("records"), ts_ms):
-                    # Late-event drop (AbstractKeyedCEPPatternOperator
-                    # discards elements below the operator watermark;
-                    # Spark's own late filter lags one micro-batch): a row
-                    # below this key's last NFA frontier can no longer be
-                    # sequenced.
-                    if t < frontier:
-                        continue
-                    r["__t__"] = t
-                    st["buf"].append(r)
-        st["frontier"] = max(frontier, wm)
-        # Release everything the watermark has sequenced: rows STRICTLY
-        # below the watermark can no longer be preceded by new arrivals
-        # (Spark admits ts == wm late rows — it drops only strictly older
-        # input), so the NFA sees a gapless (ts, id)-ordered prefix
-        # across micro-batches.
-        ready = sorted(
-            (e for e in st["buf"] if e["__t__"] < wm),
-            key=lambda e: (e["__t__"], e[id_col]),
-        )
-        st["buf"] = [e for e in st["buf"] if e["__t__"] >= wm]
-        matches = []
+    def process_released(key, ready, st, wm):
+        """The event-time mode's step on the shared watermark buffer: scan
+        the released (ts, id)-ordered rows, then expire partials against
+        the watermark. Pending obligation per partial: its expiry + 1."""
+        matches: list[dict] = []
         timed_out: list[dict] = []
         partials = st["partials"]
         if ready:
             matches, partials, nfa_timeouts = _scan(
-                ready, [e["__t__"] for e in ready], pattern, id_col, partials
+                [r for _t, _i, r in ready], [t for t, _i, _r in ready],
+                pattern, id_col, partials,
             )
             timed_out.extend(nfa_timeouts)
+        pending: list[int] = []
         if pattern.within_ms is not None and partials:
             # Sound horizon = watermark: every event still to be released
-            # (buffered or future) has ts > wm.
+            # (buffered or future) has ts >= wm.
             partials, absence_done, expired = _prune_expired(partials, wm, pattern)
             matches.extend(absence_done)
             timed_out.extend(expired)
+            pending = [p["t0"] + pattern.within_ms + 1 for p in partials]
         st["partials"] = partials
-        if st["buf"] or partials:
-            state.update((pickle.dumps(st),))
-            # Earliest pending obligation; both candidate kinds are > wm
-            # by construction (a buffered row at ts releases when wm > ts,
-            # so its wake-up is ts + 1; expired partials prune at
-            # t0 + within + 1), as EventTimeTimeout requires.
-            pending = [e["__t__"] + 1 for e in st["buf"]]
-            if pattern.within_ms is not None:
-                pending += [p["t0"] + pattern.within_ms + 1 for p in partials]
-            if pending:
-                state.setTimeoutTimestamp(min(pending))
-        elif state.exists:
-            state.remove()
-        if output == "timeouts":
-            if timed_out:
-                yield emit_timeouts(key, timed_out)
-        elif matches:
-            yield emit(key, matches)
+        return _output_frame(pattern, out_cols, output, key[0], matches, timed_out), pending
 
     pre = pattern.prefilter_expr()
     if pre is not None:
         stream = stream.filter(pre)
-    if use_wm:
-        stream = stream.withWatermark(ts_col, watermark_delay)
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout if use_wm else GroupStateTimeout.NoTimeout
-    )
+    if watermark_delay is not None:
+        return _watermark_buffered(
+            stream, key_col, ts_col, id_col, watermark_delay, schema,
+            {"partials": []}, process_released,
+            payload=lambda pdf: pdf.to_dict("records"), unit="ms",
+        )
     return stream.groupBy(key_col).applyInPandasWithState(
-        transition_buffered if use_wm else transition_replay,
-        schema, "blob binary", "append", timeout_conf,
+        transition_replay, schema, "blob binary", "append",
+        GroupStateTimeout.NoTimeout,
     )
 
 

@@ -4,22 +4,27 @@ Reference targets (SURVEY §2.9 / §7 step 6):
 - count windows        — KeyedStream.countWindow (KeyedStream.java:383,393)
 - ProcessFunction      — ProcessFunction.java:51 processElement/onTimer
   with keyed state (flink-core/.../api/common/state/*.java) and timers.
+- event-time OVER and sort — RowTime*Over / RowTimeSortProcessFunction,
+  and their processing-time twins (ProcTime*Over).
 
-Both use the same machinery: groupBy(key).applyInPandasWithState — keyed
-state lives in Spark's state store (checkpointed, scaled per key group,
-the RocksDB-backend equivalent), timers map to GroupStateTimeout.
+All of them run on groupBy(key).applyInPandasWithState — keyed state lives
+in Spark's state store (checkpointed, scaled per key group, the
+RocksDB-backend equivalent), timers map to GroupStateTimeout.
 
-Scale: state per key is O(1) for count windows (running agg + remainder
-buffer bounded by window size); Arrow batches amortize the Python crossing.
-Within a micro-batch, rows are presented sorted by (ts, tiebreak) before
-the transition function runs — deterministic replay, the same guarantee
-the reference gets from watermarked event-time order in its window
-operator.
+This module is also the one home of the watermark-buffer policy
+(`_ingest_and_release` + `_watermark_buffered`) that every event-time
+Python-stateful operator runs: the OVER/sort family here,
+triggers.triggered_window_agg and the event-time mode of
+cep.match_pattern_stream. Within a micro-batch, rows are presented
+sorted by (ts, tiebreak) before the transition function runs —
+deterministic replay, the same guarantee the reference gets from
+watermarked event-time order in its window operator.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from operator import itemgetter
 from typing import Any
 
 import pandas as pd
@@ -34,76 +39,141 @@ def field_ddl(df: DataFrame, col: str) -> str:
     return f"{col} {df.schema[col].dataType.simpleString()}"
 
 
-def _ingest_and_release(st, pdfs, state, ts_col, id_col, value_col):
-    """Shared watermark-buffer step for event-time stateful operators
-    (the RowTime*Over / RowTimeSortProcessFunction MapState-by-timestamp
-    discipline): append arrivals to the keyed buffer as (ts_us, id,
-    cents), then split out — in (ts, id) order — the rows the watermark
-    has passed. Microsecond event time is kept end-to-end (emitted ts and
-    sort order must match batch oracles bit-for-bit); only the release
-    comparison floors to ms, because Spark's watermark is ms-floored.
+def _one_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """A key's micro-batch as one frame (None when it is empty). A key
+    whose batch spans several Arrow chunks must be sorted GLOBALLY —
+    per-chunk sorts with state carried across chunks would order rows by
+    chunk arrival, and chunking is a serialization detail
+    (arrow.maxRecordsPerBatch), not a semantic boundary."""
+    chunks = [c for c in pdfs if len(c)]
+    if not chunks:
+        return None
+    return pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
 
-    Release order is globally correct per key across batches: everything
-    released earlier had ts strictly below the then-watermark, and Spark
-    admits any arrival with ts >= the watermark (it drops only strictly
-    older rows), so new arrivals always sort after everything already
-    released. Returns (watermark_ms, ready_rows)."""
+
+def _cents(pdf: pd.DataFrame, value_col: str):
+    """Exact integer cents (nearest cent, ties-to-even), the value unit
+    every Python-stateful aggregate sums in."""
     import numpy as np
 
+    return np.rint(pdf[value_col].to_numpy(dtype="float64") * 100).astype("int64")
+
+
+def _ingest_and_release(
+    st, pdfs, state, ts_col, id_col, payload=None, unit="us", on_time=None
+):
+    """The watermark-buffer policy's ingest-and-release step, shared by
+    every event-time Python-stateful operator (the RowTime*Over /
+    RowTimeSortProcessFunction MapState-by-timestamp discipline, and the
+    keyed CEP operator's processWatermark):
+
+    1. drop an arrival below the key's release frontier ``st["frontier"]``
+       (``on_time(t_ms, frontier)`` decides; default ``t_ms >= frontier``).
+       Spark's own late filter lags one micro-batch behind eviction, so
+       such a row CAN still arrive — buffering it would emit it below
+       already-released peers;
+    2. buffer the rest as ``(t, id, payload)`` in ``st["buf"]`` and advance
+       the frontier to the watermark;
+    3. release the rows STRICTLY below the watermark, in (t, id) order —
+       never sorted on the payload. Spark's late filter drops only rows
+       strictly older than the watermark, so an arrival with ts exactly
+       == wm is still admitted in a later batch; releasing at <= wm would
+       flush its peers first and break the global (t, id) release order
+       (and the "peers never straddle a flush" invariant the RANGE/peer
+       aggregates rely on).
+
+    Release order is therefore globally correct per key across batches:
+    everything released had t below the then-watermark, and every
+    admitted arrival is at or above it. ``unit`` is the event-time
+    resolution of ``t``: "us" keeps full source precision (the OVER/sort
+    oracles order on raw ts), "ms" quantizes on entry (the trigger and CEP
+    oracles order on epoch_ms(ts)); the watermark comparisons floor to ms
+    either way, because Spark's watermark is ms-floored. ``payload(pdf)``
+    gives one value per admitted row (None when not given). Returns
+    (watermark_ms, ready_rows)."""
+    per_ms = 1000 if unit == "us" else 1
     wm = state.getCurrentWatermarkMs()
     frontier = st.get("frontier", 0)
-    if not state.hasTimedOut:
-        batches = [p for p in pdfs if len(p)]
-        if batches:
-            pdf = pd.concat(batches)
-            ts_us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            # Late-event drop (the reference operators discard elements at
-            # or below the last watermark they processed): Spark's own
-            # late filter lags one micro-batch behind eviction, so a row
-            # below this key's last release frontier CAN still arrive —
-            # buffering it would emit it below already-released peers.
-            on_time = (ts_us // 1000) >= frontier
-            if not on_time.all():
-                pdf = pdf[on_time]
-                ts_us = ts_us[on_time]
-            ids = pdf[id_col].to_numpy()
-            if value_col is None:
-                cents = np.zeros(len(pdf), dtype="int64")
-            else:
-                cents = np.rint(
-                    pdf[value_col].to_numpy(dtype="float64") * 100
-                ).astype("int64")
-            st["buf"].extend(zip(ts_us.tolist(), ids.tolist(), cents.tolist()))
+    pdf = None if state.hasTimedOut else _one_frame(pdfs)
+    if pdf is not None:
+        t = pdf[ts_col].values.astype(f"datetime64[{unit}]").astype("int64")
+        t_ms = t // per_ms
+        keep = on_time(t_ms, frontier) if on_time else t_ms >= frontier
+        if not keep.all():
+            pdf = pdf[keep]
+            t = t[keep]
+        values = payload(pdf) if payload else [None] * len(pdf)
+        st["buf"].extend(zip(t.tolist(), pdf[id_col].tolist(), values))
     st["frontier"] = max(frontier, wm)
-    # STRICTLY below the watermark: Spark's late-row filter only drops
-    # rows strictly older than the watermark, so an arrival with ts
-    # exactly == wm is still admitted in a later batch — releasing at
-    # <= wm would flush its peers first and break the global (ts, id)
-    # release order (and the "peers never straddle a flush" invariant
-    # the RANGE/peer-group aggregates rely on).
-    ready = sorted(e for e in st["buf"] if e[0] // 1000 < wm)
-    st["buf"] = [e for e in st["buf"] if e[0] // 1000 >= wm]
+    ready, rest = [], []
+    for e in st["buf"]:
+        (ready if e[0] // per_ms < wm else rest).append(e)
+    st["buf"] = rest
+    ready.sort(key=itemgetter(0, 1))
     return wm, ready
 
 
-def _persist_or_clear(st, state, wm, keep_if):
-    """Persist the buffer state and arm the event-time timer at the next
-    pending row's timestamp (so buffered rows flush when the watermark
-    advances without new data for this key), or drop the key's state
-    entirely when nothing remains."""
+def _watermark_buffered(
+    stream: DataFrame,
+    key_col: str,
+    ts_col: str,
+    id_col: str,
+    watermark_delay: str,
+    out_schema: str,
+    init_state: dict,
+    process: Callable,
+    payload: Callable | None = None,
+    unit: str = "us",
+    on_time: Callable | None = None,
+) -> DataFrame:
+    """Keyed watermark-buffered operator: the whole watermark-buffer policy
+    around an operator's `process(key, ready, st, wm) -> (frame | None,
+    pending)`. Each call ingests and releases through
+    `_ingest_and_release` (which states the drop and strict-release rule;
+    `payload`, `unit` and `on_time` are passed to it), hands the released
+    rows to `process` — also with none released, so watermark-driven work
+    (window closes, partial expiry) runs on no-data timer calls — then
+    persists the pickled per-key dict `st` and arms the event-time timer at
+    the earliest pending obligation: a buffered row at t releases once
+    wm > t, so it wakes at t + 1; `pending` adds the operator's own
+    obligations, each strictly above wm, as EventTimeTimeout requires.
+    When neither the buffer nor any value the operator carries in `st`
+    (anything but the frontier) is non-empty, the key's state is dropped
+    instead."""
+    import copy
     import pickle
 
-    if st["buf"] or keep_if:
-        state.update((pickle.dumps(st),))
-        # A buffered row at ts releases only when wm > ts, so the timer
-        # is ts + 1 (also keeps it strictly above the current watermark,
-        # as EventTimeTimeout requires — buffered rows all have ts >= wm
-        # after the strict release).
-        pending = [t // 1000 + 1 for t, _i, _c in st["buf"]]
-        if pending:
-            state.setTimeoutTimestamp(min(pending))
-    elif state.exists:
-        state.remove()
+    per_ms = 1000 if unit == "us" else 1
+
+    def transition(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = (
+            pickle.loads(state.get[0]) if state.exists
+            else {"buf": [], **copy.deepcopy(init_state)}
+        )
+        wm, ready = _ingest_and_release(
+            st, pdfs, state, ts_col, id_col, payload, unit, on_time
+        )
+        out, pending = process(key, ready, st, wm)
+        if any(v for k, v in st.items() if k != "frontier"):
+            state.update((pickle.dumps(st),))
+            due = [t // per_ms + 1 for t, _i, _p in st["buf"]] + list(pending)
+            if due:
+                state.setTimeoutTimestamp(min(due))
+        elif state.exists:
+            state.remove()
+        if out is not None:
+            yield out
+
+    return (
+        stream.withWatermark(ts_col, watermark_delay)
+        .groupBy(key_col)
+        .applyInPandasWithState(
+            transition, out_schema, "blob binary", "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
 
 
 def count_window_agg(
@@ -139,16 +209,7 @@ def count_window_agg(
         else:
             win_id, buf_n, buf_sum, buf_first = 0, 0, 0.0, None
         frames: list[pd.DataFrame] = []
-        # A key whose micro-batch spans several Arrow chunks must be sorted
-        # GLOBALLY before window assignment — per-chunk sorts with state
-        # carried across chunks would order rows by chunk arrival, not
-        # (order_cols), and chunking is a serialization detail
-        # (arrow.maxRecordsPerBatch), not a semantic boundary.
-        chunks = [c for c in pdfs if len(c)]
-        whole = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else chunks[0] if chunks else None
-        )
+        whole = _one_frame(pdfs)
         for pdf in ([whole] if whole is not None else []):
             pdf = pdf.sort_values(order_cols, kind="mergesort")
             ids = pdf[id_col].to_numpy()
@@ -225,35 +286,22 @@ def event_time_sort(
         f"{ts_col} timestamp, seq long"
     )
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pickle
-
-        st = pickle.loads(state.get[0]) if state.exists else {"buf": [], "seq": 0}
-        wm, ready = _ingest_and_release(st, pdfs, state, ts_col, id_col, None)
-        if ready:
-            n = len(ready)
-            out = pd.DataFrame(
-                {
-                    key_col: key[0],
-                    id_col: [i for _t, i, _c in ready],
-                    ts_col: pd.to_datetime([t for t, _i, _c in ready], unit="us"),
-                    "seq": range(st["seq"] + 1, st["seq"] + n + 1),
-                }
-            )
-            st["seq"] += n
-            yield out
-        _persist_or_clear(st, state, wm, keep_if=st["seq"] > 0)
-
-    return (
-        stream.select(key_col, id_col, ts_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition, out_schema, "blob binary", "append",
-            GroupStateTimeout.EventTimeTimeout,
+    def emit(key, ready, st):
+        n = len(ready)
+        out = pd.DataFrame(
+            {
+                key_col: key[0],
+                id_col: [i for _t, i, _c in ready],
+                ts_col: pd.to_datetime([t for t, _i, _c in ready], unit="us"),
+                "seq": range(st["seq"] + 1, st["seq"] + n + 1),
+            }
         )
+        st["seq"] += n
+        return out
+
+    return _event_time_over(
+        stream, key_col, ts_col, None, id_col, watermark_delay, out_schema,
+        emit, init_state={"seq": 0},
     )
 
 
@@ -347,32 +395,11 @@ def running_over_agg(
     if time_mode == "proc":
         return _proc_time_over(
             stream, key_col, ts_col, value_col, id_col, out_schema, emit,
-            init_state={"buf": [], "cnt": 0, "sum": 0},
+            init_state={"cnt": 0, "sum": 0},
         )
-
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pickle
-
-        st = (
-            pickle.loads(state.get[0])
-            if state.exists
-            else {"buf": [], "cnt": 0, "sum": 0}
-        )
-        wm, ready = _ingest_and_release(st, pdfs, state, ts_col, id_col, value_col)
-        if ready:
-            yield emit(key, ready, st)
-        _persist_or_clear(st, state, wm, keep_if=st["cnt"] > 0)
-
-    return (
-        stream.select(key_col, id_col, ts_col, value_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition, out_schema, "blob binary", "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _event_time_over(
+        stream, key_col, ts_col, value_col, id_col, watermark_delay, out_schema,
+        emit, init_state={"cnt": 0, "sum": 0},
     )
 
 
@@ -398,26 +425,18 @@ def bounded_over_agg(
     ProcessFunction that buffers rows in MapState keyed by timestamp and
     only processes a timestamp once the watermark passes it (onTimer),
     retracting the row that falls out of the window. Same discipline here:
-    arrivals are buffered in keyed state and released in (ts, id) order
-    only at ts <= watermark — so event-time order (and hence window
-    contents) is correct under OUT-OF-ORDER arrival across micro-batches,
-    not just on in-order replay. Released rows' last ``n_rows - 1`` values
-    carry forward as the window tail (exact integer cents).
-
-    Release order is globally correct per key: everything released so far
-    had ts <= previous watermark, and Spark drops late arrivals below the
-    watermark upstream of the stateful operator, so new arrivals always
-    sort after everything already emitted.
+    arrivals are watermark-buffered in keyed state and released in (ts, id)
+    order (the rule is stated once, on `_ingest_and_release`) — so
+    event-time order (and hence window contents) is correct under
+    OUT-OF-ORDER arrival across micro-batches, not just on in-order replay.
+    Released rows' last ``n_rows - 1`` values carry forward as the window
+    tail (exact integer cents).
 
     State is O(n_rows + in-flight rows inside the watermark delay) per
     key — the same bound the reference's MapState-by-timestamp carries.
     Rows later than the final watermark stay buffered (append semantics;
     oracles exclude the watermark-delay tail).
     """
-    import pickle
-
-    import numpy as np
-
     if n_rows < 1:
         raise ValueError("n_rows must be >= 1")
     if time_mode not in ("event", "proc"):
@@ -453,28 +472,11 @@ def bounded_over_agg(
     if time_mode == "proc":
         return _proc_time_over(
             stream, key_col, ts_col, value_col, id_col, out_schema, emit,
-            init_state={"buf": [], "tail": []},
+            init_state={"tail": []},
         )
-
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pickle
-
-        st = pickle.loads(state.get[0]) if state.exists else {"buf": [], "tail": []}
-        wm, ready = _ingest_and_release(st, pdfs, state, ts_col, id_col, value_col)
-        if ready:
-            yield emit(key, ready, st)
-        _persist_or_clear(st, state, wm, keep_if=bool(st["tail"]))
-
-    return (
-        stream.select(key_col, id_col, ts_col, value_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition, out_schema, "blob binary", "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _event_time_over(
+        stream, key_col, ts_col, value_col, id_col, watermark_delay, out_schema,
+        emit, init_state={"tail": []},
     )
 
 
@@ -489,46 +491,50 @@ def _proc_time_over(
     reference's per-element processing has no intra-batch notion). The
     carried state (window tail / accumulator) is whatever `emit`
     maintains in the shared state dict."""
+    import copy
     import pickle
 
     def transition(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        import copy
-
         # deep copy: init_state's container values must not be shared
         # across keys (a future emit() that mutates in place would
         # otherwise leak state between keys in the same worker)
         st = pickle.loads(state.get[0]) if state.exists else copy.deepcopy(init_state)
-        # Concatenate the key's Arrow chunks before the (ts, id) refinement
-        # sort — per-chunk sorts would leave the micro-batch in chunk order
-        # whenever one key spans multiple chunks (arrow.maxRecordsPerBatch),
-        # breaking the documented deterministic-replay ordering.
-        chunks = [c for c in pdfs if len(c)]
-        whole = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-            else chunks[0] if chunks else None
-        )
-        for pdf in ([whole] if whole is not None else []):
+        pdf = _one_frame(pdfs)
+        if pdf is not None:
             pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
             ts_us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            ids = pdf[id_col].to_numpy()
-            if value_col is None:
-                cents = np.zeros(len(pdf), dtype="int64")
-            else:
-                cents = np.rint(
-                    pdf[value_col].to_numpy(dtype="float64") * 100
-                ).astype("int64")
-            rows = list(zip(ts_us.tolist(), ids.tolist(), cents.tolist()))
+            rows = list(zip(
+                ts_us.tolist(), pdf[id_col].tolist(), _cents(pdf, value_col).tolist()
+            ))
             yield emit(key, rows, st)
         state.update((pickle.dumps(st),))
 
-    cols = [key_col, id_col, ts_col] + ([value_col] if value_col else [])
-    return stream.select(*cols).groupBy(key_col).applyInPandasWithState(
+    return stream.select(key_col, id_col, ts_col, value_col).groupBy(
+        key_col
+    ).applyInPandasWithState(
         transition, out_schema, "blob binary", "append",
         GroupStateTimeout.NoTimeout,
+    )
+
+
+def _event_time_over(
+    stream, key_col, ts_col, value_col, id_col, watermark_delay, out_schema,
+    emit, init_state,
+):
+    """Event-time OVER / sort harness (RowTime*Over.scala,
+    RowTimeSortProcessFunction) — the mirror of _proc_time_over on the
+    watermark buffer (`_watermark_buffered`): µs event time, each row's
+    value in cents as its payload, and every flush's released rows handed
+    to `emit` in (ts, id) order. `emit` and the carried values in
+    `init_state` are the same in both modes."""
+    cols = [key_col, id_col, ts_col] + ([value_col] if value_col else [])
+    return _watermark_buffered(
+        stream.select(*cols), key_col, ts_col, id_col, watermark_delay,
+        out_schema, init_state,
+        lambda key, ready, st, _wm: (emit(key, ready, st) if ready else None, ()),
+        payload=(lambda pdf: _cents(pdf, value_col).tolist()) if value_col else None,
     )
 
 
@@ -561,9 +567,9 @@ def bounded_range_over_agg(
     frame is complete when computed).
 
     Same watermark-buffer discipline as bounded_over_agg; the retained
-    window state is rows with ts >= watermark - range_ms (any future row
-    has ts >= the watermark under strict release, so nothing older can
-    re-enter a frame) — the exact cleanup bound of the reference's
+    window state is rows with ts >= frontier - range_ms (every future
+    admitted row has ts >= the key's release frontier, so nothing older
+    can re-enter a frame) — the exact cleanup bound of the reference's
     retraction loop. Vectorized via one
     cumsum + two searchsorted calls per flush, no per-row Python loop.
     """
@@ -578,14 +584,15 @@ def bounded_range_over_agg(
 
     range_us = range_ms * 1000
 
-    def emit(key, ready, st, wm_us=None):
+    def emit(key, ready, st):
         # Microsecond event time throughout (frame membership [t-range, t]
         # must be judged at full source precision to match the batch RANGE
         # oracle). Carried window rows are already ts-sorted; released
         # rows all have ts above every carried ts (watermark monotonicity;
         # the proc contract assumes the same), so concatenation preserves
-        # sort order. Retention floor: in event mode the watermark (any
-        # future row is above it), in proc mode the last processed ts.
+        # sort order. Retention floor: in event mode the key's release
+        # frontier (every future admitted row is at or above it), in proc
+        # mode the last processed ts.
         import numpy as np
 
         car_ts = np.asarray([t for t, _c in st["win"]], dtype="int64")
@@ -599,7 +606,9 @@ def bounded_range_over_agg(
         hi = np.searchsorted(all_ts, rdy_ts, side="right")
         wsum = (csum[hi] - csum[lo]) / 100.0
         wcnt = hi - lo
-        floor = (wm_us if wm_us is not None else int(rdy_ts[-1])) - range_us
+        floor = (
+            st["frontier"] * 1000 if "frontier" in st else int(rdy_ts[-1])
+        ) - range_us
         # Keep ts >= floor (side="left"): release is strictly below the
         # watermark, so a future row can sit exactly AT the watermark and
         # its frame [wm - range, wm] still needs history at exactly
@@ -620,28 +629,11 @@ def bounded_range_over_agg(
     if time_mode == "proc":
         return _proc_time_over(
             stream, key_col, ts_col, value_col, id_col, out_schema, emit,
-            init_state={"buf": [], "win": []},
+            init_state={"win": []},
         )
-
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pickle
-
-        st = pickle.loads(state.get[0]) if state.exists else {"buf": [], "win": []}
-        wm, ready = _ingest_and_release(st, pdfs, state, ts_col, id_col, value_col)
-        if ready:
-            yield emit(key, ready, st, wm_us=wm * 1000)
-        _persist_or_clear(st, state, wm, keep_if=bool(st["win"]))
-
-    return (
-        stream.select(key_col, id_col, ts_col, value_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition, out_schema, "blob binary", "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _event_time_over(
+        stream, key_col, ts_col, value_col, id_col, watermark_delay, out_schema,
+        emit, init_state={"win": []},
     )
 
 
@@ -706,8 +698,8 @@ def process_keyed(
                 batch[event_time_col].to_numpy().astype("datetime64[ms]").astype("int64").max()
             )
             # Clamp above the CURRENT watermark: Spark admits rows against
-            # the PREVIOUS batch's watermark (one-batch lag, see the module
-            # header), so an all-laggard batch can put max_ts + duration at
+            # the PREVIOUS batch's watermark (one-batch lag, see
+            # _ingest_and_release), so an all-laggard batch can put max_ts + duration at
             # or below the frontier — setTimeoutTimestamp would then throw
             # and kill the query. Clamped, the idle timer fires on the next
             # watermark advance, which is when the key is provably idle.

@@ -23,10 +23,11 @@ the default EventTimeTrigger path (streaming/windows.py — stays JVM-side);
 this module exists ONLY for the compositions Spark cannot express — early
 count fires and per-window element eviction — so it pays the same
 justified Python-stateful cost as CEP. Events are watermark-buffered per
-key (the cep.py transition_buffered discipline): a row is released into
-its window only once the watermark has sequenced it, so every trigger
-decision sees a gapless (ts, id)-ordered prefix and the emitted fires are
-deterministic regardless of micro-batch boundaries. State per key =
+key by the policy every event-time Python-stateful operator shares
+(stateful._watermark_buffered, which CEP's event-time mode runs too): a
+row is released into its window only once the watermark has sequenced
+it, so every trigger decision sees a gapless (ts, id)-ordered prefix and
+the emitted fires are deterministic regardless of micro-batch boundaries. State per key =
 pending buffer + open-window buffers; count-evicted windows stay bounded
 (the evictor rewrite keeps at most `keep` elements live), and tumbling
 windows are dropped at watermark — the same cleanup
@@ -50,13 +51,10 @@ upstream, or widen the DECIMAL scale and the cents factor together.
 from __future__ import annotations
 
 import bisect
-import pickle
 from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 # --------------------------------------------------------------------------
@@ -264,7 +262,8 @@ def triggered_window_agg(
     Sums are exact integer cents (order-independent, oracle-safe).
 
     Determinism: arrivals are buffered per key and released into windows
-    only at ts <= watermark, in (ts, id) order — trigger fire points and
+    in (ts, id) order once the watermark passes them (the release rule is
+    stated once, on stateful._ingest_and_release) — trigger fire points and
     eviction fronts are positions in that order, not in arrival order, so
     results are reproducible across replays and micro-batch splits (the
     reference gets the same from watermark-ordered processing in
@@ -280,12 +279,11 @@ def triggered_window_agg(
     residual split-dependence for late data (the reference's triggers are
     arrival-driven too); pair DeltaTrigger with an in-order source — or a
     watermark delay covering the disorder, as the gate does — when replay
-    determinism of the fire points matters. Rows later than the
-    watermark are dropped by Spark upstream; the open tail past the
-    final watermark never fires — append semantics, like the native-path
+    determinism of the fire points matters. A row whose window already
+    closed at the key's frontier is dropped at ingest
+    (`_window_on_time_mask`); the open tail past the final watermark
+    never fires — append semantics, like the native-path
     stream_tumble_append."""
-    import numpy as np
-
     if window_ms is None and trigger.fires_on_event_time():
         raise ValueError(
             "GlobalWindows never end: an event-time trigger would never fire "
@@ -294,7 +292,11 @@ def triggered_window_agg(
             "TopSpeedWindowing does)"
         )
     evictor = evictor or Evictor()
-    from proteus_engine_spark.streaming.stateful import field_ddl
+    from proteus_engine_spark.streaming.stateful import (
+        _cents,
+        _watermark_buffered,
+        field_ddl,
+    )
 
     out_schema = (
         f"{field_ddl(stream, key_col)}, win_start timestamp, fire_seq long, "
@@ -307,31 +309,7 @@ def triggered_window_agg(
         win["elems"] = [] if trigger.purging else kept
         return len(kept), sum(c for _t, _i, c in kept) / 100.0
 
-    def transition(key, pdfs, state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        st = pickle.loads(state.get[0]) if state.exists else {"buf": [], "wins": {}}
-        frontier = st.get("frontier", 0)
-        if not state.hasTimedOut:
-            batches = [p for p in pdfs if len(p)]
-            if batches:
-                pdf = pd.concat(batches)
-                ts_ms = pdf[ts_col].values.astype("datetime64[ms]").astype("int64")
-                on_time = _window_on_time_mask(ts_ms, frontier, window_ms)
-                if not on_time.all():
-                    pdf = pdf[on_time]
-                    ts_ms = ts_ms[on_time]
-                ids = pdf[id_col].to_numpy()
-                cents = np.rint(
-                    pdf[value_col].to_numpy(dtype="float64") * 100
-                ).astype("int64")
-                st["buf"].extend(zip(ts_ms.tolist(), ids.tolist(), cents.tolist()))
-        st["frontier"] = max(frontier, wm)
-        # Strictly below the watermark: Spark admits ts == wm late rows
-        # (drops only strictly older), so releasing at <= wm would let a
-        # later equal-ts arrival slot after its already-fired peers.
-        ready = sorted(e for e in st["buf"] if e[0] < wm)
-        st["buf"] = [e for e in st["buf"] if e[0] >= wm]
-
+    def process(key, ready, st, wm):
         out_rows: list[tuple] = []
         interval = getattr(trigger, "interval_ms", None)
         for t, i, c in ready:
@@ -358,6 +336,7 @@ def triggered_window_agg(
                 n, total = _fire(win)
                 out_rows.append((key[0], ws, win["fires"], n, total))
 
+        pending: list[int] = []
         if window_ms is not None:
             if interval is not None:
                 # continuous boundary fires: each passed boundary emits the
@@ -382,40 +361,26 @@ def triggered_window_agg(
                         out_rows.append((key[0], ws, 0, n, total))
                     # count-trigger windows: cleanup without firing
                     # (CountTrigger.onEventTime == CONTINUE)
-
-        if st["buf"] or st["wins"]:
-            state.update((pickle.dumps(st),))
-            # A buffered row at ts releases when wm > ts → wake at ts + 1;
-            # a window closes when wm >= its end → wake at the end itself.
-            pending = [t + 1 for t, _i, _c in st["buf"]]
-            if window_ms is not None:
-                pending += [ws + window_ms for ws in st["wins"]]
-            pending = [p for p in pending if p > wm]
-            if pending:
-                state.setTimeoutTimestamp(min(pending))
-        elif state.exists:
-            state.remove()
-        if out_rows:
-            out = pd.DataFrame(
-                out_rows,
-                columns=[key_col, "win_start", "fire_seq", "n", "total_value"],
-            )
-            out["win_start"] = (
-                pd.to_datetime(out["win_start"], unit="ms")
-                if window_ms is not None
-                else pd.NaT
-            )
-            yield out
-
-    return (
-        stream.select(key_col, ts_col, id_col, value_col)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition,
-            out_schema,
-            "blob binary",
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
+            # an open window closes when wm >= its end: wake at the end
+            pending = [ws + window_ms for ws in st["wins"]]
+        if not out_rows:
+            return None, pending
+        out = pd.DataFrame(
+            out_rows,
+            columns=[key_col, "win_start", "fire_seq", "n", "total_value"],
         )
+        out["win_start"] = (
+            pd.to_datetime(out["win_start"], unit="ms")
+            if window_ms is not None
+            else pd.NaT
+        )
+        return out, pending
+
+    return _watermark_buffered(
+        stream.select(key_col, ts_col, id_col, value_col),
+        key_col, ts_col, id_col, watermark_delay, out_schema, {"wins": {}},
+        process,
+        payload=lambda pdf: _cents(pdf, value_col).tolist(),
+        unit="ms",
+        on_time=lambda t_ms, frontier: _window_on_time_mask(t_ms, frontier, window_ms),
     )

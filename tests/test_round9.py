@@ -381,32 +381,69 @@ class _FakeState:
         return self._wm
 
 
-def _replay(batches, wms):
+_WINDOW_MS = 2000
+
+
+def _replay_mode(mode):
+    """(ms per unit of released t, _ingest_and_release keywords, admission
+    rule) for each way the primitive's callers drive it."""
+    from proteus_engine_spark.streaming.stateful import _cents
+    from proteus_engine_spark.streaming.triggers import _window_on_time_mask
+
+    at_or_above = lambda t, f: t >= f  # noqa: E731
+    return {
+        # OVER/sort operators: µs event time, no payload (event_time_sort)
+        "us": (1000, {}, at_or_above),
+        # CEP event-time mode: ms event time, the row dict as payload
+        "ms_rows": (
+            1, {"unit": "ms", "payload": lambda pdf: pdf.to_dict("records")},
+            at_or_above,
+        ),
+        # triggers: ms event time, cents payload, window-end lateness
+        "ms_window": (
+            1,
+            {
+                "unit": "ms",
+                "payload": lambda pdf: _cents(pdf, "value").tolist(),
+                "on_time": lambda t, f: _window_on_time_mask(t, f, _WINDOW_MS),
+            },
+            lambda t, f: t - t % _WINDOW_MS + _WINDOW_MS > f,
+        ),
+    }[mode]
+
+
+def _replay(batches, wms, mode="us"):
     """Drive _ingest_and_release through a multi-batch replay. Returns
-    (flushes, admitted): per-flush released rows, and the rows the
-    frontier guard admitted (everything not below the frontier at its
-    ingest batch)."""
+    (flushes, admitted, below_frontier): per-flush released rows, the rows
+    the frontier guard admitted (everything not below the frontier at its
+    ingest batch, or in window mode everything whose window was still
+    open), and the ids admitted although below the frontier."""
     import pandas as pd
 
     from proteus_engine_spark.streaming.stateful import _ingest_and_release
 
+    _per_ms, kwargs, admit = _replay_mode(mode)
     st = {"buf": []}
-    flushes, admitted = [], []
+    flushes, admitted, below_frontier = [], [], set()
     for wm, batch in list(zip(wms, batches)) + [(10**15, [])]:
         frontier_before = st.get("frontier", 0)
-        admitted += [e for e in batch if e[0] >= frontier_before]
+        admitted += [e for e in batch if admit(e[0], frontier_before)]
+        below_frontier |= {
+            i for t, i in batch if admit(t, frontier_before) and t < frontier_before
+        }
         pdf = pd.DataFrame(
             {
                 "ts": pd.to_datetime([t for t, _i in batch], unit="ms"),
                 "event_id": [i for _t, i in batch],
+                "value": [i / 100 for _t, i in batch],
             }
         )
         _wm, ready = _ingest_and_release(
-            st, [pdf], _FakeState(wm), "ts", "event_id", None
+            st, [pdf], _FakeState(wm), "ts", "event_id", **kwargs
         )
         flushes.append(ready)
     assert not st["buf"], "final watermark must flush everything buffered"
-    return flushes, admitted
+    return flushes, admitted, below_frontier
 
 
 try:
@@ -419,16 +456,23 @@ except ImportError:  # pragma: no cover
 
 
 @pytest.mark.skipif(not HAS_HYPOTHESIS, reason="hypothesis not installed")
-@settings(deadline=None, max_examples=80)
+@settings(deadline=None, max_examples=120)
 @given(data=st_.data())
 def test_watermark_replay_invariants(data):
     """Randomized multi-batch replay over _ingest_and_release with ts
-    ties exactly at the watermark and duplicate ts across batches.
-    Invariants (the r8 strict-release fix, stateful.py:62-86):
-      1. every flush is STRICTLY below its watermark (ms-floored);
-      2. the global per-key release order is nondecreasing (ts, id);
-      3. released rows == frontier-admitted rows (no loss, no dup);
+    ties exactly at the watermark and duplicate ts across batches, in each
+    mode its callers use: µs without payload (OVER/sort), ms with the row
+    dict as payload (CEP), ms with cents and the window-end lateness test
+    (triggers). Invariants (the r8 strict-release fix):
+      1. every flush is STRICTLY below its watermark (ms-floored) and
+         (ts, id)-sorted;
+      2. the global per-key release order is nondecreasing (ts, id) — in
+         window mode, among the rows not admitted below the frontier;
+      3. released rows == frontier-admitted rows (no loss, no dup), each
+         with its own payload;
       4. the final watermark drains the buffer (asserted in _replay)."""
+    mode = data.draw(st_.sampled_from(["us", "ms_rows", "ms_window"]))
+    per_ms = _replay_mode(mode)[0]
     n_batches = data.draw(st_.integers(1, 5))
     # small ms domain on whole-second marks => ties at wm are frequent
     ts_domain = st_.integers(0, 8).map(lambda s: s * 1000)
@@ -443,15 +487,21 @@ def test_watermark_replay_invariants(data):
         # watermarks are monotone; land on tie-prone marks half the time
         wm = max(wm, data.draw(st_.one_of(ts_domain, st_.integers(0, 9000))))
         wms.append(wm)
-    flushes, admitted = _replay(batches, wms)
+    flushes, admitted, below_frontier = _replay(batches, wms, mode)
     for fl, w in zip(flushes, wms + [10**15]):
-        assert all(t // 1000 < w for t, _i, _c in fl), "release not strict"
+        assert all(t // per_ms < w for t, _i, _c in fl), "release not strict"
+        assert [e[:2] for e in fl] == sorted(e[:2] for e in fl), "flush not sorted"
     released = [e for fl in flushes for e in fl]
     keys = [(t, i) for t, i, _c in released]
-    assert keys == sorted(keys), "global (ts, id) release order broken"
-    assert sorted(keys) == sorted((t * 1000, i) for t, i in admitted), (
+    in_order = [k for k in keys if k[1] not in below_frontier]
+    assert in_order == sorted(in_order), "global (ts, id) release order broken"
+    assert sorted(keys) == sorted((t * per_ms, i) for t, i in admitted), (
         "released set != admitted set (loss or duplication)"
     )
+    if mode == "ms_rows":
+        assert all(p["event_id"] == i for _t, i, p in released), "row payload"
+    elif mode == "ms_window":
+        assert all(p == i for _t, i, p in released), "cents payload"
 
 
 # ---------------- window-end late admission ----------------

@@ -144,7 +144,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     jaccard_threshold: float = 0.7,
     verify: str = "estimate",
-    persist_signatures: bool = False,
     max_bucket_size: int | None = None,
     oversize: str = "split",
 ) -> DataFrame:
@@ -216,10 +215,9 @@ def minhash_lsh_pairs(
     duration of the call, eagerly finalizes the candidate-bounded result
     (a localCheckpoint of the PAIRS, tiny by LSH construction), and
     unpersists in a finally: the hash pass runs ONCE and no storage
-    outlives the call. ``persist_signatures`` is kept for API
-    compatibility but is now implied by the estimate tier. The exact tier
-    stays fully lazy — its plan references the signature pass once by
-    construction (the shingle re-attach reads `docs`, not `mh`).
+    outlives the call. The exact tier stays fully lazy — its plan
+    references the signature pass once by construction (the shingle
+    re-attach reads `docs`, not `mh`).
     """
     if verify not in ("estimate", "exact"):
         raise ValueError(f"unknown verify {verify!r}: expected 'estimate' or 'exact'")

@@ -10,8 +10,11 @@ iterate/iterateDelta clients.
 
 Spark-first: a graph here is just an edge DataFrame (src, dst) — every
 algorithm is joins + aggregations Catalyst can plan (shuffle on vertex
-ids, AQE-coalesced), and the iterative ones reuse `iterations.iterate`'s
-lineage-truncated loop. Nothing crosses into Python.
+ids, AQE-coalesced). Every iterative one truncates lineage per step:
+label_propagation runs on `iterations.iterate` (through
+`spargel.scatter_gather`); page_rank and hits run fixed-count loops of
+their own (no convergence probe), pinning each step's frames with
+localCheckpoint. Nothing crosses into Python.
 
 Scale notes per algorithm are on the functions; the one deliberate
 driver-side value is PageRank's per-iteration sink-mass scalar (one
@@ -217,7 +220,11 @@ def label_propagation(
     label; the vertex's own current label competes at an implicit
     frequency of 1 (UpdateVertexLabel:114-143 — the running max over
     (frequency, label) seeded with the current value). Synchronous
-    iterations via `iterations.iterate` with a no-change convergence probe.
+    iterations via `iterations.iterate`; the convergence probe is folded
+    into gather, as in `iterations.connected_components`: the argmax
+    window also reads the vertex's own candidate label and tags the row
+    `changed` when the winner differs, so convergence is a filter-isEmpty
+    scan of the superstep's checkpoint, not a prev-vs-cur join.
 
     `labels` defaults to (vertex, label=vertex). Scale: per step one
     shuffle of messages grouped on (vertex, label) plus a per-vertex argmax
@@ -244,26 +251,32 @@ def label_propagation(
 
     def gather(state: DataFrame, messages: DataFrame, _s: int) -> DataFrame:
         cand = messages.groupBy("vertex", "label").agg(
-            F.count(F.lit(1)).alias("freq")
-        ).unionByName(state.select("vertex", "label", F.lit(1).alias("freq")))
+            F.count(F.lit(1)).alias("freq"), F.lit(False).alias("own")
+        ).unionByName(
+            state.select("vertex", "label", F.lit(1).alias("freq"), F.lit(True).alias("own"))
+        )
         w = Window.partitionBy("vertex").orderBy(
             F.col("freq").desc(), F.col("label").desc()
         )
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        own = F.max(F.when(F.col("own"), F.col("label"))).over(whole)
         return (
-            cand.withColumn("__rn__", F.row_number().over(w))
+            cand.select(
+                "vertex", "label",
+                F.row_number().over(w).alias("__rn__"),
+                (~F.col("label").eqNullSafe(own)).alias("changed"),
+            )
             .filter(F.col("__rn__") == 1)
-            .select("vertex", "label")
+            .drop("__rn__")
         )
 
-    def converged(prev: DataFrame, cur: DataFrame) -> bool:
-        return (
-            prev.withColumnRenamed("label", "prev_l")
-            .join(cur, "vertex")
-            .filter(F.col("prev_l") != F.col("label"))
-            .isEmpty()
-        )
+    def converged(_prev: DataFrame, cur: DataFrame) -> bool:
+        return cur.filter("changed").isEmpty()
 
-    return scatter_gather(msgs_edges, labels, scatter, gather, iterations, converged)
+    return scatter_gather(
+        msgs_edges, labels.withColumn("changed", F.lit(True)), scatter, gather,
+        iterations, converged,
+    ).select("vertex", "label")
 
 
 def _shared_neighbor_pairs(

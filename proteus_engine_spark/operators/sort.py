@@ -48,12 +48,11 @@ def top_k_per_group(
     order: list[Column],
     k: int,
     rank_col: str = "rn",
-    keep_rank: bool = False,
 ) -> DataFrame:
     """Grouped first(n) / per-group top-k (UnsortedGrouping.first,
     UnsortedGrouping.java:202) as a rank-filter: one shuffle on the group
     key; Spark's WindowExec streams sorted groups, and AQE skew-handles hot
     keys."""
     w = Window.partitionBy(*group_cols).orderBy(*order)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-    return out if keep_rank else out.drop(rank_col)
+    ranked = df.withColumn(rank_col, F.row_number().over(w))
+    return ranked.filter(F.col(rank_col) <= k).drop(rank_col)

@@ -6,8 +6,8 @@ and checks the result against a DuckDB oracle, so a dropped, duplicated,
 or mangled row fails the gate — the same discipline as the round-trip
 gates in surface_q.
 
-All scratch state is per-invocation (tempfile.mkdtemp under .scratch,
-stale-GC'd by surface_q._scratch) — hermetic under concurrent runs.
+All scratch state is per-invocation (surface_q._scratch: a fresh dir
+under .scratch/tmp, swept by age) — hermetic under concurrent runs.
 """
 
 from __future__ import annotations

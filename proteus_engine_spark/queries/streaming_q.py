@@ -26,9 +26,11 @@ from proteus_engine_spark.streaming.side_inputs import (
 from proteus_engine_spark.streaming.async_io import async_enrich
 from proteus_engine_spark.streaming.sources import (
     LATE_CUT_PCT,
+    SCRATCH,
     events_stream,
     late_cut_ms,
     run_to_completion,
+    scratch_tmp,
 )
 from proteus_engine_spark.streaming.stateful import (
     bounded_over_agg,
@@ -84,23 +86,17 @@ def stream_csv_tumble_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     source decode path: every other stream_* query replays parquet."""
     import os
     import shutil
-    import tempfile
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
     scratch = os.path.join(
-        parent,
+        SCRATCH,
         "csv_events_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
     )
     if not os.path.exists(os.path.join(scratch, "_SUCCESS")):
-        # stage into a unique sibling, atomically rename into place —
+        # stage into a unique temp dir, atomically rename into place —
         # a concurrent run either wins the rename or discards its copy
         # (the content is deterministic either way); never write into the
         # shared path directly (the text-gate flake class).
-        os.makedirs(parent, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="csv_events_stage_", dir=parent)
+        tmp = scratch_tmp("csv_events_stage_")
         ev = load_table(spark, sf_dir, "events")
         (
             ev.select(
@@ -1489,15 +1485,13 @@ def queryable_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     was lost, duplicated, or stale fails the gate. The sink table is
     intentionally ignored: the only data path to the result is
     checkpoint → QueryableStateClient.get_state()."""
-    import tempfile
-
     from proteus_engine_spark.streaming.queryable import QueryableStateClient
 
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("s")
     )
-    ckpt = tempfile.mkdtemp(prefix="proteus_qstate_")
+    ckpt = scratch_tmp("proteus_qstate_")
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -1541,14 +1535,12 @@ def stream_iterate_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch hops here), which the recursive-CTE oracle recomputes
     exactly. A feedback row that is lost, duplicated, or mis-routed
     changes n_iter or the row count."""
-    import tempfile
-
     from proteus_engine_spark.streaming.iterations import (
         iterative_stream,
         run_iterative_to_completion,
     )
 
-    d = tempfile.mkdtemp(prefix="proteus_stream_iter_")
+    d = scratch_tmp("proteus_stream_iter_")
     ev = events_stream(spark, sf_dir).select(
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("v"),

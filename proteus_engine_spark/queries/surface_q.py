@@ -24,51 +24,22 @@ from proteus_engine_spark.sources import load_table
 from proteus_engine_spark.sources.sinks import insert_into, write_csv
 from proteus_engine_spark.sources.tables import from_rows, read_csv
 from proteus_engine_spark.operators.sort import sort_partition
+from proteus_engine_spark.streaming.sources import scratch_tmp
 
 
 def _scratch(tag: str, sf_dir: str) -> str:
     """Per-invocation scratch directory for round-trip gates.
 
     Hermetic by construction: every call returns a fresh, unique directory
-    (tempfile.mkdtemp), so a concurrent oracle run, a stale file from an
-    earlier overwrite, or two driver processes sharing the repo can never
-    read each other's sink output — the round-6 gate flake was exactly a
-    fixed shared path. The directory is NOT removed here because the
-    returned DataFrame reads it lazily; instead stale siblings (>30 min
-    old) are garbage-collected best-effort on the next call.
+    (`streaming.sources.scratch_tmp`), so a concurrent oracle run, a stale
+    file from an earlier overwrite, or two Spark applications sharing the
+    repo can never read each other's sink output — the round-6 gate flake
+    was exactly a fixed shared path. The directory is NOT removed here
+    because the returned DataFrame reads it lazily; `scratch_tmp` removes
+    stale ones (>30 min old) on a later call.
     """
-    import shutil
-    import tempfile
-    import time
-
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    now = time.time()
-    # GC only per-invocation scratch dirs (this function's own output and
-    # staging leftovers) — NEVER the long-lived staged replay dirs
-    # (ooo_events_*, csv_events_*), which a concurrently-running query may
-    # be streaming from.
-    gc_prefixes = (
-        "csv_supplier_", "insert_into_orders_", "text_part_",
-        "from_elements_", "savepoint_gate_", "ooo_stage_", "csv_events_stage_",
-        "jdbc_db_", "late_stage_", "prim_lineitem_",
-    )
-    for entry in os.listdir(parent):
-        full = os.path.join(parent, entry)
-        try:
-            if (
-                entry.startswith(gc_prefixes)
-                and os.path.isdir(full)
-                and now - os.path.getmtime(full) > 1800
-            ):
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            pass
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return tempfile.mkdtemp(prefix=f"{tag}_{sf_tag}_", dir=parent)
+    return scratch_tmp(f"{tag}_{sf_tag}_")
 
 
 @register(

@@ -1005,23 +1005,26 @@ def match_pattern_stream(
       buffered event, or earliest partial expiry + 1) drives release and
       state cleanup on no-data batches. State is bounded by the watermark
       lag (buffer) plus the within() window (partials) — the same bounds
-      the reference's NFA state has."""
-    import pickle
+      the reference's NFA state has.
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from proteus_engine_spark.streaming.stateful import _watermark_buffered
+    Both modes are steps on stateful._keyed_process (its rules — state
+    encoding, chunk joining, drop and timers — are in the stateful module
+    header)."""
+    from proteus_engine_spark.streaming.stateful import (
+        _keyed_process,
+        _watermark_buffered,
+    )
 
     out_cols, schema = _output_spec(pattern, key_col, output)
 
-    def transition_replay(key, pdfs, state: GroupState):
-        partials = pickle.loads(state.get[0]) if state.exists else []
-        batches = [p for p in pdfs]
-        if not batches:
-            return
-        pdf = pd.concat(batches).sort_values([ts_col, id_col], kind="mergesort")
+    def replay_step(key, pdf, st, _wm, _timed_out):
+        if pdf is None:
+            return None, st, None
+        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
         # Same pure NFA as batch, seeded with the carried-over partials.
-        matches, partials, nfa_timeouts = _run_nfa(pdf, pattern, ts_col, id_col, partials)
+        matches, partials, nfa_timeouts = _run_nfa(
+            pdf, pattern, ts_col, id_col, st["partials"]
+        )
         timed_out = list(nfa_timeouts)
         if pattern.within_ms is not None and partials:
             # In-order assumption ⇒ the batch max is a sound horizon: no
@@ -1030,13 +1033,9 @@ def match_pattern_stream(
             partials, absence_done, expired = _prune_expired(partials, horizon, pattern)
             matches.extend(absence_done)
             timed_out.extend(expired)
-        if partials:
-            state.update((pickle.dumps(partials),))
-        elif state.exists:
-            state.remove()
+        st["partials"] = partials
         out = _output_frame(pattern, out_cols, output, key[0], matches, timed_out)
-        if out is not None:
-            yield out
+        return out, st if partials else None, None
 
     def process_released(key, ready, st, wm):
         """The event-time mode's step on the shared watermark buffer: scan
@@ -1071,9 +1070,8 @@ def match_pattern_stream(
             {"partials": []}, process_released,
             payload=lambda pdf: pdf.to_dict("records"), unit="ms",
         )
-    return stream.groupBy(key_col).applyInPandasWithState(
-        transition_replay, schema, "blob binary", "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_process(
+        stream, [key_col], schema, replay_step, "NoTimeout", {"partials": []}
     )
 
 

@@ -10,11 +10,12 @@ late rows inside the engine and only counts them
 the watermark is declared.
 
 Spark-first design: a self-watermarking SPLITTER runs ahead of the
-watermarked pipeline — `applyInPandasWithState` with NoTimeout (no
-watermark required on this path), carrying the running max event time in
-keyed state. Each micro-batch is judged against the frontier the
-PREVIOUS batches established (`max_ts - delay`), which is exactly the
-watermark Spark itself would compute at batch granularity, and exactly
+watermarked pipeline — a NoTimeout step on stateful._keyed_process (no
+watermark required on this path; the runner's rules are in the stateful
+module header), carrying the running max event time in keyed state.
+Each micro-batch is judged against the frontier the PREVIOUS batches
+established (`max_ts - delay`), which is exactly the watermark Spark
+itself would compute at batch granularity, and exactly
 WindowOperator.isElementLate with allowedLateness folded into the delay.
 Rows are tagged `is_late`; the on-time branch feeds `withWatermark` (its
 rows are by construction at or above the frontier Spark will compute, so
@@ -47,29 +48,24 @@ def late_data_split(
     minus `delay_ms`) — batch-granularity watermark semantics, matching
     both Spark's own filter and WindowOperator.isElementLate. Returns the
     input columns plus `is_late boolean`."""
+    from proteus_engine_spark.streaming.stateful import _keyed_process
+
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in stream.schema.fields
     )
     out_schema = f"{fields}, is_late boolean"
-    state_schema = "max_ms long"
     cols = [f.name for f in stream.schema.fields]
 
-    def split(key, pdfs, state):
-        max_ms = state.get[0] if state.exists else None
-        frontier = None if max_ms is None else max_ms - delay_ms
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_ms = pdf[ts_col].values.astype("datetime64[ms]").astype("int64")
-            out = pdf[cols].copy()
-            out["is_late"] = (
-                False if frontier is None else ts_ms < frontier
-            )
-            batch_max = int(ts_ms.max())
-            max_ms = batch_max if max_ms is None else max(max_ms, batch_max)
-            yield out
-        if max_ms is not None:
-            state.update((max_ms,))
+    def split(_key, pdf, st, _wm, _timed_out):
+        if pdf is None:
+            return None, st, None
+        max_ms = st["max_ms"]
+        ts_ms = pdf[ts_col].values.astype("datetime64[ms]").astype("int64")
+        out = pdf[cols].copy()
+        out["is_late"] = False if max_ms is None else ts_ms < max_ms - delay_ms
+        batch_max = int(ts_ms.max())
+        st["max_ms"] = batch_max if max_ms is None else max(max_ms, batch_max)
+        return out, st, None
 
     key = partition_col if partition_col is not None else "__wmkey__"
     src = (
@@ -77,12 +73,7 @@ def late_data_split(
         if partition_col is not None
         else stream.withColumn("__wmkey__", F.lit(0))
     )
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            split, out_schema, state_schema, "append", "NoTimeout"
-        )
-    )
+    return _keyed_process(src, [key], out_schema, split, "NoTimeout", {"max_ms": None})
 
 
 def side_output_late_data(

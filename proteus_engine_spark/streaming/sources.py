@@ -28,6 +28,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# The repo's scratch root: staged replays live directly under it (read by
+# concurrent queries, never collected); every per-invocation or staging
+# temp dir lives under its `tmp/`, the one directory swept by age.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
+_TMP_MAX_AGE_S = 1800
+
+
+def scratch_tmp(prefix: str) -> str:
+    """A fresh, unique temp dir under ``SCRATCH/tmp/``. Siblings older
+    than 30 min are removed best-effort first: the dirs are read lazily
+    by the DataFrames built on them, so none is removed by its creator,
+    and a staging run that crashed leaves its dir behind."""
+    import shutil
+    import tempfile
+    import time
+
+    tmp = os.path.join(SCRATCH, "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    now = time.time()
+    for entry in os.listdir(tmp):
+        full = os.path.join(tmp, entry)
+        try:
+            if now - os.path.getmtime(full) > _TMP_MAX_AGE_S:
+                shutil.rmtree(full, ignore_errors=True)
+        except OSError:
+            pass
+    return tempfile.mkdtemp(prefix=prefix, dir=tmp)
+
 
 def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     """Footer-probe a parquet file's Spark-visible schema. If the file uses
@@ -118,24 +149,18 @@ def _stage_replay(sf_dir: str, target: str, split) -> str:
     ``.scratch/<target>``, once per target: ``split(tbl)`` returns
     (piece index per row, piece count), piece p is written to
     ``fNN.parquet`` with a fixed mtime 60 s after piece p - 1, so file
-    arrival order is deterministic. Staging goes to a temporary sibling
+    arrival order is deterministic. Staging goes to a ``scratch_tmp`` dir
     and is renamed into place atomically (concurrent runs are safe);
     ``_SUCCESS`` marks a complete stage. Returns the staged directory."""
     import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    parent = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(parent, exist_ok=True)
-    target = os.path.join(parent, target)
+    target = os.path.join(SCRATCH, target)
     if os.path.exists(os.path.join(target, "_SUCCESS")):
         return target
-    tmp = tempfile.mkdtemp(prefix="stage_", dir=parent)
+    tmp = scratch_tmp("stage_")
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     piece, n_pieces = split(tbl)
     mtime_base = 1_000_000_000  # fixed epoch: deterministic ordering

@@ -7,9 +7,23 @@ Reference targets (SURVEY §2.9 / §7 step 6):
 - event-time OVER and sort — RowTime*Over / RowTimeSortProcessFunction,
   and their processing-time twins (ProcTime*Over).
 
-All of them run on groupBy(key).applyInPandasWithState — keyed state lives
+Every Python-stateful streaming operator in the package — the ones here,
+triggers.triggered_window_agg, cep.match_pattern_stream and
+late.late_data_split — is a `step` on one keyed runner, `_keyed_process`:
+the package's only groupBy(key).applyInPandasWithState. Keyed state lives
 in Spark's state store (checkpointed, scaled per key group, the
-RocksDB-backend equivalent), timers map to GroupStateTimeout.
+RocksDB-backend equivalent). The runner's rules, stated once:
+
+- state is one pickled per-key dict (`blob binary`), a deep copy of the
+  operator's `init_state` on a key's first call;
+- the step sees the key's micro-batch as one frame (`_one_frame`), or None
+  on a timed-out call (the onTimer of ProcessFunction.java:85);
+- the step returns the dict to persist, or None to remove the key's state
+  — never inferred from falsy values (a frontier, max or window id of 0
+  is legitimate state);
+- the step arms at most one timer: an event time, clamped to
+  max(t, watermark + 1) because EventTimeTimeout rejects a timestamp at
+  or below the watermark, or a processing-time duration.
 
 This module is also the one home of the watermark-buffer policy
 (`_ingest_and_release` + `_watermark_buffered`) that every event-time
@@ -29,7 +43,7 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 
 def field_ddl(df: DataFrame, col: str) -> str:
@@ -59,8 +73,54 @@ def _cents(pdf: pd.DataFrame, value_col: str):
     return np.rint(pdf[value_col].to_numpy(dtype="float64") * 100).astype("int64")
 
 
+def _keyed_process(
+    stream: DataFrame,
+    key_cols: list[str],
+    out_schema: str,
+    step: Callable,
+    timeout: str,
+    init_state: dict,
+) -> DataFrame:
+    """The keyed runner under every Python-stateful operator (the rules are
+    in the module header). `step(key, frame | None, st, wm, timed_out) ->
+    (out | None, st | None, timer | None)`; `wm` is the watermark in ms
+    under EventTimeTimeout (the only mode that requires one), else None.
+    `timeout` is a GroupStateTimeout name."""
+    import copy
+    import pickle
+
+    event_time = timeout == "EventTimeTimeout"
+
+    def transition(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        timed_out = state.hasTimedOut
+        st = (
+            pickle.loads(state.get[0]) if state.exists
+            else copy.deepcopy(init_state)
+        )
+        wm = state.getCurrentWatermarkMs() if event_time else None
+        frame = None if timed_out else _one_frame(pdfs)
+        out, st, timer = step(key, frame, st, wm, timed_out)
+        if st is None:
+            if state.exists:
+                state.remove()
+        else:
+            state.update((pickle.dumps(st),))
+            if timer is not None and event_time:
+                state.setTimeoutTimestamp(max(timer, wm + 1))
+            elif timer is not None:
+                state.setTimeoutDuration(timer)
+        if out is not None and len(out):
+            yield out
+
+    return stream.groupBy(*key_cols).applyInPandasWithState(
+        transition, out_schema, "blob binary", "append", timeout
+    )
+
+
 def _ingest_and_release(
-    st, pdfs, state, ts_col, id_col, payload=None, unit="us", on_time=None
+    st, pdf, wm, ts_col, id_col, payload=None, unit="us", on_time=None
 ):
     """The watermark-buffer policy's ingest-and-release step, shared by
     every event-time Python-stateful operator (the RowTime*Over /
@@ -88,13 +148,12 @@ def _ingest_and_release(
     resolution of ``t``: "us" keeps full source precision (the OVER/sort
     oracles order on raw ts), "ms" quantizes on entry (the trigger and CEP
     oracles order on epoch_ms(ts)); the watermark comparisons floor to ms
-    either way, because Spark's watermark is ms-floored. ``payload(pdf)``
-    gives one value per admitted row (None when not given). Returns
-    (watermark_ms, ready_rows)."""
+    either way, because Spark's watermark is ms-floored. ``pdf`` is the
+    key's micro-batch (None when there is none), ``wm`` the watermark in
+    ms. ``payload(pdf)`` gives one value per admitted row (None when not
+    given). Returns the released rows."""
     per_ms = 1000 if unit == "us" else 1
-    wm = state.getCurrentWatermarkMs()
     frontier = st.get("frontier", 0)
-    pdf = None if state.hasTimedOut else _one_frame(pdfs)
     if pdf is not None:
         t = pdf[ts_col].values.astype(f"datetime64[{unit}]").astype("int64")
         t_ms = t // per_ms
@@ -110,7 +169,7 @@ def _ingest_and_release(
         (ready if e[0] // per_ms < wm else rest).append(e)
     st["buf"] = rest
     ready.sort(key=itemgetter(0, 1))
-    return wm, ready
+    return ready
 
 
 def _watermark_buffered(
@@ -128,51 +187,33 @@ def _watermark_buffered(
 ) -> DataFrame:
     """Keyed watermark-buffered operator: the whole watermark-buffer policy
     around an operator's `process(key, ready, st, wm) -> (frame | None,
-    pending)`. Each call ingests and releases through
-    `_ingest_and_release` (which states the drop and strict-release rule;
-    `payload`, `unit` and `on_time` are passed to it), hands the released
-    rows to `process` — also with none released, so watermark-driven work
-    (window closes, partial expiry) runs on no-data timer calls — then
-    persists the pickled per-key dict `st` and arms the event-time timer at
-    the earliest pending obligation: a buffered row at t releases once
-    wm > t, so it wakes at t + 1; `pending` adds the operator's own
-    obligations, each strictly above wm, as EventTimeTimeout requires.
-    When neither the buffer nor any value the operator carries in `st`
-    (anything but the frontier) is non-empty, the key's state is dropped
-    instead."""
-    import copy
-    import pickle
-
+    pending)`, as one EventTimeTimeout step on `_keyed_process`. Each call
+    ingests and releases through `_ingest_and_release` (which states the
+    drop and strict-release rule; `payload`, `unit` and `on_time` are
+    passed to it), hands the released rows to `process` — also with none
+    released, so watermark-driven work (window closes, partial expiry)
+    runs on no-data timer calls — then keeps the per-key dict `st` and
+    arms the timer at the earliest pending obligation: a buffered row at
+    t releases once wm > t, so it wakes at t + 1; `pending` adds the
+    operator's own obligations, each strictly above wm. The key's state
+    is dropped once the buffer is empty and every value the operator
+    carries is back at its `init_state` value (the frontier is the
+    policy's, not the operator's)."""
     per_ms = 1000 if unit == "us" else 1
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            pickle.loads(state.get[0]) if state.exists
-            else {"buf": [], **copy.deepcopy(init_state)}
-        )
-        wm, ready = _ingest_and_release(
-            st, pdfs, state, ts_col, id_col, payload, unit, on_time
+    def step(key, pdf, st, wm, _timed_out):
+        ready = _ingest_and_release(
+            st, pdf, wm, ts_col, id_col, payload, unit, on_time
         )
         out, pending = process(key, ready, st, wm)
-        if any(v for k, v in st.items() if k != "frontier"):
-            state.update((pickle.dumps(st),))
-            due = [t // per_ms + 1 for t, _i, _p in st["buf"]] + list(pending)
-            if due:
-                state.setTimeoutTimestamp(min(due))
-        elif state.exists:
-            state.remove()
-        if out is not None:
-            yield out
+        if not st["buf"] and all(st[k] == v for k, v in init_state.items()):
+            return out, None, None
+        due = [t // per_ms + 1 for t, _i, _p in st["buf"]] + list(pending)
+        return out, st, min(due) if due else None
 
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            transition, out_schema, "blob binary", "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_process(
+        stream.withWatermark(ts_col, watermark_delay), [key_col], out_schema,
+        step, "EventTimeTimeout", {"buf": [], **init_state},
     )
 
 
@@ -197,67 +238,55 @@ def count_window_agg(
         f"{field_ddl(stream, key_col)}, win_id long, n long, "
         f"total_value double, first_id {id_type}, last_id {id_type}"
     )
-    state_schema = f"win_id long, buf_n long, buf_sum double, buf_first {id_type}"
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, st, _wm, _timed_out):
         import numpy as np
 
-        if state.exists:
-            win_id, buf_n, buf_sum, buf_first = state.get
+        if pdf is None:
+            return None, st, None
+        pdf = pdf.sort_values(order_cols, kind="mergesort")
+        ids = pdf[id_col].to_numpy()
+        vals = pdf[value_col].to_numpy(dtype="float64")
+        n = len(pdf)
+        buf_n = st["buf_n"]
+        # Window id per row: batch-level cumcount offset by the carried
+        # open-window fill — no per-row Python (the reference's
+        # CountTrigger counts in JVM state; here it's one integer div).
+        pos = buf_n + np.arange(n)
+        win = st["win_id"] + pos // window_size
+        starts = np.flatnonzero(np.r_[True, win[1:] != win[:-1]])
+        sums = np.add.reduceat(vals, starts)
+        counts = np.diff(np.r_[starts, n])
+        wins = win[starts]
+        firsts = ids[starts].copy()
+        lasts = ids[np.r_[starts[1:] - 1, n - 1]]
+        if buf_n > 0:  # merge the carried open window into its group
+            sums[0] += st["buf_sum"]
+            counts[0] += buf_n
+            firsts[0] = st["buf_first"]
+        closed = counts == window_size
+        out = pd.DataFrame(
+            {
+                key_col: np.full(int(closed.sum()), key[0]),
+                "win_id": wins[closed],
+                "n": counts[closed],
+                "total_value": sums[closed],
+                "first_id": firsts[closed],
+                "last_id": lasts[closed],
+            }
+        )
+        if closed[-1]:
+            st.update(win_id=int(wins[-1]) + 1, buf_n=0, buf_sum=0.0, buf_first=None)
         else:
-            win_id, buf_n, buf_sum, buf_first = 0, 0, 0.0, None
-        frames: list[pd.DataFrame] = []
-        whole = _one_frame(pdfs)
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values(order_cols, kind="mergesort")
-            ids = pdf[id_col].to_numpy()
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            n = len(pdf)
-            # Window id per row: batch-level cumcount offset by the carried
-            # open-window fill — no per-row Python (the reference's
-            # CountTrigger counts in JVM state; here it's one integer div).
-            pos = buf_n + np.arange(n)
-            win = win_id + pos // window_size
-            starts = np.flatnonzero(np.r_[True, win[1:] != win[:-1]])
-            sums = np.add.reduceat(vals, starts)
-            counts = np.diff(np.r_[starts, n])
-            wins = win[starts]
-            firsts = ids[starts].copy()
-            lasts = ids[np.r_[starts[1:] - 1, n - 1]]
-            if buf_n > 0:  # merge the carried open window into its group
-                sums[0] += buf_sum
-                counts[0] += buf_n
-                firsts[0] = buf_first
-            closed = counts == window_size
-            if closed.any():
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            key_col: np.full(int(closed.sum()), key[0]),
-                            "win_id": wins[closed],
-                            "n": counts[closed],
-                            "total_value": sums[closed],
-                            "first_id": firsts[closed],
-                            "last_id": lasts[closed],
-                        }
-                    )
-                )
-            if closed[-1]:
-                win_id, buf_n, buf_sum, buf_first = int(wins[-1]) + 1, 0, 0.0, None
-            else:
-                win_id, buf_n = int(wins[-1]), int(counts[-1])
-                # .item() keeps the id's own type (long OR string — the
-                # schema no longer hard-codes long)
-                buf_sum = float(sums[-1])
-                buf_first = firsts[-1].item() if hasattr(
-                    firsts[-1], "item") else firsts[-1]
-        state.update((win_id, buf_n, buf_sum, buf_first))
-        yield from frames
+            st.update(
+                win_id=int(wins[-1]), buf_n=int(counts[-1]),
+                buf_sum=float(sums[-1]), buf_first=firsts[-1],
+            )
+        return out, st, None
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        transition, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _keyed_process(
+        stream, [key_col], out_schema, step, "NoTimeout",
+        {"win_id": 0, "buf_n": 0, "buf_sum": 0.0, "buf_first": None},
     )
 
 
@@ -491,31 +520,20 @@ def _proc_time_over(
     reference's per-element processing has no intra-batch notion). The
     carried state (window tail / accumulator) is whatever `emit`
     maintains in the shared state dict."""
-    import copy
-    import pickle
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # deep copy: init_state's container values must not be shared
-        # across keys (a future emit() that mutates in place would
-        # otherwise leak state between keys in the same worker)
-        st = pickle.loads(state.get[0]) if state.exists else copy.deepcopy(init_state)
-        pdf = _one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            ts_us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            rows = list(zip(
-                ts_us.tolist(), pdf[id_col].tolist(), _cents(pdf, value_col).tolist()
-            ))
-            yield emit(key, rows, st)
-        state.update((pickle.dumps(st),))
+    def step(key, pdf, st, _wm, _timed_out):
+        if pdf is None:
+            return None, st, None
+        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
+        ts_us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
+        rows = list(zip(
+            ts_us.tolist(), pdf[id_col].tolist(), _cents(pdf, value_col).tolist()
+        ))
+        return emit(key, rows, st), st, None
 
-    return stream.select(key_col, id_col, ts_col, value_col).groupBy(
-        key_col
-    ).applyInPandasWithState(
-        transition, out_schema, "blob binary", "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_process(
+        stream.select(key_col, id_col, ts_col, value_col), [key_col],
+        out_schema, step, "NoTimeout", init_state,
     )
 
 
@@ -657,60 +675,42 @@ def process_keyed(
     i.e. an event-time idle-gap timer, the session-gap shape of
     ProcessFunction.java:85 onTimer).
 
-    The state dict is pickled into a single binary state column — arbitrary
-    Python state, the ValueState/ListState/MapState union. Keep it compact:
-    it is shipped through the state store every batch.
+    The state dict is the runner's pickled per-key dict (module header:
+    `_keyed_process`) — arbitrary Python state, the
+    ValueState/ListState/MapState union. Keep it compact: it is shipped
+    through the state store every batch. A timed-out key's state is
+    removed after `on_timeout` runs.
     """
-    import pickle
-
-    state_schema = "blob binary"
-    timeout_conf = {
-        "NoTimeout": GroupStateTimeout.NoTimeout,
-        "ProcessingTimeTimeout": GroupStateTimeout.ProcessingTimeTimeout,
-        "EventTimeTimeout": GroupStateTimeout.EventTimeTimeout,
-    }[timeout]
+    if timeout not in ("NoTimeout", "ProcessingTimeTimeout", "EventTimeTimeout"):
+        raise ValueError(f"unknown timeout {timeout!r}")
     if timeout == "EventTimeTimeout" and (event_time_col is None or timeout_duration_ms is None):
         raise ValueError(
             "EventTimeTimeout requires event_time_col and timeout_duration_ms "
             "(and a withWatermark() on the input stream)"
         )
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            user_state = pickle.loads(state.get[0]) if state.exists else {}
-            if on_timeout is not None:
-                emitted = on_timeout(key, user_state)
-                if emitted is not None and len(emitted):
-                    yield emitted
-            state.remove()
-            return
-        user_state = pickle.loads(state.get[0]) if state.exists else {}
-        batches = [pdf for pdf in pdfs]
-        batch = pd.concat(batches) if batches else pd.DataFrame()
-        emitted, new_state = func(key, batch, user_state)
-        state.update((pickle.dumps(new_state),))
-        if timeout == "ProcessingTimeTimeout" and timeout_duration_ms is not None:
-            state.setTimeoutDuration(timeout_duration_ms)
-        elif timeout == "EventTimeTimeout" and len(batch):
-            max_ts_ms = int(
-                batch[event_time_col].to_numpy().astype("datetime64[ms]").astype("int64").max()
-            )
-            # Clamp above the CURRENT watermark: Spark admits rows against
-            # the PREVIOUS batch's watermark (one-batch lag, see
-            # _ingest_and_release), so an all-laggard batch can put max_ts + duration at
-            # or below the frontier — setTimeoutTimestamp would then throw
-            # and kill the query. Clamped, the idle timer fires on the next
-            # watermark advance, which is when the key is provably idle.
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ts_ms + timeout_duration_ms, wm + 1))
-        if emitted is not None and len(emitted):
-            yield emitted
+    def step(key, batch, st, _wm, timed_out):
+        if timed_out:
+            return on_timeout(key, st) if on_timeout else None, None, None
+        emitted, new_state = func(
+            key, batch if batch is not None else pd.DataFrame(), st
+        )
+        timer = None
+        if timeout == "ProcessingTimeTimeout":
+            timer = timeout_duration_ms
+        elif timeout == "EventTimeTimeout" and batch is not None:
+            # The runner clamps this above the CURRENT watermark: Spark
+            # admits rows against the PREVIOUS batch's watermark, so an
+            # all-laggard batch can put max_ts + duration at or below it;
+            # clamped, the idle timer fires on the next watermark advance,
+            # which is when the key is provably idle.
+            timer = int(
+                batch[event_time_col].to_numpy().astype("datetime64[ms]")
+                .astype("int64").max()
+            ) + timeout_duration_ms
+        return emitted, new_state, timer
 
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        transition, out_schema, state_schema, "append", timeout_conf
-    )
+    return _keyed_process(stream, key_cols, out_schema, step, timeout, {})
 
 
 def windowed_heavy_hitters(
@@ -746,8 +746,6 @@ def windowed_heavy_hitters(
     final windows inside the watermark tail never close (append
     semantics), matching the batch-oracle cut of every stream_* gate.
     Requires a withWatermark() on `ts_col` upstream."""
-    import pickle
-
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -755,42 +753,31 @@ def windowed_heavy_hitters(
         raise ValueError("k and shards must be >= 1")
     out_schema = "window_id long, item string, est long"
 
-    def transition(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, st, _wm, timed_out):
         w = int(key[0])
-        if state.hasTimedOut:
-            st = pickle.loads(state.get[0]) if state.exists else {"c": {}}
-            state.remove()
-            if st["c"]:
-                yield pd.DataFrame(
-                    {
-                        "window_id": np.full(len(st["c"]), w, dtype="int64"),
-                        "item": list(st["c"].keys()),
-                        "est": np.fromiter(
-                            st["c"].values(), dtype="int64", count=len(st["c"])
-                        ),
-                    }
-                )
-            return
-        st = pickle.loads(state.get[0]) if state.exists else {"c": {}}
         counters = st["c"]
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            counts = pdf["item"].value_counts()
-            for item, c in counts.items():
+        if timed_out:
+            return pd.DataFrame(
+                {
+                    "window_id": np.full(len(counters), w, dtype="int64"),
+                    "item": list(counters.keys()),
+                    "est": np.fromiter(
+                        counters.values(), dtype="int64", count=len(counters)
+                    ),
+                }
+            ), None, None
+        if pdf is not None:
+            # one Misra-Gries decrement per micro-batch: the total
+            # decrement is still spread over > k counters, so the
+            # N_shard/(k+1) undercount bound holds
+            for item, c in pdf["item"].value_counts().items():
                 counters[item] = counters.get(item, 0) + int(c)
             if len(counters) > k:
                 cut = sorted(counters.values(), reverse=True)[k]
-                counters = {i: c - cut for i, c in counters.items() if c - cut > 0}
-        st["c"] = counters
-        state.update((pickle.dumps(st),))
-        # window-end timer, clamped strictly above the current watermark
-        # (Spark rejects a timeout at or below it; data for this window
-        # implies window_end > wm, the clamp covers the ms-floor edge)
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max((w + 1) * window_ms, wm + 1))
+                st["c"] = {i: c - cut for i, c in counters.items() if c - cut > 0}
+        # window-end timer (data for this window implies window_end > wm;
+        # the runner's clamp covers the ms-floor edge)
+        return None, st, (w + 1) * window_ms
 
     keyed = stream.select(
         F.expr(f"unix_millis({ts_col}) div {int(window_ms)}")
@@ -799,7 +786,7 @@ def windowed_heavy_hitters(
         F.col(item_col).cast("string").alias("item"),
         F.col(ts_col),
     )
-    return keyed.groupBy("window_id", "shard").applyInPandasWithState(
-        transition, out_schema, "blob binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return _keyed_process(
+        keyed, ["window_id", "shard"], out_schema, step, "EventTimeTimeout",
+        {"c": {}},
     )

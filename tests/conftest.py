@@ -67,3 +67,15 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql: str, check_schema: boo
 
     assert len(srows) == len(drows), f"row count: spark={len(srows)} duck={len(drows)}"
     assert sorted(srows, key=repr) == sorted(drows, key=repr)
+
+
+def cep_scan(group_pattern, types):
+    """Matches of a compiled group pattern over a typed event sequence:
+    event i has type ``types[i]`` (column ``et``), id ``i`` and event time
+    ``i`` seconds — the shared helper of the CEP property tests."""
+    from proteus_engine_spark.streaming.cep import _scan
+
+    pat, _ = group_pattern.compile()
+    rows = [{"et": t, "id": i} for i, t in enumerate(types)]
+    matches, _, _ = _scan(rows, [i * 1000 for i in range(len(types))], pat, "id")
+    return matches

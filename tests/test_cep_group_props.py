@@ -15,7 +15,9 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from proteus_engine_spark.streaming.cep import GroupPattern, Pattern, _scan
+from proteus_engine_spark.streaming.cep import GroupPattern, Pattern
+
+from tests.conftest import cep_scan
 
 # alphabet: 0 = 'a', 1 = 'b', 2 = noise
 SEQ = st.lists(st.integers(min_value=0, max_value=2), max_size=24)
@@ -25,13 +27,6 @@ def _sub():
     return Pattern.begin("a", lambda r: r["et"] == 0).next(
         "b", lambda r: r["et"] == 1
     )
-
-
-def _run(gp, types):
-    pat, _ = gp.compile()
-    rows = [{"et": t, "id": i} for i, t in enumerate(types)]
-    matches, _, _ = _scan(rows, [i * 1000 for i in range(len(types))], pat, "id")
-    return matches
 
 
 def _chains(types):
@@ -62,7 +57,7 @@ def test_group_times_matches_brute_force(seq, n):
     the n-th repeat's events and count exactly n — never a prefix."""
     got = sorted(
         (m["a"][0], m["b"][0], m["__gcnt__0"])
-        for m in _run(GroupPattern.begin(_sub()).times(n), seq)
+        for m in cep_scan(GroupPattern.begin(_sub()).times(n), seq)
     )
     exp = sorted(
         (chain[n - 1][0], chain[n - 1][1], n)
@@ -79,7 +74,7 @@ def test_group_capped_one_or_more_matches_brute_force(seq, cap):
     1..min(chain, N) for each anchored chain."""
     got = sorted(
         (m["a"][0], m["b"][0], m["__gcnt__0"])
-        for m in _run(GroupPattern.begin(_sub()).one_or_more(max_repeats=cap), seq)
+        for m in cep_scan(GroupPattern.begin(_sub()).one_or_more(max_repeats=cap), seq)
     )
     exp = sorted(
         (chain[d - 1][0], chain[d - 1][1], d)
@@ -94,7 +89,7 @@ def test_group_capped_one_or_more_matches_brute_force(seq, cap):
 def test_group_unbounded_one_or_more_matches_brute_force(seq):
     got = sorted(
         (m["a"][0], m["b"][0], m["__gcnt__0"])
-        for m in _run(GroupPattern.begin(_sub()).one_or_more(), seq)
+        for m in cep_scan(GroupPattern.begin(_sub()).one_or_more(), seq)
     )
     exp = sorted(
         (chain[d - 1][0], chain[d - 1][1], d)
@@ -122,7 +117,7 @@ def test_group_optional_matches_brute_force(seq):
         .next(Pattern.begin("p", lambda r: r["et"] == 3))
     )
     got = sorted(
-        (m["e"][0], m.get("__gcnt__1", 0), m["p"][0]) for m in _run(g, seq)
+        (m["e"][0], m.get("__gcnt__1", 0), m["p"][0]) for m in cep_scan(g, seq)
     )
     exp = []
     for i, t in enumerate(seq):

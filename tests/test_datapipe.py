@@ -178,20 +178,3 @@ def test_ivf_recall_vs_brute_force(spark):
     recall = len(exact_set & approx_set) / len(exact_set)
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
-
-def test_minhash_persist_signatures_identical(spark):
-    """persist_signatures only changes evaluation count, never results."""
-    docs = _docs_with_near_dups(spark)
-    plain = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard_est"], 9))
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
-    )
-    persisted_df = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, persist_signatures=True
-    )
-    persisted = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard_est"], 9))
-        for r in persisted_df.collect()
-    )
-    spark.catalog.clearCache()
-    assert plain == persisted

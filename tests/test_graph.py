@@ -58,6 +58,29 @@ def test_label_propagation_path_adopts_greatest(spark):
     assert got == {1: 3, 2: 3, 3: 3}
 
 
+def test_label_propagation_probe_runs_no_join(spark):
+    """The convergence probe is the `changed` flag gather computes over
+    its own per-vertex window, checked by a filter-isEmpty scan of the
+    superstep's checkpoint. The former prev-vs-cur join probe made a
+    2-superstep run on this graph take 33-35 jobs; the flag takes 27-29."""
+    import warnings
+
+    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4), (7, 8)])
+    sc = spark.sparkContext
+    sc.setJobGroup("label_propagation_probe", "2 supersteps")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # not a fixpoint
+            out = label_propagation(e, iterations=2)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("label_propagation_probe"))
+    got = {r["vertex"]: r["label"] for r in out.collect()}
+    assert got == {1: 3, 2: 3, 3: 3, 4: 6, 5: 6, 6: 6, 7: 7, 8: 8}
+    assert out.columns == ["vertex", "label"]
+    assert jobs <= 31, jobs
+
+
 def test_jaccard_square(spark):
     # 4-cycle: (1,3) and (2,4) each share both neighbors → jaccard 1.0;
     # adjacent pairs share none and are absent.

@@ -16,7 +16,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.test_round9 import _ev_m, _n_batch_stream, _run
+from proteus_engine_spark.streaming.sources import run_to_completion
+
+from tests.test_round9 import _ev_m, _n_batch_stream
 from tests.test_streaming import EV_SCHEMA
 
 
@@ -318,7 +320,7 @@ def test_late_data_split_partitioned_frontiers(spark):
         _n_batch_stream(spark, batches, EV_SCHEMA),
         "ts", delay_ms=0, partition_col="user_id",
     )
-    rows = _run(tagged, "late_split_part_test").collect()
+    rows = run_to_completion(tagged, "late_split_part_test", "append").collect()
     late = {r["event_id"]: r["is_late"] for r in rows}
     assert late == {1: False, 2: False, 3: True, 4: True, 5: False}
 
@@ -780,7 +782,8 @@ def test_allowed_lateness_adds_to_frontier_delay(spark):
         _n_batch_stream(spark, batches, EV_SCHEMA),
         "ts", delay_ms=0, allowed_lateness_ms=10 * 60_000,
     )
-    ids = sorted(r["event_id"] for r in _run(late, "allowed_late_test").collect())
+    collected = run_to_completion(late, "allowed_late_test", "append").collect()
+    ids = sorted(r["event_id"] for r in collected)
     assert ids == [3]
 
 

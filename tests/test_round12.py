@@ -18,14 +18,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from proteus_engine_spark.streaming.sources import run_to_completion
+
 from tests.test_streaming import EV_SCHEMA, _ev, _two_batch_stream
-
-
-def _run(df, name):
-    q = df.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return df.sparkSession.table(name)
 
 
 # ------------------------------------------------------------ DeltaTrigger
@@ -50,7 +45,8 @@ def test_delta_trigger_baseline_walk(spark):
         window_ms=None,
         watermark_delay="1 minute",
     )
-    rows = {r["fire_seq"]: r for r in _run(out, "trig_delta_walk").collect()}
+    collected = run_to_completion(out, "trig_delta_walk", "append").collect()
+    rows = {r["fire_seq"]: r for r in collected}
     # walk: base 10 | 15 (d=5, no) | 25 (d=15, FIRE, base=25)
     #       | 12 (d=13, FIRE, base=12) | 40 (d=28, FIRE, base=40) | 41 (d=1, no)
     assert set(rows) == {1, 2, 3}
@@ -81,7 +77,8 @@ def test_delta_trigger_purging_composition(spark):
         window_ms=None,
         watermark_delay="1 minute",
     )
-    rows = {r["fire_seq"]: r for r in _run(out, "trig_delta_purge").collect()}
+    collected = run_to_completion(out, "trig_delta_purge", "append").collect()
+    rows = {r["fire_seq"]: r for r in collected}
     # fires at 25 (base 10→25: buffer 10,25), at 12 (25→12: buffer 12 only
     # — purged), at 40 (12→40: buffer 13,40)
     assert set(rows) == {1, 2, 3}
@@ -112,7 +109,7 @@ def test_delta_trigger_tumbling_resets_baseline_per_window(spark):
         window_ms=10 * 60_000,
         watermark_delay="1 minute",
     )
-    rows = _run(out, "trig_delta_tumble").collect()
+    rows = run_to_completion(out, "trig_delta_tumble", "append").collect()
     assert len(rows) == 1  # one fire in window 0; window 2 never fires
     assert rows[0]["fire_seq"] == 1 and rows[0]["n"] == 2
     assert rows[0]["total_value"] == pytest.approx(60.0)
@@ -138,7 +135,8 @@ def test_delta_trigger_custom_delta_walk_exact(spark):
         window_ms=None,
         watermark_delay="1 minute",
     )
-    rows = {r["fire_seq"]: r for r in _run(out, "trig_delta_exact").collect()}
+    collected = run_to_completion(out, "trig_delta_exact", "append").collect()
+    rows = {r["fire_seq"]: r for r in collected}
     assert set(rows) == {1, 2}
     assert rows[1]["n"] == 2 and rows[1]["total_value"] == pytest.approx(40.0)
     assert rows[2]["n"] == 5 and rows[2]["total_value"] == pytest.approx(101.0)

@@ -19,12 +19,7 @@ from pyspark.sql import functions as F
 
 from proteus_engine_spark.streaming.cep import GroupPattern, Pattern, _scan
 
-
-def _run(gp, types):
-    pat, _ = gp.compile()
-    rows = [{"et": t, "id": i} for i, t in enumerate(types)]
-    matches, _, _ = _scan(rows, [i * 1000 for i in range(len(types))], pat, "id")
-    return matches
+from tests.conftest import cep_scan
 
 
 def _fba_group(n):
@@ -49,7 +44,7 @@ def test_followed_by_any_times_advice_repro():
     seq = [0, 1, 2, 1, 2, 1, 2]
     got = sorted(
         (m["e"][0], m["x"][0], m["y"][0], m["__gcnt__1"])
-        for m in _run(_fba_group(2), seq)
+        for m in cep_scan(_fba_group(2), seq)
     )
     assert got == [(0, 3, 4, 2), (0, 5, 6, 2)]
 
@@ -93,7 +88,7 @@ def test_followed_by_any_times_matches_brute_force(seq, n):
     repeats themselves chain consume-first."""
     got = sorted(
         (m["e"][0], m["x"][0], m["y"][0], m["__gcnt__1"])
-        for m in _run(_fba_group(n), seq)
+        for m in cep_scan(_fba_group(n), seq)
     )
     exp = sorted(
         (e_idx, chain[n - 1][0], chain[n - 1][1], n)
@@ -229,10 +224,10 @@ def test_group_allow_combinations_times2_brute_force_example():
     where the default skip-till-next chaining yields only 2."""
     seq = [0, 1, 0, 1, 0, 1]
     g = GroupPattern.begin(_sub()).times(2)
-    assert len(_run(g, seq)) == 2
+    assert len(cep_scan(g, seq)) == 2
     gc = GroupPattern.begin(_sub()).times(2).allow_combinations()
     got = sorted(
-        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in _run(gc, seq)
+        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in cep_scan(gc, seq)
     )
     assert got == [(2, 3, 2), (4, 5, 2), (4, 5, 2)]
 
@@ -246,7 +241,7 @@ def test_group_allow_combinations_times2_matches_brute_force(seq):
     multiset is {p2 : for each p1 before it}."""
     gc = GroupPattern.begin(_sub()).times(2).allow_combinations()
     got = sorted(
-        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in _run(gc, seq)
+        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in cep_scan(gc, seq)
     )
     pairs = _pairs(seq)
     exp = sorted(
@@ -335,7 +330,7 @@ def test_group_times_range_matches_brute_force(seq, f, extra):
     t = f + extra
     got = sorted(
         (m["a"][0], m["b"][0], m["__gcnt__0"])
-        for m in _run(GroupPattern.begin(_sub()).times(f, to=t), seq)
+        for m in cep_scan(GroupPattern.begin(_sub()).times(f, to=t), seq)
     )
     exp = sorted(
         (chain[d - 1][0], chain[d - 1][1], d)

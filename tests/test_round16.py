@@ -13,7 +13,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from proteus_engine_spark.streaming.cep import GroupPattern, Pattern, _scan
+from proteus_engine_spark.streaming.cep import GroupPattern, Pattern
+
+from tests.conftest import cep_scan
 
 # alphabet: 0 = 'a', 1 = 'b', 2 = noise
 SEQ = st.lists(st.integers(min_value=0, max_value=2), max_size=18)
@@ -94,13 +96,6 @@ def test_group_consecutive_disables_prefilter():
 # group depth).
 
 
-def _run(gp, types):
-    pat, _ = gp.compile()
-    rows = [{"et": t, "id": i} for i, t in enumerate(types)]
-    matches, _, _ = _scan(rows, [i * 1000 for i in range(len(types))], pat, "id")
-    return matches
-
-
 def _inner_sub(iq):
     p = Pattern.begin("a", lambda r: r["et"] == 0)
     kind = iq[0]
@@ -156,7 +151,7 @@ def _brute(types, iq, floor, cap):
 def _got(gp, types):
     return sorted(
         (m["a"][0], m["a"][2], m["b"][0], m["__gcnt__0"])
-        for m in _run(gp, types)
+        for m in cep_scan(gp, types)
     )
 
 
@@ -429,7 +424,7 @@ def test_inner_optional_group_times(seq, n):
         (
             (m["a"][0], m["o"][0] if m.get("o") else None,
              m["b"][0], m["__gcnt__0"])
-            for m in _run(gp, seq)
+            for m in cep_scan(gp, seq)
         ),
         key=repr,
     )
@@ -487,7 +482,7 @@ def test_inner_optional_stale_entry_cleared():
         .followed_by("b", lambda r: r["et"] == 1)
     )
     gp = GroupPattern.begin(sub).times(2)
-    ms = _run(gp, [0, 2, 1, 0, 1])
+    ms = cep_scan(gp, [0, 2, 1, 0, 1])
     # anchored at a0: repeat1 takes o (a0,o1,b2) or skips (a0,-,b2);
     # both continue (a3,?,b4) with no 'o' left -> o must be absent
     assert len(ms) == 2
@@ -527,7 +522,7 @@ def test_inner_times_consecutive_group_times(seq, k):
             out.append((a2, k, b2, 2))
     got = sorted(
         (m["a"][0], m["a"][2], m["b"][0], m["__gcnt__0"])
-        for m in _run(gp, seq)
+        for m in cep_scan(gp, seq)
     )
     assert got == sorted(out)
 
@@ -583,7 +578,7 @@ def test_inner_not_followed_by_group_times(seq, n):
     )
     gp = GroupPattern.begin(sub).times(n)
     got = sorted(
-        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in _run(gp, seq)
+        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in cep_scan(gp, seq)
     )
 
     def repeat_from(a):
@@ -626,7 +621,7 @@ def test_inner_not_next_group_times(seq):
     )
     gp = GroupPattern.begin(sub).times(2)
     got = sorted(
-        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in _run(gp, seq)
+        (m["a"][0], m["b"][0], m["__gcnt__0"]) for m in cep_scan(gp, seq)
     )
 
     def repeat_from(a):
@@ -687,7 +682,7 @@ def test_inner_until_group_times(seq, n):
     gp = GroupPattern.begin(sub).times(n)
     got = sorted(
         (m["a"][0], m["a"][2], m["b"][0], m["__gcnt__0"])
-        for m in _run(gp, seq)
+        for m in cep_scan(gp, seq)
     )
 
     out = []
@@ -741,9 +736,9 @@ def test_inner_until_loop_zero_matches_dies():
         .followed_by("b", lambda r: r["et"] == 1)
     )
     gp = GroupPattern.begin(sub).times(1)
-    m1 = _run(gp, [2, 0, 1])
+    m1 = cep_scan(gp, [2, 0, 1])
     assert [(m["a"][0], m["b"][0]) for m in m1] == [(1, 2)]
-    m2 = _run(gp, [0, 2, 1])
+    m2 = cep_scan(gp, [0, 2, 1])
     assert [(m["a"][0], m["a"][2], m["b"][0]) for m in m2] == [(0, 1, 2)]
 
 
@@ -765,7 +760,7 @@ def test_inner_greedy_group_times(seq, n):
     gp = GroupPattern.begin(sub).times(n)
     got = sorted(
         (m["a"][0], m["a"][2], m["b"][0], m["__gcnt__0"])
-        for m in _run(gp, seq)
+        for m in cep_scan(gp, seq)
     )
 
     out = []

@@ -14,7 +14,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from proteus_engine_spark.streaming.cep import GroupPattern, Pattern, _scan
+from proteus_engine_spark.streaming.cep import GroupPattern, Pattern
+
+from tests.conftest import cep_scan
 
 # alphabet: 0 = 'a', 1 = 'b', 2 = noise. Combinations tests keep sequences
 # short: branch count is exponential in the number of loop events for BOTH
@@ -22,13 +24,6 @@ from proteus_engine_spark.streaming.cep import GroupPattern, Pattern, _scan
 # carries the same warning).
 SEQ = st.lists(st.integers(min_value=0, max_value=2), max_size=18)
 SEQ_SHORT = st.lists(st.integers(min_value=0, max_value=2), max_size=10)
-
-
-def _run(gp, types):
-    pat, _ = gp.compile()
-    rows = [{"et": t, "id": i} for i, t in enumerate(types)]
-    matches, _, _ = _scan(rows, [i * 1000 for i in range(len(types))], pat, "id")
-    return matches
 
 
 def _a_positions(types, start):
@@ -94,7 +89,7 @@ def _brute_tail(types, iq, floor, cap):
 def _got_tail(gp, types):
     return sorted(
         (m["a"][0], m["b"][0], m["b"][2], m["__gcnt__0"])
-        for m in _run(gp, types)
+        for m in cep_scan(gp, types)
     )
 
 
@@ -177,7 +172,7 @@ def _brute_comb_interior(types, floor, cap):
 def _got_interior(gp, types):
     return sorted(
         (m["a"][0], m["a"][2], m["b"][0], m["__gcnt__0"])
-        for m in _run(gp, types)
+        for m in cep_scan(gp, types)
     )
 
 
@@ -246,7 +241,7 @@ def test_inner_combinations_tail_group_times(seq, n):
     gp = GroupPattern.begin(_comb_tail_sub()).times(n)
     got = sorted(
         (m["a"][0], m["b"][0], m["b"][2], m["__gcnt__0"])
-        for m in _run(gp, types=seq)
+        for m in cep_scan(gp, types=seq)
     )
     assert got == _brute_comb_tail(seq, n, n)
 
@@ -314,7 +309,7 @@ def _brute_opt_tail(types, floor, cap):
 
 def _got_opt_tail(gp, types):
     res = []
-    for m in _run(gp, types):
+    for m in cep_scan(gp, types):
         b = m.get("b")
         res.append((m["a"][0], b[0] if b else None, m["__gcnt__0"]))
     return sorted(res, key=repr)
@@ -364,7 +359,7 @@ def test_tail_optional_after_counting_step():
     gp = GroupPattern.begin(sub).times(2)
     got = sorted(
         (m["a"][0], m["a"][2], (m.get("b") or (None,))[0], m["__gcnt__0"])
-        for m in _run(gp, [0, 0, 1, 0, 0])
+        for m in cep_scan(gp, [0, 0, 1, 0, 0])
     )
     assert got == [(4, 2, None, 2)] * 2
 

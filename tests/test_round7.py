@@ -11,19 +11,9 @@ Reference parity targets:
 
 from __future__ import annotations
 
+from proteus_engine_spark.streaming.sources import run_to_completion
+
 from tests.test_streaming import EV_SCHEMA, _ev, _two_batch_stream
-
-
-def _run(stream_df, name):
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.table(name)
 
 
 def _three_batch_stream(spark, rows_a, rows_b, rows_c, schema):
@@ -58,7 +48,8 @@ def test_bounded_over_rows_out_of_order_across_batches(spark):
         _three_batch_stream(spark, a, b, c, EV_SCHEMA),
         "user_id", "ts", "value", n_rows=2, watermark_delay="5 minutes",
     )
-    rows = sorted(_run(out, "bover_ooo_test").collect(), key=lambda r: r["event_id"])
+    collected = run_to_completion(out, "bover_ooo_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["event_id"])
     assert [r["event_id"] for r in rows] == [1, 2, 3, 4]
     assert [r["w_sum"] for r in rows] == [10.0, 30.0, 50.0, 70.0]
     assert [r["w_cnt"] for r in rows] == [1, 2, 2, 2]
@@ -76,7 +67,8 @@ def test_bounded_range_over_peers_and_eviction(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA),
         "user_id", "ts", "value", range_ms=5 * 60_000, watermark_delay="0 seconds",
     )
-    rows = sorted(_run(out, "brange_test").collect(), key=lambda r: r["event_id"])
+    collected = run_to_completion(out, "brange_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["event_id"])
     # event 9 sits exactly AT the final watermark (delay 0) and stays
     # buffered: release is strictly below the watermark, since Spark can
     # still admit an equal-ts peer afterwards.
@@ -98,7 +90,8 @@ def test_bounded_over_string_key(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA),
         "event_type", "ts", "value", n_rows=2, watermark_delay="0 seconds",
     )
-    rows = sorted(_run(out, "bover_strkey_test").collect(), key=lambda r: r["event_id"])
+    collected = run_to_completion(out, "bover_strkey_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["event_id"])
     assert [r["event_type"] for r in rows] == ["a", "b", "a"]
     assert [r["w_sum"] for r in rows] == [10.0, 20.0, 40.0]
 
@@ -247,7 +240,8 @@ def test_bounded_over_proc_mode_arrival_order(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA),
         "user_id", "ts", "value", n_rows=2, time_mode="proc",
     )
-    rows = sorted(_run(out, "bover_proc_test").collect(), key=lambda r: r["event_id"])
+    collected = run_to_completion(out, "bover_proc_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["event_id"])
     # arrival order: id1 first (w_sum 10), id2 second (window = 10+20)
     assert [(r["event_id"], r["w_sum"], r["w_cnt"]) for r in rows] == [
         (1, 10.0, 1), (2, 30.0, 2),
@@ -267,13 +261,15 @@ def test_running_over_proc_vs_event_mode(spark):
         _three_batch_stream(spark, a, b, c, EV_SCHEMA),
         "user_id", "ts", "value", time_mode="proc",
     )
-    rows = {r["event_id"]: r for r in _run(proc, "rover_proc_test").collect()}
+    collected = run_to_completion(proc, "rover_proc_test", "append").collect()
+    rows = {r["event_id"]: r for r in collected}
     assert rows[3]["running_sum"] == 35.0  # arrived after 10+20
     event = running_over_agg(
         _three_batch_stream(spark, a, b, c, EV_SCHEMA),
         "user_id", "ts", "value", time_mode="event", watermark_delay="7 minutes",
     )
-    erows = {r["event_id"]: r for r in _run(event, "rover_event_test").collect()}
+    collected = run_to_completion(event, "rover_event_test", "append").collect()
+    erows = {r["event_id"]: r for r in collected}
     # event-time order: minute 5 is FIRST (sum 5), then 10 (15), then 11 (35)
     assert erows[3]["running_sum"] == 5.0
     assert erows[1]["running_sum"] == 15.0
@@ -290,7 +286,8 @@ def test_event_time_sort_reorders_across_batches(spark):
         _three_batch_stream(spark, a, b, c, EV_SCHEMA),
         "user_id", "ts", watermark_delay="7 minutes",
     )
-    rows = sorted(_run(out, "ets_ooo_test").collect(), key=lambda r: r["seq"])
+    collected = run_to_completion(out, "ets_ooo_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["seq"])
     assert [(r["event_id"], r["seq"]) for r in rows] == [(1, 1), (4, 2), (5, 3)]
 
 
@@ -555,7 +552,8 @@ def test_stream_over_sql_parses_all_shapes(spark):
             watermark_delay="0 seconds", alias="x",
         )
         rows = sorted(
-            _run(out, f"sql_over_{name}").collect(), key=lambda r: r["event_id"]
+            run_to_completion(out, f"sql_over_{name}", "append").collect(),
+            key=lambda r: r["event_id"],
         )
         assert [r["x"] for r in rows[:2]] == want[name], name
     # shapes the reference rejects are rejected, not silently mis-planned
@@ -657,7 +655,7 @@ def test_bounded_over_randomized_vs_batch_window(spark):
     got = bounded_over_agg(
         stream(), "user_id", "ts", "value", n_rows=3, watermark_delay="90 minutes"
     )
-    rows_out = _run(got, "rand_bover").collect()
+    rows_out = run_to_completion(got, "rand_bover", "append").collect()
     assert len(rows_out) > n // 2  # the watermark passed most rows
     for r in rows_out:
         s, c = exp_rows[r["event_id"]]
@@ -681,7 +679,7 @@ def test_bounded_over_randomized_vs_batch_window(spark):
         stream(), "user_id", "ts", "value",
         range_ms=45 * 60_000, watermark_delay="90 minutes",
     )
-    rows_out2 = _run(got2, "rand_brange").collect()
+    rows_out2 = run_to_completion(got2, "rand_brange", "append").collect()
     assert len(rows_out2) > n // 2
     for r in rows_out2:
         s, c = exp_rng[r["event_id"]]
@@ -702,7 +700,8 @@ def test_running_over_range_frame_peer_groups(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA),
         "user_id", "ts", "value", frame="range", watermark_delay="0 seconds",
     )
-    rows = {r["event_id"]: r for r in _run(rng, "rrange_test").collect()}
+    collected = run_to_completion(rng, "rrange_test", "append").collect()
+    rows = {r["event_id"]: r for r in collected}
     assert rows[1]["running_sum"] == 30.0 and rows[2]["running_sum"] == 30.0
     assert rows[1]["running_cnt"] == 2 and rows[2]["running_cnt"] == 2
     assert rows[3]["running_sum"] == 35.0 and rows[3]["running_cnt"] == 3
@@ -711,7 +710,8 @@ def test_running_over_range_frame_peer_groups(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA),
         "user_id", "ts", "value", frame="rows", watermark_delay="0 seconds",
     )
-    rows = {r["event_id"]: r for r in _run(rws, "rrows_test").collect()}
+    collected = run_to_completion(rws, "rrows_test", "append").collect()
+    rows = {r["event_id"]: r for r in collected}
     assert rows[1]["running_cnt"] == 1 and rows[2]["running_cnt"] == 2
 
     with pytest.raises(ValueError):
@@ -850,7 +850,7 @@ def test_skip_strategy_spans_micro_batches(spark):
     )
     got = sorted(
         (r["a_id"], r["a_cnt"], r["b_id"])
-        for r in _run(stream_out, "skip_stream_test").collect()
+        for r in run_to_completion(stream_out, "skip_stream_test", "append").collect()
     )
     batch = spark.createDataFrame(a + b, EV_SCHEMA)
     want = sorted(

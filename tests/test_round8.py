@@ -8,16 +8,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from proteus_engine_spark.streaming.sources import run_to_completion
+
 from tests.conftest import SF_DIR
 from tests.test_streaming import EV_SCHEMA, _ev, _two_batch_stream
-
-
-def _run(out, name):
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    return out.sparkSession.table(name)
 
 
 # ---------------- ingest-time frontier guard ----------------
@@ -43,7 +37,8 @@ def test_row_admitted_below_eviction_wm_sequences_correctly(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA), "user_id", "ts",
         watermark_delay="0 seconds",
     )
-    rows = sorted(_run(out, "frontier_test").collect(), key=lambda r: r["seq"])
+    collected = run_to_completion(out, "frontier_test", "append").collect()
+    rows = sorted(collected, key=lambda r: r["seq"])
     # event 3 (00:01) was admitted in batch 1 BEFORE anything released
     # below it had flushed, so it ranks FIRST — the global event-time
     # order [3 (00:01), 1 (02:00), 2 (02:30)]; event 4 sits at the final
@@ -60,23 +55,12 @@ def test_ingest_frontier_guard_drops_below_frontier_rows():
 
     from proteus_engine_spark.streaming.stateful import _ingest_and_release
 
-    class _FakeState:
-        hasTimedOut = False
-
-        def __init__(self, wm):
-            self._wm = wm
-
-        def getCurrentWatermarkMs(self):
-            return self._wm
-
     st = {"buf": [], "seq": 0, "frontier": 120_000}  # last flush at 2 min
     pdf = pd.DataFrame({
         "ts": pd.to_datetime([60_000, 120_000, 180_000], unit="ms"),
         "event_id": [1, 2, 3],
     })
-    wm, ready = _ingest_and_release(
-        st, [pdf], _FakeState(200_000), "ts", "event_id", None
-    )
+    ready = _ingest_and_release(st, pdf, 200_000, "ts", "event_id", None)
     # id 1 (1 min < frontier 2 min) dropped; id 2 (== frontier) kept and
     # released (ts < wm); id 3 kept and released
     assert [i for _t, i, _c in ready] == [2, 3]
@@ -141,7 +125,8 @@ def test_equal_ts_row_at_watermark_stays_buffered(spark):
         _two_batch_stream(spark, a, b, EV_SCHEMA), "user_id", "ts",
         watermark_delay="0 seconds",
     )
-    ids = sorted(r["event_id"] for r in _run(out, "strict_rel_test").collect())
+    collected = run_to_completion(out, "strict_rel_test", "append").collect()
+    ids = sorted(r["event_id"] for r in collected)
     assert ids == [1, 2]  # event 3 sits AT the final watermark
 
 
@@ -538,7 +523,7 @@ def test_group_stream_matches_batch(spark):
     )
     got = sorted(
         (r["x_id"], r["y_id"], r["x_cnt"])
-        for r in _run(stream_out, "group_stream_test").collect()
+        for r in run_to_completion(stream_out, "group_stream_test", "append").collect()
     )
     exp = sorted((r["x_id"], r["y_id"], r["x_cnt"]) for r in batch.collect())
     # every batch match completes at a y event strictly below the final

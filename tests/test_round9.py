@@ -11,6 +11,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from proteus_engine_spark.streaming.sources import run_to_completion
+
 from tests.test_streaming import EV_SCHEMA, _ev, _two_batch_stream
 
 
@@ -25,14 +27,6 @@ def _ev_m(i, minute, user, etype, value=1.0):
         etype,
         value,
     )
-
-
-def _run(out, name):
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    return out.sparkSession.table(name)
 
 
 def _n_batch_stream(spark, batches, schema):
@@ -212,7 +206,7 @@ def test_group_stream_times_n_matches_batch(spark):
         _two_batch_stream(spark, rows[:3], rows[3:], EV_SCHEMA), g(), "user_id",
         watermark_delay="0 seconds",
     )
-    got = _run(stream_out, "group_stream_times_test")
+    got = run_to_completion(stream_out, "group_stream_times_test", "append")
     assert sorted(got.columns) == sorted(batch.columns)
     key = lambda r: (r["x_id"], r["y_id"], r["x_cnt"], r["y_cnt"])  # noqa: E731
     assert sorted(map(key, got.collect())) == sorted(map(key, batch.collect())) == [
@@ -255,7 +249,7 @@ def test_group_stream_optional_matches_batch(spark):
         _two_batch_stream(spark, rows[:5], rows[5:], EV_SCHEMA), g(), "user_id",
         watermark_delay="0 seconds",
     )
-    got = _run(stream_out, "group_stream_optional_test")
+    got = run_to_completion(stream_out, "group_stream_optional_test", "append")
     assert sorted(got.columns) == sorted(batch.columns)
     key = lambda r: (r["user_id"], r["a_id"], r["a_cnt"], r["c_id"])  # noqa: E731
     assert sorted(map(key, got.collect()), key=repr) \
@@ -297,7 +291,7 @@ def test_group_stream_times_out_of_order_matches_batch(spark):
         _two_batch_stream(spark, first, second, EV_SCHEMA), g(), "user_id",
         watermark_delay="30 minutes",
     )
-    got = _run(stream_out, "group_stream_times_ooo_test")
+    got = run_to_completion(stream_out, "group_stream_times_ooo_test", "append")
     key = lambda r: (r["x_id"], r["y_id"], r["x_cnt"], r["y_cnt"])  # noqa: E731
     assert sorted(map(key, got.collect())) == sorted(map(key, batch.collect())) == [
         (3, 4, 2, 2)
@@ -338,7 +332,7 @@ def test_group_stream_timeout_side_output_matches_batch(spark):
         _two_batch_stream(spark, rows[:2], rows[2:], EV_SCHEMA), g(), "user_id",
         watermark_delay="0 seconds", output="timeouts",
     )
-    got = _run(stream_out, "group_stream_timeout_test")
+    got = run_to_completion(stream_out, "group_stream_timeout_test", "append")
     assert sorted(got.columns) == sorted(batch.columns)
     key = lambda r: (r["x_id"], r["y_id"], r["x_cnt"], r["timeout_ts"])  # noqa: E731
     b = sorted(map(key, batch.collect()))
@@ -369,16 +363,6 @@ def test_repetition_stats_empty_docs(spark):
 
 
 # ---------------- watermark boundary properties ----------------
-
-
-class _FakeState:
-    hasTimedOut = False
-
-    def __init__(self, wm):
-        self._wm = wm
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
 
 
 _WINDOW_MS = 2000
@@ -438,9 +422,7 @@ def _replay(batches, wms, mode="us"):
                 "value": [i / 100 for _t, i in batch],
             }
         )
-        _wm, ready = _ingest_and_release(
-            st, [pdf], _FakeState(wm), "ts", "event_id", **kwargs
-        )
+        ready = _ingest_and_release(st, pdf, wm, "ts", "event_id", **kwargs)
         flushes.append(ready)
     assert not st["buf"], "final watermark must flush everything buffered"
     return flushes, admitted, below_frontier
@@ -549,7 +531,7 @@ def test_triggered_window_agg_end_to_end_counts(spark):
         window_ms=3_600_000,
         watermark_delay="0 seconds",
     )
-    rows = _run(out, "late_window_test").collect()
+    rows = run_to_completion(out, "late_window_test", "append").collect()
     first = [r for r in rows if r["win_start"].minute == 0 and r["win_start"].hour == 0]
     assert len(first) == 1
     assert first[0]["n"] == 4 and first[0]["total_value"] == pytest.approx(4.0)

@@ -473,3 +473,30 @@ def test_stateful_restart_matches_uninterrupted_run(spark, tmp_path):
     stage(src, [1, 2])
     drain(start(src, out, ckpt))
     assert rows(out) == expected
+
+
+def test_scratch_sweep_removes_stale_tmp_keeps_staged_replays(tmp_path, monkeypatch):
+    """Per-invocation and staging temp dirs all live under `.scratch/tmp/`,
+    swept by age on the next `_scratch` call; staged replays sit directly
+    under `.scratch/` and are never collected, however old."""
+    import os
+    import time
+
+    from proteus_engine_spark.queries.surface_q import _scratch
+    from proteus_engine_spark.streaming import sources
+
+    monkeypatch.setattr(sources, "SCRATCH", str(tmp_path))
+    old = time.time() - 3600
+    stale = tmp_path / "tmp" / "stage_crashed"
+    fresh = tmp_path / "tmp" / "csv_supplier_sf0_001_live"
+    staged = tmp_path / "ooo_events_sf0_001_7200000_6"
+    for d in (stale, fresh, staged):
+        d.mkdir(parents=True)
+    os.utime(stale, (old, old))
+    os.utime(staged, (old, old))
+
+    made = _scratch("bucketing_sink", "/data/sf0.001")
+    assert os.path.dirname(made) == str(tmp_path / "tmp")
+    assert os.path.basename(made).startswith("bucketing_sink_sf0_001_")
+    assert not stale.exists()
+    assert fresh.exists() and staged.exists()

@@ -16,14 +16,9 @@ from proteus_engine_spark.streaming.triggers import (
     TimeEvictor,
     triggered_window_agg,
 )
+from proteus_engine_spark.streaming.sources import run_to_completion
+
 from tests.test_streaming import EV_SCHEMA, _ev, _two_batch_stream
-
-
-def _run(df, name):
-    q = df.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return df.sparkSession.table(name)
 
 
 def test_count_trigger_purge_evictor_spans_batches(spark):
@@ -41,7 +36,8 @@ def test_count_trigger_purge_evictor_spans_batches(spark):
         window_ms=None,
         watermark_delay="1 minute",
     )
-    rows = {r["fire_seq"]: r for r in _run(out, "trig_count_purge").collect()}
+    collected = run_to_completion(out, "trig_count_purge", "append").collect()
+    rows = {r["fire_seq"]: r for r in collected}
     assert set(rows) == {1, 2}
     # fire 1: events 0..4, last 3 = 2+3+4; fire 2: events 5..9, last 3 = 7+8+9
     assert rows[1]["n"] == 3 and rows[1]["total_value"] == pytest.approx(9.0)
@@ -59,7 +55,8 @@ def test_count_trigger_keeps_window_without_purge(spark):
         stream, "user_id", "ts", "value",
         trigger=CountTrigger(3), window_ms=None, watermark_delay="1 minute",
     )
-    rows = {r["fire_seq"]: r for r in _run(out, "trig_count_grow").collect()}
+    collected = run_to_completion(out, "trig_count_grow", "append").collect()
+    rows = {r["fire_seq"]: r for r in collected}
     # wm releases ts <= 6 → 7 events → fires at 3 and 6 elements
     assert rows[1]["n"] == 3 and rows[2]["n"] == 6
     assert rows[2]["total_value"] == pytest.approx(6.0)
@@ -78,7 +75,7 @@ def test_event_time_trigger_with_time_evictor(spark):
         window_ms=10 * 60_000,
         watermark_delay="1 minute",
     )
-    rows = _run(out, "trig_time_evict").collect()
+    rows = run_to_completion(out, "trig_time_evict", "append").collect()
     # Only window [0,10) closes (wm = 22 - 1 = 21 >= 10); [20,30) stays open.
     assert len(rows) == 1
     r = rows[0]
@@ -102,13 +99,13 @@ def test_count_window_parity_with_stateful_count_window(spark):
     )
     got = sorted(
         (r["fire_seq"], r["n"], r["total_value"])
-        for r in _run(trig, "trig_parity").collect()
+        for r in run_to_completion(trig, "trig_parity", "append").collect()
     )
     stream2 = _two_batch_stream(spark, a, b, EV_SCHEMA)
     cw = count_window_agg(stream2, "user_id", ["ts", "event_id"], "value", window_size=4)
     ref = sorted(
         (r["win_id"] + 1, r["n"], r["total_value"])
-        for r in _run(cw, "cw_parity").collect()
+        for r in run_to_completion(cw, "cw_parity", "append").collect()
     )
     # count_window_agg has no watermark gating: it emits all 3 complete
     # windows of 4 over 14 events; the triggered path releases ts <= 12
@@ -144,7 +141,7 @@ def test_continuous_event_time_trigger_boundary_fires(spark):
     )
     rows = sorted(
         (r["fire_seq"], r["n"], r["total_value"])
-        for r in _run(out, "trig_cont").collect()
+        for r in run_to_completion(out, "trig_cont", "append").collect()
         if pd.Timestamp(r["win_start"]) == pd.Timestamp("2024-01-01 00:00:00")
     )
     assert rows == [(0, 8, 8.0), (1, 5, 5.0), (2, 8, 8.0)]
@@ -166,7 +163,7 @@ def test_delta_evictor_keeps_near_last(spark):
         window_ms=None,
         watermark_delay="1 minute",
     )
-    rows = _run(out, "trig_delta").collect()
+    rows = run_to_completion(out, "trig_delta", "append").collect()
     assert len(rows) == 1
     assert rows[0]["n"] == 4 and rows[0]["total_value"] == pytest.approx(44.0)
 
@@ -192,7 +189,7 @@ def test_event_time_trigger_matches_native_window_path(spark):
     )
     got = sorted(
         (r["user_id"], pd.Timestamp(r["win_start"]), r["n"], round(r["total_value"], 6))
-        for r in _run(trig, "trig_native_diff").collect()
+        for r in run_to_completion(trig, "trig_native_diff", "append").collect()
     )
     native = windowed_agg(
         events_stream(spark, sf_dir), "ts", "10 minutes", "1 hour", ["user_id"],

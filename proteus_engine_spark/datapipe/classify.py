@@ -131,7 +131,6 @@ def nb_scores(
     class_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The full (id_col, class_col, score_micro long) score frame — one
@@ -146,7 +145,7 @@ def nb_scores(
     avoid a second scan of ``docs`` plus a re-join on id. They ride the
     doc-id frame that anchors the prior crossJoin, so the tokenize path
     is untouched."""
-    lik = F.broadcast(likelihoods) if broadcast_model else likelihoods
+    lik = F.broadcast(likelihoods)
     pri = F.broadcast(priors)
     tf = (
         docs.select(F.col(id_col), F.explode(_tokens(text_col)).alias("term"))
@@ -282,7 +281,6 @@ def nb_classify(
     class_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score documents under a trained NB model and predict the argmax
     class. Out-of-vocabulary tokens are dropped (standard multinomial
@@ -292,16 +290,14 @@ def nb_classify(
 
     Scale shape: one tokenize pass into a (doc, term) count
     [candidate shuffle 1]; the model join is term-keyed against the
-    dense (V × C) likelihood table — broadcast by default (a pruned
-    model is executor-memory-sized; pass broadcast_model=False to let
-    AQE decide for giant vocabularies); the (doc, class) score is one
+    dense (V × C) likelihood table, always broadcast (a pruned model is
+    executor-memory-sized); the (doc, class) score is one
     aggregation [shuffle 2, n_docs × C rows]; the prior add is an
     enum-sized broadcast join and the argmax is a doc-keyed max_by over
     C rows per doc — never a corpus-wide window."""
     full = nb_scores(
         docs, priors, likelihoods,
         class_col=class_col, id_col=id_col, text_col=text_col,
-        broadcast_model=broadcast_model,
     )
     # argmax with class-asc tie-break: max over (score, reversed-class)
     # structs would need string negation — a doc-keyed max_by on the

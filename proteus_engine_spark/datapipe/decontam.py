@@ -28,7 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from proteus_engine_spark.datapipe.dedup import shingle_array
+from proteus_engine_spark.datapipe.dedup import _minhash_bands, _set_jaccard, shingle_array
+from proteus_engine_spark.datapipe.textstats import _tokens
+
+
+def _full_grams(col: str, n: int) -> F.Column:
+    """The distinct word n-grams of ``col``; EMPTY for documents shorter
+    than ``n`` tokens (see ngram_overlap_counts for why)."""
+    return F.when(F.size(_tokens(col)) >= n, shingle_array(col, k=n)).otherwise(
+        F.array().cast("array<string>")
+    )
 
 
 def ngram_overlap_counts(
@@ -50,15 +59,8 @@ def ngram_overlap_counts(
     to those 2 tokens (and an empty doc must not match every other
     empty doc on the "" gram)."""
 
-    def _full_grams(col: str) -> F.Column:
-        from proteus_engine_spark.datapipe.textstats import _tokens
-
-        return F.when(
-            F.size(_tokens(col)) >= n, shingle_array(col, k=n)
-        ).otherwise(F.array().cast("array<string>"))
-
     eval_grams = (
-        eval_set.select(F.explode(_full_grams(text_col)).alias("gram"))
+        eval_set.select(F.explode(_full_grams(text_col, n)).alias("gram"))
         .select(F.xxhash64("gram").alias("gh"))
         .distinct()
     )
@@ -74,7 +76,7 @@ def ngram_overlap_counts(
         widen_if_narrow(corpus.select(id_col, text_col), n_parts)
         .select(
             F.col(id_col),
-            F.explode(_full_grams(text_col)).alias("gram"),
+            F.explode(_full_grams(text_col, n)).alias("gram"),
         )
         .select(id_col, F.xxhash64("gram").alias("gh"))
     )
@@ -164,15 +166,8 @@ def ngram_overlap_counts_bloom(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def _full_grams(col: str) -> F.Column:
-        from proteus_engine_spark.datapipe.textstats import _tokens
-
-        return F.when(
-            F.size(_tokens(col)) >= n, shingle_array(col, k=n)
-        ).otherwise(F.array().cast("array<string>"))
-
     eval_grams = (
-        eval_set.select(F.explode(_full_grams(text_col)).alias("gram"))
+        eval_set.select(F.explode(_full_grams(text_col, n)).alias("gram"))
         .select(F.xxhash64("gram").alias("gh"))
         .distinct()
     )
@@ -236,7 +231,7 @@ def ngram_overlap_counts_bloom(
     n_parts = corpus.sparkSession.sparkContext.defaultParallelism
     corpus_grams = (
         widen_if_narrow(corpus.select(id_col, text_col), n_parts)
-        .select(F.col(id_col), F.explode(_full_grams(text_col)).alias("gram"))
+        .select(F.col(id_col), F.explode(_full_grams(text_col, n)).alias("gram"))
         .select(F.col(id_col), F.xxhash64("gram").alias("gh"))
         .select(id_col, "gh", *_gram_positions(F.col("gh"), m_bits, k_hashes))
     )
@@ -271,34 +266,21 @@ def fuzzy_overlap_pairs(
     id space; remap the eval side otherwise).
 
     Spark shape — bipartite, never a self-join: both sides get banded
-    MinHash keys (the same 64-perm/16-band construction as
-    dedup.minhash_lsh_pairs, same hash family, so signatures agree across
-    the two calls); candidates come from an inner join of corpus band
-    keys against EVAL band keys, so corpus-corpus collisions are never
-    generated — the candidate volume is bounded by the benchmark side,
-    which AQE broadcasts at real benchmark sizes. Exact verification
-    re-attaches the shingle arrays of candidate docs only (semi-join
-    pruned on both sides) and computes set Jaccard JVM-side
-    (array_intersect/array_union) — engine-portable values, so an oracle
-    can recompute them with string grams.
+    MinHash keys from dedup._minhash_bands, the band-key builder
+    dedup.minhash_lsh_pairs uses, so keys agree across the two calls;
+    candidates come from an inner join of corpus band keys against EVAL
+    band keys, so corpus-corpus collisions are never generated — the
+    candidate volume is bounded by the benchmark side, which AQE
+    broadcasts at real benchmark sizes. Exact verification re-attaches
+    the shingle arrays of candidate docs only (semi-join pruned on both
+    sides) and computes set Jaccard JVM-side (dedup._set_jaccard) —
+    engine-portable values, so an oracle can recompute them with string
+    grams.
     """
-    from proteus_engine_spark.datapipe.dedup import _minhash_columns
-
-    if bands <= 0 or num_perm % bands:
-        raise ValueError(f"bands={bands} must positively divide num_perm={num_perm}")
-    rows_per_band = num_perm // bands
 
     def _banded(docs: DataFrame, out_id: str) -> DataFrame:
-        mh = _minhash_columns(docs, id_col, text_col, num_perm, shingle_k)
-        band_cols = [
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-        return mh.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(F.array(*band_cols)).alias("band_id", "band_sig"),
+        return _minhash_bands(docs, id_col, text_col, num_perm, bands, shingle_k).select(
+            F.col(id_col).alias(out_id), "band_id", "band_sig"
         )
 
     cand = (
@@ -312,7 +294,7 @@ def fuzzy_overlap_pairs(
     # reference re-runs BOTH MinHash passes (measured 185s vs 30s at
     # sf0.1). Candidates are LSH-bounded (benchmark-sized x collision
     # rate), so the eager localCheckpoint is tiny and truncates the
-    # signature lineage exactly like minhash_lsh_pairs' estimate tier.
+    # signature lineage before the three references.
     cand = cand.localCheckpoint(eager=True)
 
     def _payload(docs: DataFrame, key: str) -> DataFrame:
@@ -323,17 +305,13 @@ def fuzzy_overlap_pairs(
             .select(key, shingle_array(text_col, k=shingle_k).alias(f"p{key}"))
         )
 
-    jac = (
-        F.size(F.array_intersect("p__cid__", "p__eid__")).cast("double")
-        / F.size(F.array_union("p__cid__", "p__eid__"))
-    ).alias("jaccard")
     return (
         cand.join(_payload(corpus, "__cid__"), "__cid__")
         .join(_payload(eval_set, "__eid__"), "__eid__")
         .select(
             F.col("__cid__").alias(id_col),
             F.col("__eid__").alias("eval_id"),
-            jac,
+            _set_jaccard("p__cid__", "p__eid__").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
@@ -345,13 +323,11 @@ def fuzzy_decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = 0.5,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Drop every corpus document that is a fuzzy (near-duplicate) match
     of some benchmark document — left-anti join against the flagged side
     of ``fuzzy_overlap_pairs``."""
     flagged = fuzzy_overlap_pairs(
-        corpus, eval_set, id_col, text_col,
-        jaccard_threshold=jaccard_threshold, **lsh_kwargs,
+        corpus, eval_set, id_col, text_col, jaccard_threshold=jaccard_threshold
     ).select(id_col).distinct()
     return corpus.join(flagged, id_col, "left_anti")

@@ -1,18 +1,17 @@
 """Deduplication operators over a documents table.
 
-Four tiers, all shuffle-architected for 100 TB corpora:
+Seven operators, all shuffle-architected for 100 TB corpora:
 
 - exact_dedup        — hash-groupBy on a content digest. One shuffle on the
                        digest; at 100 TB the digest (16 bytes) shuffles, not
                        the text.
 - minhash_lsh_pairs  — word-shingle MinHash + banded LSH: candidate pairs
-                       come from equi-joins on (band, band_signature)
-                       buckets, so the cartesian blowup never happens; only
-                       bucket-mates are compared exactly.
+                       come from (band, band_signature) buckets, so the
+                       cartesian blowup never happens; only bucket-mates
+                       are compared, by exact shingle-set Jaccard.
 - simhash_buckets    — 64-bit SimHash grouped by hamming-ball prefix bands.
 - ngram_jaccard_pairs — exact token-set Jaccard within cheap blocking keys
-                       (the verification tier for LSH candidates, and an
-                       oracle-checkable operator on its own).
+                       (an oracle-checkable operator on its own).
 - embedding_cosine_pairs — near-dup pairs by embedding cosine, blocked on a
                        cheap key (exact within blocks) or, for unblocked
                        100 TB corpora, on multi-table hyperplane-LSH buckets.
@@ -21,6 +20,10 @@ Four tiers, all shuffle-architected for 100 TB corpora:
                        cross-document duplicated k-token spans.
 - semantic_dedup     — SemDeDup (Abbas et al. 2023): k-means the embedding
                        space, prune cosine near-dups within clusters.
+
+The MinHash band keys (_minhash_bands) and the set-Jaccard expression
+(_set_jaccard) are built here once; decontam.fuzzy_overlap_pairs bands
+and verifies through the same two helpers.
 
 Everything is built-in expressions (xxhash64, explode, groupBy) — no Python
 in the hot path except the blocked BLAS cosine scorer. MinHash permutations
@@ -135,6 +138,49 @@ def minhash_signatures(
     return agg.select(F.col(id_col), sig.alias("sig"))
 
 
+def _minhash_bands(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_perm: int = 64,
+    bands: int = 16,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """Banded MinHash keys, one row per (doc, band): (id_col, band_id,
+    band_sig), band_sig = xxhash64 over the band's ``num_perm // bands``
+    minima. The one band-key builder — self-join dedup and bipartite
+    decontamination both band here, so their keys agree across calls."""
+    if bands <= 0 or num_perm % bands:
+        raise ValueError(
+            f"bands={bands} must positively divide num_perm={num_perm}: "
+            "a remainder silently computes-and-drops permutations (the "
+            "banding would not be the bands x rows construction asked "
+            "for), and bands > num_perm degenerates to empty band keys"
+        )
+    rows_per_band = num_perm // bands
+    mh = _minhash_columns(docs, id_col, text_col, num_perm, shingle_k)
+    # Single-parse band array (identical tree to the element-wise
+    # F.xxhash64(*cols) list — aliases on array elements are dropped by
+    # the array constructor either way): ~110 py4j trips saved per call.
+    # The hashes are computed in the explode's own projection, so no
+    # signature array is ever built on this path.
+    band_arr = F.expr(
+        "array(%s)"
+        % ", ".join(
+            "xxhash64(%s)"
+            % ", ".join(f"mh_{b * rows_per_band + r}" for r in range(rows_per_band))
+            for b in range(bands)
+        )
+    )
+    return mh.select(F.col(id_col), F.posexplode(band_arr).alias("band_id", "band_sig"))
+
+
+def _set_jaccard(a, b) -> "F.Column":
+    """Exact set Jaccard |A∩B| / |A∪B| of two distinct-element array
+    columns, JVM-side — engine-portable values an oracle can recompute."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -143,16 +189,22 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.7,
-    verify: str = "estimate",
     max_bucket_size: int | None = None,
     oversize: str = "split",
 ) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash-LSH.
+    """Near-duplicate pairs via banded MinHash-LSH, exact-Jaccard verified.
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
     bands=16 × rows=4 over 64 perms → catches pairs with J ≳ 0.7. Candidate
-    generation is a self-equi-join on (band_id, band_sig): at 100 TB the
-    join key is 16 bytes and Catalyst plans a plain shuffle-hash join;
-    hot buckets (boilerplate docs) are AQE-skew-split.
+    generation groups docs by (band_id, band_sig): at 100 TB the key is
+    16 bytes and hot buckets (boilerplate docs) are AQE-skew-split.
+    Verification re-attaches the shingle *sets* to the (few) candidate
+    pairs and computes exact Jaccard — the standard two-tier dedup shape:
+    candidates come from 8-byte band keys, the heavy token sets are only
+    shuffled for pairs that already collided, and the exact values are
+    engine-portable (oracle-checkable), unlike the xxhash64 signatures.
+    The plan stays fully lazy and references the signature pass once by
+    construction (the shingle re-attach reads `docs`, not the minima).
 
     ``max_bucket_size`` bounds the O(|bucket|²) candidate-pair explosion
     of pathological band buckets (boilerplate-heavy web corpora put
@@ -185,173 +237,75 @@ def minhash_lsh_pairs(
       the distinct-pair OUTPUT for mega-clusters by up to ×bands, the
       price of the recall. Use when hot buckets hold near-duplicates
       rather than exact boilerplate.
-    - ``"drop"``: oversized buckets are removed whole.
 
-    No silent caps: the plan carries a Spark ``Observation`` over the
-    bucket frame — ``oversized_buckets`` (count of buckets above the cap),
-    ``oversized_bucket_docs`` (their total membership) and
-    ``max_bucket_docs`` — exposed as ``.lsh_bucket_observation`` on the
-    returned DataFrame; ``Observation.get`` yields the metrics after the
-    first action (the estimate tier's internal eager checkpoint already
-    completes them before this function returns). The metrics are
-    collected in-plan by the pass that builds the buckets — no extra job,
-    no extra scan. The reference bounds the same skew with hash-partition
-    spilling (flink-runtime/.../hash/MutableHashTable.java); here the
-    bound must be on pair *generation*, which spilling cannot fix.
-
-    ``verify`` selects the verification tier applied to candidates:
-    - "estimate": signature agreement ratio (≈J, zero extra scans) →
-      output (doc_a, doc_b, jaccard_est).
-    - "exact": re-attach the shingle *sets* to the (few) candidate pairs
-      and compute exact Jaccard → output (doc_a, doc_b, jaccard). This is
-      the standard two-tier dedup shape at 100 TB: candidates come from
-      8-byte band keys, the heavy token sets are only shuffled for pairs
-      that already collided — and the exact values are engine-portable
-      (oracle-checkable), unlike the xxhash64 signatures.
-
-    The estimate tier references the signature subplan twice (candidate
-    generation + signature re-attach), so it persists the narrow
-    (id, mh_*) table — num_perm×8 B/doc, MEMORY_AND_DISK — for the
-    duration of the call, eagerly finalizes the candidate-bounded result
-    (a localCheckpoint of the PAIRS, tiny by LSH construction), and
-    unpersists in a finally: the hash pass runs ONCE and no storage
-    outlives the call. The exact tier stays fully lazy — its plan
-    references the signature pass once by construction (the shingle
-    re-attach reads `docs`, not `mh`).
+    The reference bounds the same skew with hash-partition spilling
+    (flink-runtime/.../hash/MutableHashTable.java); here the bound must
+    be on pair *generation*, which spilling cannot fix.
     """
-    if verify not in ("estimate", "exact"):
-        raise ValueError(f"unknown verify {verify!r}: expected 'estimate' or 'exact'")
-    if oversize not in ("split", "salted_split", "drop"):
-        raise ValueError(
-            f"unknown oversize {oversize!r}: expected 'split', 'salted_split' or 'drop'"
-        )
+    if oversize not in ("split", "salted_split"):
+        raise ValueError(f"unknown oversize {oversize!r}: expected 'split' or 'salted_split'")
     if max_bucket_size is not None and max_bucket_size < 2:
         raise ValueError(
             f"max_bucket_size={max_bucket_size} must be >= 2: a 1-doc chunk "
             "can emit no pair, so every candidate would be silently dropped"
         )
-    if bands <= 0 or num_perm % bands:
-        raise ValueError(
-            f"bands={bands} must positively divide num_perm={num_perm}: "
-            "a remainder silently computes-and-drops permutations (the "
-            "banding would not be the bands x rows construction asked "
-            "for), and bands > num_perm degenerates to empty band keys"
-        )
-    rows_per_band = num_perm // bands
-    # Exact tier: no persist — the signature table stays lazy. The plan
-    # is shaped so the signature pass is referenced ONCE on the candidate
-    # path: bucket GROUPING below, not a self-join (a self-join evaluates
-    # the signature subplan per side — AQE broadcasts one side, so exchange
-    # reuse never kicks in and the whole hash pass runs twice).
-    mh = _minhash_columns(docs, id_col, text_col, num_perm, shingle_k)
-    if verify == "estimate":
-        from pyspark import StorageLevel
-
-        mh = mh.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Single-parse band array (identical tree to the element-wise
-    # F.xxhash64(*cols) list — aliases on array elements are dropped by
-    # the array constructor either way): ~110 py4j trips saved per call.
-    band_arr = F.expr(
-        "array(%s)"
-        % ", ".join(
-            "xxhash64(%s)"
-            % ", ".join(f"mh_{b * rows_per_band + r}" for r in range(rows_per_band))
-            for b in range(bands)
-        )
-    )
     # Candidate generation: one shuffle of (band_id, band_sig, doc_id) —
     # 24 B/row × bands — then per-bucket ordered pairs via a double explode
-    # (rows stream; no per-bucket pair array is materialized). The 512-byte
-    # signatures never ride this shuffle. Hot buckets (boilerplate near-
-    # identical docs) cost O(bucket²) pairs exactly like a bucket self-join
-    # would; ``max_bucket_size`` bounds that explosion (split/drop below).
-    banded = mh.select(
-        F.col(id_col),
-        F.posexplode(band_arr).alias("band_id", "band_sig"),
+    # (rows stream; no per-bucket pair array is materialized). The plan is
+    # shaped so the signature pass is referenced ONCE: bucket GROUPING, not
+    # a self-join (a self-join evaluates the signature subplan per side —
+    # AQE broadcasts one side, so exchange reuse never kicks in and the
+    # whole hash pass runs twice). Hot buckets cost O(bucket²) pairs
+    # exactly like a bucket self-join would; ``max_bucket_size`` bounds
+    # that explosion (split below).
+    banded = _minhash_bands(docs, id_col, text_col, num_perm, bands, shingle_k)
+    buckets = (
+        banded.groupBy("band_id", "band_sig")
+        .agg(F.collect_list(id_col).alias("ids"))
+        .filter(F.size("ids") > 1)
     )
-    all_buckets = banded.groupBy("band_id", "band_sig").agg(
-        F.collect_list(id_col).alias("ids")
-    )
-    obs = None
-    stats_df = None
-    buckets = all_buckets.filter(F.size("ids") > 1)
     if max_bucket_size is not None:
-        from pyspark.sql import Observation
-
         cap = max_bucket_size
-        # Observed on the bucket frame UPSTREAM of the collision filter
-        # (singleton buckets can never exceed a cap >= 2, so the counts are
-        # identical); the metrics ride the pass that builds the buckets —
-        # no extra job on the primary path. When the query's OUTPUT is
-        # empty (no collisions, or the cap dropped every bucket), AQE's
-        # empty-relation propagation eliminates the observed subtree and
-        # the raw Observation.get raises a JVM assertion instead of
-        # answering (live-reproduced) — the returned _BucketCapMetrics
-        # wrapper then falls back to `stats_df`, an explicit aggregation
-        # over the same bucket subplan, so the report is ALWAYS the real
-        # measurement (a drop-everything cap must never read as "cap did
-        # nothing"); that fallback re-runs the signature pass, a cost paid
-        # only when the pair output was empty.
-        m_over = F.sum(F.when(F.size("ids") > cap, 1).otherwise(0)).alias(
-            "oversized_buckets"
-        )
-        m_docs = F.sum(F.when(F.size("ids") > cap, F.size("ids")).otherwise(0)).alias(
-            "oversized_bucket_docs"
-        )
-        m_max = F.max(F.size("ids")).alias("max_bucket_docs")
-        obs = Observation("lsh_bucket_cap")
-        all_buckets = all_buckets.observe(obs, m_over, m_docs, m_max)
-        stats_df = all_buckets.agg(m_over, m_docs, m_max)
-        buckets = all_buckets.filter(F.size("ids") > 1)
-        if oversize == "drop":
-            buckets = buckets.filter(F.size("ids") <= cap)
+        # ONLY oversized buckets pay the sort+chunk expression chain — at
+        # 100 TB the cap must not tax the billions of small buckets it
+        # exists to protect. The sort runs ONCE per oversized bucket in
+        # this pre-projection (higher-order lambdas are interpreted and
+        # lambda-invariant subexpressions are NOT hoisted, so sorting
+        # inside the slice lambda would re-sort the full array once per
+        # chunk); under-cap buckets pass through unsorted as a single
+        # untouched chunk.
+        if oversize == "salted_split":
+            # chunk membership = slices of a PER-BAND order: ids sort by
+            # xxhash64(id, band_id), so a pair split across chunks in one
+            # band lands in the same chunk of another band with
+            # probability ~1/n_chunks per band — across `bands`
+            # independent orders the recall loss of the plain split
+            # mostly recovers (measured numbers in the docstring).
+            # struct(h, id) sort keeps the order total (and thus
+            # deterministic) even under hash collisions.
+            chunk_order = F.expr(
+                "transform(array_sort(transform(ids, x -> "
+                "struct(xxhash64(x, band_id) AS h, x AS id))), s -> s.id)"
+            )
         else:
-            # split / salted_split: ONLY oversized buckets pay the
-            # sort+chunk expression chain — at 100 TB the cap must not tax
-            # the billions of small buckets it exists to protect. The sort
-            # runs ONCE per oversized bucket in this pre-projection
-            # (higher-order lambdas are interpreted and lambda-invariant
-            # subexpressions are NOT hoisted, so sorting inside the slice
-            # lambda would re-sort the full array once per chunk);
-            # under-cap buckets pass through unsorted as a single
-            # untouched chunk.
-            if oversize == "salted_split":
-                # chunk membership = slices of a PER-BAND order: ids sort
-                # by xxhash64(id, band_id), so a pair split across chunks
-                # in one band lands in the same chunk of another band with
-                # probability ~1/n_chunks per band — across `bands`
-                # independent orders the recall loss of the plain split
-                # mostly recovers (measured numbers in the docstring).
-                # struct(h, id) sort keeps the order total (and thus
-                # deterministic) even under hash collisions.
-                chunk_order = F.expr(
-                    "transform(array_sort(transform(ids, x -> "
-                    "struct(xxhash64(x, band_id) AS h, x AS id))), s -> s.id)"
-                )
-            else:
-                chunk_order = F.array_sort("ids")
-            sorted_ids = F.when(F.size("ids") > cap, chunk_order).otherwise(
-                F.col("ids")
+            chunk_order = F.array_sort("ids")
+        sorted_ids = F.when(F.size("ids") > cap, chunk_order).otherwise(F.col("ids"))
+        n_chunks = F.ceil(F.size("ids") / F.lit(cap)).cast("int")
+        chunked = F.transform(
+            F.sequence(F.lit(0), n_chunks - F.lit(1)),
+            lambda i: F.slice(F.col("ids"), i * F.lit(cap) + F.lit(1), F.lit(cap)),
+        )
+        buckets = (
+            buckets.select("band_id", "band_sig", sorted_ids.alias("ids"))
+            .select(
+                "band_id",
+                "band_sig",
+                F.explode(
+                    F.when(F.size("ids") <= cap, F.array(F.col("ids"))).otherwise(chunked)
+                ).alias("ids"),
             )
-            n_chunks = F.ceil(F.size("ids") / F.lit(cap)).cast("int")
-            chunked = F.transform(
-                F.sequence(F.lit(0), n_chunks - F.lit(1)),
-                lambda i: F.slice(F.col("ids"), i * F.lit(cap) + F.lit(1), F.lit(cap)),
-            )
-            buckets = (
-                buckets.select("band_id", "band_sig", sorted_ids.alias("ids"))
-                .select(
-                    "band_id",
-                    "band_sig",
-                    F.explode(
-                        F.when(F.size("ids") <= cap, F.array(F.col("ids"))).otherwise(
-                            chunked
-                        )
-                    ).alias("ids"),
-                )
-                .filter(F.size("ids") > 1)
-            )
+            .filter(F.size("ids") > 1)
+        )
     cand_pairs = (
         buckets.select(F.col("ids"), F.explode("ids").alias("doc_a"))
         .select("doc_a", F.explode("ids").alias("doc_b"))
@@ -364,10 +318,8 @@ def minhash_lsh_pairs(
     # (30-50% of docs) that is a corpus-sized fraction, not a
     # broadcast-sized one — a forced hint would OOM executors at 100 TB.
     # AQE picks a broadcast join at small candidate volumes and a shuffle
-    # join otherwise. The single-signature-pass guarantee does not depend
-    # on the join strategy: the estimate tier persists mh, and the exact
-    # tier re-reads the docs side, so the candidate subplan still runs
-    # once per query either way.
+    # join otherwise; the docs side is re-read, so the candidate subplan
+    # runs once per query either way.
     per_doc = (
         cand_pairs.select(
             F.struct("doc_a", "doc_b").alias("pair"),
@@ -376,25 +328,15 @@ def minhash_lsh_pairs(
         .groupBy("doc")
         .agg(F.collect_set("pair").alias("pairs"))
     )
-    if verify == "exact":
-        # Join on the narrow id FIRST (one row per candidate doc), tokenize
-        # AFTER: shingle_array runs exactly once per surviving doc, then the
-        # pair explode replicates the computed arrays, not the computation
-        # (Catalyst never pushes projections below joins).
-        attached = (
-            docs.select(F.col(id_col).alias("doc"), F.col(text_col))
-            .join(per_doc, "doc")
-            .select("doc", shingle_array(text_col, k=shingle_k).alias("payload"), "pairs")
-        )
-    else:
-        # Signature re-attach references the mh subplan a second time, but
-        # mh is persisted in this tier (see the docstring), so the second
-        # reference reads the cache — the hash pass still runs ONCE.
-        sig = column_array(f"mh_{p}" for p in range(num_perm))
-        attached = (
-            mh.join(per_doc, F.col(id_col) == F.col("doc"))
-            .select("doc", sig.alias("payload"), "pairs")
-        )
+    # Join on the narrow id FIRST (one row per candidate doc), tokenize
+    # AFTER: shingle_array runs exactly once per surviving doc, then the
+    # pair explode replicates the computed arrays, not the computation
+    # (Catalyst never pushes projections below joins).
+    attached = (
+        docs.select(F.col(id_col).alias("doc"), F.col(text_col))
+        .join(per_doc, "doc")
+        .select("doc", shingle_array(text_col, k=shingle_k).alias("payload"), "pairs")
+    )
     # The groupBy shuffles only candidate-pair payloads (candidate-bounded,
     # not corpus-bounded); each pair gets exactly two input rows (side a
     # from doc_a's row, side b from doc_b's row).
@@ -408,129 +350,9 @@ def minhash_lsh_pairs(
         F.max(F.when(F.col("doc") == F.col("doc_a"), F.col("payload"))).alias("p_a"),
         F.max(F.when(F.col("doc") == F.col("doc_b"), F.col("payload"))).alias("p_b"),
     )
-    if verify == "exact":
-        jac = (
-            F.size(F.array_intersect("p_a", "p_b")).cast("double")
-            / F.size(F.array_union("p_a", "p_b"))
-        ).alias("jaccard")
-        out = pair.select("doc_a", "doc_b", jac).filter(F.col("jaccard") >= jaccard_threshold)
-    else:
-        est = (
-            F.size(F.filter(F.zip_with("p_a", "p_b", lambda a, b: a == b), lambda x: x))
-            / F.lit(num_perm)
-        ).alias("jaccard_est")
-        out = pair.select("doc_a", "doc_b", est).filter(F.col("jaccard_est") >= jaccard_threshold)
-        # finalize while the signature persist is alive, then release it:
-        # the result is candidate-bounded (tiny), so the eager checkpoint
-        # costs one pass over pairs, and nothing outlives the call. The
-        # cap metrics are ALSO resolved inside this window — if the pair
-        # output was empty (observed subtree eliminated, see
-        # _BucketCapMetrics), the explicit stats_df fallback reads the
-        # still-persisted mh cache instead of re-running the signature
-        # pass, so the honest re-measurement is near-free.
-        try:
-            out = out.localCheckpoint(eager=True)
-            metrics = (
-                None if obs is None else _BucketCapMetrics(obs, stats_df).get
-            )
-        finally:
-            mh.unpersist()
-        out.lsh_bucket_observation = (
-            None if obs is None else _BucketCapMetrics(obs, stats_df, resolved=metrics)
-        )
-        return out
-    # Exact tier stays fully lazy: the metrics complete with the caller's
-    # first action; .get before that runs the explicit aggregation.
-    out.lsh_bucket_observation = (
-        None if obs is None else _BucketCapMetrics(obs, stats_df)
+    return pair.select("doc_a", "doc_b", _set_jaccard("p_a", "p_b").alias("jaccard")).filter(
+        F.col("jaccard") >= jaccard_threshold
     )
-    return out
-
-
-class _BucketCapMetrics:
-    """Accessor over the cap's Spark ``Observation``. ``.get`` returns the
-    in-plan metrics dict when the observed pass delivered it (the free,
-    primary path). When the query's OUTPUT was empty — no collisions, or
-    the cap dropped every bucket — AQE's empty-relation propagation
-    eliminates the observed subtree and the observation never completes;
-    ``.get`` then runs the retained ``stats_df`` aggregation over the same
-    bucket subplan and returns the REAL measurement (never fabricated
-    zeros — a drop-everything cap must not read as "cap did nothing").
-
-    ``.get`` NEVER BLOCKS: completion is probed via the JVM observation's
-    non-blocking ``getOrEmpty`` (incomplete → empty/NPE, never a wait), so
-    calling ``.get`` before any action on the lazy exact tier runs the
-    explicit aggregation — one real Spark job — instead of parking forever
-    on ``Observation.get``'s internal latch. On the estimate tier the
-    metrics are pre-resolved inside ``minhash_lsh_pairs`` while the
-    signature persist is still alive (empty-output fallback reads the
-    cache, not a fresh signature pass) and ``.get`` just returns them.
-    Only the two KNOWN incomplete-observation signals are swallowed
-    (empty result / the schemaless-row NPE+assertion); any other failure
-    propagates. NULL aggregate values (a truly empty corpus) normalize
-    to 0."""
-
-    _KEYS = ("oversized_buckets", "oversized_bucket_docs", "max_bucket_docs")
-    # The observation's row is schemaless until the observed plan delivers
-    # metrics; both JVM accessors then fail with exactly these markers
-    # (live-reproduced): getOrEmpty → NullPointerException on
-    # Row.schema(), pyspark's get → AssertionError in toPyRow.
-    _INCOMPLETE_MARKERS = ("java.lang.NullPointerException", "java.lang.AssertionError")
-
-    def __init__(self, obs, stats_df, resolved: dict | None = None):
-        self._obs = obs
-        self._stats = stats_df
-        self._resolved = resolved
-
-    def _completed(self) -> bool:
-        """Bounded completion probe (never parks on the latch). Metrics are
-        delivered by Spark's QueryExecutionListener ASYNCHRONOUSLY after the
-        action returns, so a single instant probe right after a successful
-        collect() could race the listener bus and route a free answer to
-        the expensive explicit fallback — retry for up to ~300 ms (far
-        beyond observed bus latency) before concluding the observation
-        will never complete (no action yet, or subtree eliminated)."""
-        import time
-
-        deadline = time.monotonic() + 0.3
-        while True:
-            try:
-                # pyspark-private probe (Observation._jo, pyspark 4.1's
-                # attribute; the markers below are its JVM failure modes,
-                # live-reproduced on 4.1.2). A pyspark upgrade that renames
-                # the attribute must degrade to the explicit stats_df
-                # fallback — a real measurement — never crash the accessor.
-                jo = getattr(self._obs, "_jo", None)
-                if jo is None:
-                    return False
-                if not jo.getOrEmpty().isEmpty():
-                    return True
-            except AttributeError:
-                return False  # probe surface changed → honest explicit path
-            except Exception as e:  # noqa: BLE001 — re-raise unknown failures below
-                if not any(m in str(e) for m in self._INCOMPLETE_MARKERS):
-                    raise
-            if time.monotonic() >= deadline:
-                return False
-            time.sleep(0.02)
-
-    @property
-    def get(self) -> dict:
-        if self._resolved is not None:
-            return self._resolved
-        if self._completed():
-            try:
-                return self._obs.get  # instant: metrics already delivered
-            except Exception as e:  # noqa: BLE001 — re-raise unknown failures below
-                if not any(m in str(e) for m in self._INCOMPLETE_MARKERS):
-                    raise
-        # incomplete (no action yet, or observed subtree eliminated by an
-        # empty output): measure explicitly over the same bucket subplan
-        row = self._stats.collect()[0].asDict()
-        self._resolved = {
-            k: (row.get(k) if row.get(k) is not None else 0) for k in self._KEYS
-        }
-        return self._resolved
 
 
 def embedding_cosine_pairs(
@@ -575,8 +397,7 @@ def embedding_cosine_pairs(
       OWNS the persist lifecycle: the (threshold-bounded, tiny) pair
       result is eagerly localCheckpoint-ed while the persist is alive and
       `base` is unpersisted in a finally — repeated fold calls in a long
-      session accumulate no storage (same discipline as the minhash
-      estimate tier).
+      session accumulate no storage.
     Both round to 1e-6 before the threshold cut; on the driver corpus the
     rounded scores are bit-identical (verified pair-for-pair at sf0.01 and
     sf0.1 — BLAS pairwise summation and the sequential fold agree to
@@ -777,8 +598,7 @@ def ngram_jaccard_pairs(
 
     This is the *verification* tier: at scale you never run it standalone —
     block first (LSH buckets, language, length band) so the self-join is
-    bounded. |A∩B| and |A∪B| come from array_intersect/array_union sizes,
-    all JVM-side.
+    bounded. |A∩B| / |A∪B| is _set_jaccard, all JVM-side.
 
     ``block_cols`` is mandatory: without it the only join condition is
     id<id — an all-pairs cartesian that cannot survive any real corpus.
@@ -798,14 +618,12 @@ def ngram_jaccard_pairs(
     cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
     for b in block_cols or []:
         cond = cond & (F.col(f"l.{b}") == F.col(f"r.{b}"))
-    inter = F.size(F.array_intersect(F.col("l.tok_set"), F.col("r.tok_set")))
-    union = F.size(F.array_union(F.col("l.tok_set"), F.col("r.tok_set")))
     return (
         left.join(right, cond)
         .select(
             F.col(f"l.{id_col}").alias("doc_a"),
             F.col(f"r.{id_col}").alias("doc_b"),
-            (inter.cast("double") / union).alias("jaccard"),
+            _set_jaccard(F.col("l.tok_set"), F.col("r.tok_set")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

@@ -16,7 +16,7 @@ pruning skips the binary column entirely when unreferenced).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -267,6 +267,37 @@ def perceptual_hash(
     )
 
 
+def phash_banding(
+    max_distance: int = 3, bands: int = 4, bits: int = 60
+) -> Callable[..., DataFrame]:
+    """The one pHash banding step. Checks that the banding is exact, then
+    returns ``band(h, hash_col, *cols)``: ``h`` projected to ``cols``
+    plus one row per band, ``b`` (band index) and ``bv`` (the band's
+    ``bits // bands``-bit slice of ``hash_col``, band_struct_array
+    layout). The checks run before any frame is touched.
+
+    The banding is EXACT, not approximate, when max_distance < bands:
+    fewer than `bands` differing bits cannot touch every band
+    (pigeonhole), so every pair within max_distance shares at least one
+    (b, bv) bucket and recall is 1.0 — the property that makes a banded
+    equi-join substitutable for the quadratic all-pairs join at any
+    corpus size."""
+    if max_distance >= bands:
+        raise ValueError(
+            f"banding is only exact for max_distance < bands "
+            f"(got {max_distance} >= {bands})"
+        )
+    if bits % bands:
+        raise ValueError("bits must divide evenly into bands")
+    width = bits // bands
+    mask = (1 << width) - 1
+
+    def band(h: DataFrame, hash_col: str, *cols) -> DataFrame:
+        return h.select(*cols, F.inline(band_struct_array(hash_col, bands, width, mask)))
+
+    return band
+
+
 def phash_near_dup_pairs(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -277,29 +308,16 @@ def phash_near_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs at Hamming distance <= max_distance via BANDED
     bucket joins (the dedup.py MinHash-LSH discipline applied to Hamming
-    space): split the hash into `bands` equal bit-bands; candidates are
-    pairs sharing ANY band value; verify with bit_count(xor) — all
-    JVM-side (shift/mask/xor/bit_count, whole-stage codegen).
-
-    The banding is EXACT, not approximate, when max_distance < bands:
-    fewer than `bands` differing bits cannot touch every band
-    (pigeonhole), so every qualifying pair shares at least one band and
-    recall is 1.0 — the property that makes the banded plan substitutable
-    for the quadratic all-pairs join at any corpus size. Candidate count
-    is bucket-bounded: at 100 TB each band bucket joins within itself
-    only (an equi-join Spark hash-partitions on the (band, value) key),
-    never across the corpus.
+    space): split the hash into `bands` equal bit-bands (phash_banding,
+    pigeonhole-exact for max_distance < bands); candidates are pairs
+    sharing ANY band value; verify with bit_count(xor) — all JVM-side
+    (shift/mask/xor/bit_count, whole-stage codegen). Candidate count is
+    bucket-bounded: at 100 TB each band bucket joins within itself only
+    (an equi-join Spark hash-partitions on the (band, value) key), never
+    across the corpus.
 
     Output: (id_a, id_b, hamming) with id_a < id_b, one row per pair."""
-    if max_distance >= bands:
-        raise ValueError(
-            f"banding is only exact for max_distance < bands "
-            f"(got {max_distance} >= {bands})"
-        )
-    if bits % bands:
-        raise ValueError("bits must divide evenly into bands")
-    width = bits // bands
-    mask = (1 << width) - 1
+    band = phash_banding(max_distance, bands, bits)
     h = hashes.select(F.col(id_col), F.col(hash_col).alias("__ph__"))
     # The banded frame below feeds BOTH sides of the candidate self-join
     # and Spark materializes no common subplans, so without a pin the
@@ -308,11 +326,7 @@ def phash_near_dup_pairs(
     # Pin the (id, hash) projection once — 16 bytes/row, the only thing
     # the join needs — so payloads are read and hashed exactly once.
     h = h.localCheckpoint(eager=True)
-    banded = h.select(
-        id_col,
-        "__ph__",
-        F.explode(band_struct_array("__ph__", bands, width, mask)).alias("band"),
-    ).select(id_col, "__ph__", "band.b", "band.bv")
+    banded = band(h, "__ph__", id_col, "__ph__")
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (
@@ -355,29 +369,19 @@ def phash_cross_dup_ids(
     ingest vs everything already kept). Batch bands join corpus bands
     only, so batch-batch collisions are never generated (the
     decontam.fuzzy_overlap_pairs discipline applied to Hamming space);
-    the same pigeonhole bound makes the banding EXACT for
+    phash_banding's pigeonhole bound makes the banding EXACT for
     max_distance < bands. Returns one row per matched batch id.
 
     Scale shape: both sides reduce to 8-byte fingerprints before the
     join; the corpus side in a continuous-crawl deployment persists as
     its own bucketed-by-(band, value) table so daily batches co-locate
     without reshuffling the corpus."""
-    if max_distance >= bands:
-        raise ValueError(
-            f"banding is only exact for max_distance < bands "
-            f"(got {max_distance} >= {bands})"
-        )
-    if bits % bands:
-        raise ValueError("bits must divide evenly into bands")
-    width = bits // bands
-    mask = (1 << width) - 1
+    band = phash_banding(max_distance, bands, bits)
 
     def banded(h: DataFrame, side: str) -> DataFrame:
-        return h.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col(hash_col).alias(f"{side}_ph"),
-            F.explode(band_struct_array(hash_col, bands, width, mask)).alias("band"),
-        ).select(f"{side}_id", f"{side}_ph", "band.b", "band.bv")
+        return band(
+            h, hash_col, F.col(id_col).alias(f"{side}_id"), F.col(hash_col).alias(f"{side}_ph")
+        )
 
     bb = banded(batch_hashes, "batch")
     cb = banded(corpus_hashes, "corpus")

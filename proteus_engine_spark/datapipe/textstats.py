@@ -360,7 +360,6 @@ def bigram_logprob(
     alpha: float = 0.4,
     min_count: int = 1,
     broadcast_model: bool = False,
-    train_eagerly: bool = True,
 ) -> DataFrame:
     """Per-document corpus-LM quality score: the mean log-probability of
     the document's bigrams under an add-α-smoothed bigram model trained
@@ -389,11 +388,6 @@ def bigram_logprob(
       executor-memory-sized and the doc-bigram frame never shuffles on
       the join keys. Default False: AQE picks the strategy from actual
       sizes.
-    - ``train_eagerly``: opt out of the construction-time checkpoint job
-      when composing into a larger pipeline that will materialize once
-      itself (the single-pass guarantee then becomes the CALLER's
-      responsibility — without any materialization of the pre-agg the
-      corpus scan re-runs per divergent branch, see below).
 
     Scale shape: the tokenize+explode pass runs ONCE, guaranteed
     structurally — it feeds a single (doc, w1, w2)-keyed pre-aggregation
@@ -429,8 +423,7 @@ def bigram_logprob(
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     dbg = big.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("n"))
-    if train_eagerly:
-        dbg = dbg.localCheckpoint(eager=True)  # ONE corpus pass, see docstring
+    dbg = dbg.localCheckpoint(eager=True)  # ONE corpus pass, see docstring
     c12 = dbg.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
     # c1 and V derive from the UNPRUNED bigram counts: the context
     # normalizer and vocabulary must stay exact or every probability in

@@ -37,7 +37,6 @@ from proteus_engine_spark.datapipe.textstats import (
     quality_stats,
     token_count,
 )
-from proteus_engine_spark.functions.fastlit import band_struct_array
 from proteus_engine_spark.queries.registry import register
 from proteus_engine_spark.sources import load_table
 
@@ -123,14 +122,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, and the LSH candidate stage provably (and empirically, at both
     test SFs) misses none of it. The gate runs the PRODUCTION
     configuration: max_bucket_size caps hot-bucket pair explosion (the
-    split plan + in-plan cap Observation are in the executed plan); at
-    the driver SFs no bucket exceeds the cap, so the output stays the
-    full exact pair set and the oracle match also proves the capped
-    plan is a pure pass-through below the cap."""
+    split plan is in the executed plan); at the driver SFs no bucket
+    exceeds the cap, so the output stays the full exact pair set and the
+    oracle match also proves the capped plan is a pure pass-through below
+    the cap."""
     return minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),
         jaccard_threshold=0.5,
-        verify="exact",
         max_bucket_size=10_000,
     )
 
@@ -769,7 +767,7 @@ def dedup_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from proteus_engine_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
+    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     return _cluster(docs, pairs.select("doc_a", "doc_b"))
 
 
@@ -903,13 +901,10 @@ def dedup_lsh_salted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    exact = minhash_lsh_pairs(base, jaccard_threshold=0.5, verify="exact").select(
-        "doc_a", "doc_b"
-    )
+    exact = minhash_lsh_pairs(base, jaccard_threshold=0.5).select("doc_a", "doc_b")
     surv = minhash_lsh_pairs(
         base,
         jaccard_threshold=0.5,
-        verify="exact",
         max_bucket_size=20,
         oversize="salted_split",
     ).select("doc_a", "doc_b")
@@ -3087,7 +3082,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from proteus_engine_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
+    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     return cluster_keep_best(docs, pairs.select("doc_a", "doc_b"), "n_chars")
 
 
@@ -3880,7 +3875,7 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: the stream shuffles 8-byte fingerprints only; the corpus side
     is a fingerprint table that broadcasts (or persists bucketed by
     (band, value) in a continuous-crawl deployment)."""
-    from proteus_engine_spark.datapipe.multimodal import perceptual_hash
+    from proteus_engine_spark.datapipe.multimodal import perceptual_hash, phash_banding
     from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
     ascii_docs = (
@@ -3925,20 +3920,16 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("phash")
     )
 
-    width, mask = 15, (1 << 15) - 1
-    bb = first.select(
-        "phash",
-        F.explode(band_struct_array("phash", 4, width, mask)).alias("band"),
-    ).select("phash", "band.b", "band.bv")
-    cb = corpus_h.select(
-        F.col("media_id").alias("corpus_id"),
-        F.col("phash").alias("corpus_ph"),
-        F.explode(band_struct_array("phash", 4, width, mask)).alias("band"),
-    ).select("corpus_id", "corpus_ph", "band.b", "band.bv")
+    max_distance = 3
+    band = phash_banding(max_distance)
+    bb = band(first, "phash", "phash")
+    cb = band(
+        corpus_h, "phash", F.col("media_id").alias("corpus_id"), F.col("phash").alias("corpus_ph")
+    )
     out = (
         bb.join(cb, ["b", "bv"])
         .filter(
-            F.bit_count(F.col("phash").bitwiseXOR(F.col("corpus_ph"))) <= 3
+            F.bit_count(F.col("phash").bitwiseXOR(F.col("corpus_ph"))) <= max_distance
         )
         .select(
             "phash",

@@ -1412,12 +1412,6 @@ class GroupPattern:
                 )
         return Pattern(steps=steps, within_ms=self.within_ms), eff
 
-    def variants(self) -> list[tuple[Pattern, dict[int, int]]]:
-        """Compatibility alias from the pre-r14 variant-expansion design:
-        every group now compiles to exactly ONE pattern (state-counted
-        quantifiers), so the 'variant set' is always a singleton."""
-        return [self.compile()]
-
 
 def _group_match_columns(
     gpattern: GroupPattern, eff: dict[int, int], key_col: str

@@ -112,7 +112,7 @@ def _stage_engine_pairs(spark, con, sf_dir: str) -> None:
     from proteus_engine_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
+    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     sf_tag = sf_dir.rstrip("/").split("sf")[-1].replace(".", "_")
     path = os.path.join(tempfile.gettempdir(), f"gate_engine_pairs_sf{sf_tag}")
     pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(path)

@@ -94,11 +94,11 @@ def test_group_validation(spark):
     # trailing guard bypasses the loop wiring; the reference likewise
     # rejects a trailing notFollowedBy, NFACompiler.java:128) and greedy
     # on the LAST step (FLINK-8914 requires a following step)
-    GroupPattern.begin(_sub("a", "b").one_or_more()).times(2).variants()
+    GroupPattern.begin(_sub("a", "b").one_or_more()).times(2).compile()
     GroupPattern.begin(
         _sub("a", "b").one_or_more(consecutive=True).greedy()
         .followed_by("c", lambda r: r["event_type"] == "c")
-    ).times(2).variants()  # interior greedy: legal since r16
+    ).times(2).compile()  # interior greedy: legal since r16
     # tail optional: legal since r17 (property-tested against brute-force
     # fork models, tests/test_round17.py)
     pat_opt, eff_opt = GroupPattern.begin(
@@ -116,7 +116,7 @@ def test_group_validation(spark):
     ).times(2).compile()
     assert any(s.combinations for s in pat_comb.steps)
     with pytest.raises(ValueError, match="duplicate step name"):
-        GroupPattern.begin(_sub("a")).followed_by(_sub("a")).variants()
+        GroupPattern.begin(_sub("a")).followed_by(_sub("a")).compile()
     with pytest.raises(ValueError, match="first group cannot be optional"):
         GroupPattern.begin(_sub("a")).optional()
     # r14: quantifiers are state-counted, so a chain that would have
@@ -125,7 +125,7 @@ def test_group_validation(spark):
     g = GroupPattern.begin(_sub("a"))
     for n in "bcdefg":
         g = g.followed_by(_sub(n)).one_or_more(max_repeats=3)
-    assert len(g.variants()) == 1
+    assert isinstance(g.compile()[0], Pattern)
     pat, eff = g.compile()
     assert len(pat.steps) == 7 and eff == {0: 1, **{i: -1 for i in range(1, 7)}}
 

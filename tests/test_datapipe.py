@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from proteus_engine_spark.datapipe.dedup import (
     minhash_lsh_pairs,
+    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_buckets,
 )
@@ -41,9 +42,16 @@ def test_minhash_lsh_finds_injected_near_dups(spark):
 
 
 def test_minhash_agrees_with_exact_jaccard(spark):
-    """MinHash jaccard_est within 0.25 of exact token Jaccard on found pairs."""
+    """MinHash signature agreement (the Jaccard estimate the LSH bands are
+    cut from) within 0.25 of exact token Jaccard on found pairs."""
     docs = _docs_with_near_dups(spark)
-    mh = {(r["doc_a"], r["doc_b"]): r["jaccard_est"] for r in minhash_lsh_pairs(docs, jaccard_threshold=0.3).collect()}
+    sig = {r["doc_id"]: r["sig"] for r in minhash_signatures(docs).collect()}
+    mh = {
+        (r["doc_a"], r["doc_b"]): sum(
+            x == y for x, y in zip(sig[r["doc_a"]], sig[r["doc_b"]])
+        ) / len(sig[r["doc_a"]])
+        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.3).collect()
+    }
     # all-pairs exact Jaccard as the oracle: opt in to the cartesian via an
     # explicit constant block key (fine on this 150-doc fixture; the
     # operator refuses to do it implicitly)

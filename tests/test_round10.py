@@ -646,10 +646,8 @@ def test_minhash_no_forced_candidate_broadcast(spark):
         [(i, f"tok{i} tok{i+1} tok{i+2} common words here") for i in range(30)],
         "doc_id long, text string",
     )
-    for verify in ("exact", "estimate"):
-        out = minhash_lsh_pairs(docs, verify=verify)
-        logical = out._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" not in logical, verify
+    logical = minhash_lsh_pairs(docs)._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" not in logical
 
 
 # ---------------- review fixes ----------------

@@ -24,9 +24,7 @@ def test_lsh_cap_split_bounds_pairs_and_observes(spark):
 
     docs = _boilerplate_docs(spark, n_dup=200)
     cap = 50
-    out = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, verify="estimate", max_bucket_size=cap, oversize="split"
-    )
+    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, max_bucket_size=cap, oversize="split")
     pairs = out.collect()
     # 200 identical docs chunk into 4 sorted chunks of 50 in every band →
     # within-chunk pairs only, deduped across bands: 4 * C(50,2) = 4900,
@@ -36,25 +34,6 @@ def test_lsh_cap_split_bounds_pairs_and_observes(spark):
     # chunks are on sorted ids → every emitted pair sits inside one 50-wide
     # id chunk (deterministic membership)
     assert all(r.doc_a // cap == r.doc_b // cap for r in dup_pairs)
-    # observability: 16 bands × 1 mega-bucket each
-    metrics = out.lsh_bucket_observation.get
-    assert metrics["oversized_buckets"] == 16
-    assert metrics["oversized_bucket_docs"] == 16 * 200
-    assert metrics["max_bucket_docs"] == 200
-
-
-def test_lsh_cap_drop_removes_mega_bucket(spark):
-    from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
-
-    docs = _boilerplate_docs(spark, n_dup=120)
-    out = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, verify="estimate", max_bucket_size=50, oversize="drop"
-    )
-    pairs = out.collect()
-    assert not [r for r in pairs if r.doc_a < 10_000]  # mega-bucket gone whole
-    metrics = out.lsh_bucket_observation.get
-    assert metrics["oversized_buckets"] == 16
-    assert metrics["oversized_bucket_docs"] == 16 * 120
 
 
 def test_lsh_cap_noop_when_no_bucket_oversized(spark):
@@ -63,15 +42,10 @@ def test_lsh_cap_noop_when_no_bucket_oversized(spark):
     from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
 
     docs = _boilerplate_docs(spark, n_dup=30)
-    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
-    capped = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, verify="exact", max_bucket_size=500, oversize="split"
-    )
+    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    capped = minhash_lsh_pairs(docs, jaccard_threshold=0.5, max_bucket_size=500, oversize="split")
     key = lambda r: (r.doc_a, r.doc_b, round(r.jaccard, 9))  # noqa: E731
     assert sorted(map(key, base.collect())) == sorted(map(key, capped.collect()))
-    metrics = capped.lsh_bucket_observation.get
-    assert metrics["oversized_buckets"] == 0
-    assert metrics["oversized_bucket_docs"] == 0
 
 
 def test_lsh_cap_validation(spark):
@@ -294,10 +268,8 @@ def test_lsh_cap_split_adds_no_exchange(spark):
     from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
 
     docs = _boilerplate_docs(spark, n_dup=5)
-    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
-    capped = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, verify="exact", max_bucket_size=100
-    )
+    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    capped = minhash_lsh_pairs(docs, jaccard_threshold=0.5, max_bucket_size=100)
     assert _plan(base).count("Exchange") == _plan(capped).count("Exchange")
 
 
@@ -396,28 +368,22 @@ def test_tfidf_reuses_tf_exchange(spark):
 
 
 def test_lsh_cap_observation_survives_no_collisions(spark):
-    """A clean corpus (no near-dups → zero collision buckets) must still
-    answer the cap metrics with zeros — AQE's empty-relation propagation
-    used to eliminate the metrics node and .get raised a JVM assertion."""
+    """A capped run over a clean corpus (no near-dups → zero collision
+    buckets) and over an empty corpus answers an empty pair set — no
+    crash when AQE's empty-relation propagation prunes the bucket
+    subtree."""
     from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
 
     docs = spark.createDataFrame(
         [(i, f"totally unique document {i} number {i * 31} word {i * 7}") for i in range(12)],
         "doc_id long, text string",
     )
-    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="estimate", max_bucket_size=100)
+    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, max_bucket_size=100)
     assert out.count() == 0
-    m = out.lsh_bucket_observation.get
-    assert m["oversized_buckets"] == 0 and m["oversized_bucket_docs"] == 0
-    # AQE eliminates the observed subtree once the collision filter is
-    # empty; the wrapper's explicit fallback aggregation still reports the
-    # REAL measurement — every (band, sig) bucket here is a singleton
-    assert m["max_bucket_docs"] == 1
 
     empty = spark.createDataFrame([], "doc_id long, text string")
-    out2 = minhash_lsh_pairs(empty, jaccard_threshold=0.5, verify="estimate", max_bucket_size=100)
+    out2 = minhash_lsh_pairs(empty, jaccard_threshold=0.5, max_bucket_size=100)
     assert out2.count() == 0
-    assert out2.lsh_bucket_observation.get["oversized_buckets"] == 0  # zeros, not a crash
 
 
 def test_hash_split_null_key_gets_null_split(spark):
@@ -430,23 +396,3 @@ def test_hash_split_null_key_gets_null_split(spark):
     ).collect()}
     assert rows[None] is None
     assert rows[1] is not None and rows[2] is not None
-
-
-def test_lsh_cap_drop_everything_still_reports(spark):
-    """The worst silent-cap hazard: the cap drops EVERY collision bucket,
-    the pair output is empty, AQE eliminates the in-plan metrics — the
-    report must still say what the cap did, via the explicit fallback."""
-    from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
-
-    docs = spark.createDataFrame(
-        [(i, "the exact same template text everywhere") for i in range(60)],
-        "doc_id long, text string",
-    )
-    out = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, verify="estimate", max_bucket_size=50, oversize="drop"
-    )
-    assert out.count() == 0  # every bucket oversized and dropped
-    m = out.lsh_bucket_observation.get
-    assert m["oversized_buckets"] == 16  # NOT zeros: the real measurement
-    assert m["oversized_bucket_docs"] == 16 * 60
-    assert m["max_bucket_docs"] == 60

@@ -1,8 +1,7 @@
 """Round-12 features: DeltaTrigger (the last buildable trigger), the
 salted-split LSH cap policy with measured cross-band recall, bigram_logprob
-production tiers (min_count pruning / model broadcast / eager-train
-opt-out), the uniform mixture target's nonzero-strata denominator, the
-never-blocking cap-metrics accessor, and the gatecheck oracle_wrap
+production tiers (min_count pruning / model broadcast), the uniform
+mixture target's nonzero-strata denominator, and the gatecheck oracle_wrap
 brace-safety fix.
 
 Reference parity: DeltaTrigger.java:44-89 (flink-streaming-java windowing
@@ -166,14 +165,14 @@ def test_lsh_split_recall_on_near_identical_hot_bucket(spark):
 
     docs = _near_identical_docs(spark)
     p0 = {(r.doc_a, r.doc_b) for r in
-          minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact").collect()}
+          minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()}
     assert len(p0) == 7140  # C(120,2): LSH at J≈0.94 recalls every pair
 
     split = {(r.doc_a, r.doc_b) for r in
-             minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact",
+             minhash_lsh_pairs(docs, jaccard_threshold=0.5,
                                max_bucket_size=20, oversize="split").collect()}
     salted = {(r.doc_a, r.doc_b) for r in
-              minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact",
+              minhash_lsh_pairs(docs, jaccard_threshold=0.5,
                                 max_bucket_size=20, oversize="salted_split").collect()}
     # both caps only ever DROP candidates — never invent pairs
     assert split <= p0 and salted <= p0
@@ -195,12 +194,10 @@ def test_lsh_salted_split_identical_mega_bucket_bounded_and_recovering(spark):
 
     rows = [(i, "the same boilerplate text " * 5) for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact",
+    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5,
                             max_bucket_size=50, oversize="salted_split")
     n = out.count()
     assert n == 19682  # deterministic; 19,900 = C(200,2) all-pairs
-    m = out.lsh_bucket_observation.get
-    assert m["oversized_buckets"] == 16 and m["max_bucket_docs"] == 200
 
 
 def test_lsh_salted_split_noop_when_no_bucket_oversized(spark):
@@ -211,12 +208,11 @@ def test_lsh_salted_split_noop_when_no_bucket_oversized(spark):
     from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
 
     docs = _near_identical_docs(spark, n=30)
-    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact")
-    capped = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact",
+    base = minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    capped = minhash_lsh_pairs(docs, jaccard_threshold=0.5,
                                max_bucket_size=500, oversize="salted_split")
     key = lambda r: (r.doc_a, r.doc_b, round(r.jaccard, 9))  # noqa: E731
     assert sorted(map(key, base.collect())) == sorted(map(key, capped.collect()))
-    assert capped.lsh_bucket_observation.get["oversized_buckets"] == 0
 
 
 def test_lsh_cap_rejects_unknown_policy(spark):
@@ -225,46 +221,6 @@ def test_lsh_cap_rejects_unknown_policy(spark):
     docs = _near_identical_docs(spark, n=4)
     with pytest.raises(ValueError, match="salted_split"):
         minhash_lsh_pairs(docs, max_bucket_size=10, oversize="salt")
-
-
-# ------------------------------------- cap metrics: never block, one probe
-
-
-def test_bucket_cap_metrics_pre_action_get_never_blocks(spark):
-    """ADVICE r11: on the lazy exact tier, .get before ANY action must not
-    park forever on Observation.get's latch — the non-blocking completion
-    probe routes it to the explicit stats aggregation instead."""
-    from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
-
-    docs = _near_identical_docs(spark, n=30)
-    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact",
-                            max_bucket_size=10, oversize="split")
-    # NO action on `out` yet — this returns (running one explicit job)
-    # rather than blocking:
-    m = out.lsh_bucket_observation.get
-    assert m["oversized_buckets"] == 16 and m["max_bucket_docs"] == 30
-    # the result is memoized; a later action doesn't change it
-    assert out.count() > 0
-    assert out.lsh_bucket_observation.get == m
-
-
-def test_bucket_cap_metrics_estimate_tier_preresolved(spark):
-    """The estimate tier resolves metrics inside the call (while the
-    signature persist is alive) — .get is a dict lookup afterwards, even
-    when a drop-everything cap empties the output (the r11 fallback now
-    reads the cache instead of re-running the signature pass)."""
-    from proteus_engine_spark.datapipe.dedup import minhash_lsh_pairs
-
-    rows = [(i, "the same boilerplate text repeated verbatim") for i in range(50)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="estimate",
-                            max_bucket_size=2, oversize="drop")
-    assert out.count() == 0  # the cap dropped every bucket
-    h = out.lsh_bucket_observation
-    assert h._resolved is not None  # resolved inside the call
-    m = h.get
-    assert m["oversized_buckets"] == 16
-    assert m["max_bucket_docs"] == 50  # real measurement, not fabricated zeros
 
 
 # ------------------------------------------- bigram_logprob production tiers
@@ -301,25 +257,7 @@ def test_bigram_broadcast_and_lazy_train_match_default(spark):
     docs = _bigram_corpus(spark)
     base = sorted(map(tuple, bigram_logprob(docs).collect()))
     bcast = sorted(map(tuple, bigram_logprob(docs, broadcast_model=True).collect()))
-    lazy = sorted(map(tuple, bigram_logprob(docs, train_eagerly=False).collect()))
-    both = sorted(map(tuple, bigram_logprob(
-        docs, min_count=1, broadcast_model=True, train_eagerly=False).collect()))
-    assert base == bcast == lazy == both
-
-
-def test_bigram_lazy_train_runs_no_job_at_construction(spark):
-    """train_eagerly=False composes lazily: constructing the frame must
-    not run a Spark job (the eager localCheckpoint is the default's
-    deliberate materialization step)."""
-    from proteus_engine_spark.datapipe.textstats import bigram_logprob
-
-    docs = _bigram_corpus(spark)
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    df = bigram_logprob(docs, train_eagerly=False)
-    after = tracker.getJobIdsForGroup(None)
-    assert before == after
-    assert df.count() == 5  # still correct when finally executed
+    assert base == bcast
 
 
 def test_bigram_min_count_validation(spark):

@@ -204,45 +204,6 @@ def test_semantic_dedup_drop_rule_is_sound(spark):
     assert n_dropped > 0  # the corpus genuinely exercises the prune
 
 
-# --------------------------------------- cap-metrics probe degradation
-
-
-def test_bucket_cap_metrics_degrades_without_private_probe(spark):
-    """_BucketCapMetrics probes completion via pyspark-private
-    Observation._jo; a pyspark upgrade that renames the attribute (or its
-    getOrEmpty method) must degrade to the explicit stats_df fallback — a
-    real measurement — never crash the accessor."""
-    from pyspark.sql import functions as F
-
-    from proteus_engine_spark.datapipe.dedup import _BucketCapMetrics
-
-    stats = spark.range(1).select(
-        F.lit(3).alias("oversized_buckets"),
-        F.lit(42).alias("oversized_bucket_docs"),
-        F.lit(17).alias("max_bucket_docs"),
-    )
-
-    class _NoJo:  # the post-rename shape: no _jo at all
-        pass
-
-    m = _BucketCapMetrics(_NoJo(), stats)
-    assert m.get == {
-        "oversized_buckets": 3,
-        "oversized_bucket_docs": 42,
-        "max_bucket_docs": 17,
-    }
-
-    class _RenamedMethod:  # _jo exists but its accessor surface changed
-        class _J:
-            def __getattr__(self, name):
-                raise AttributeError(name)
-
-        _jo = _J()
-
-    m2 = _BucketCapMetrics(_RenamedMethod(), stats)
-    assert m2.get["oversized_buckets"] == 3
-
-
 # ------------------------------------------- salted-recall gate invariants
 
 
@@ -438,6 +399,9 @@ class TestFuzzyDecontam:
         corpus, ev = self._frames(spark)
         with pytest.raises(ValueError, match="divide"):
             fuzzy_overlap_pairs(corpus, ev, num_perm=64, bands=7)
+        for bands in (12, 128, 0):
+            with pytest.raises(ValueError, match="divide num_perm"):
+                fuzzy_overlap_pairs(corpus, ev, num_perm=64, bands=bands)
 
 
 class TestBloomDecontamEdges:

@@ -254,12 +254,19 @@ def test_phash_banding_exactness(hashes):
 
 
 def test_phash_validation():
-    from proteus_engine_spark.datapipe.multimodal import phash_near_dup_pairs
+    from proteus_engine_spark.datapipe.multimodal import (
+        phash_cross_dup_ids,
+        phash_near_dup_pairs,
+    )
 
     with pytest.raises(ValueError, match="max_distance < bands"):
         phash_near_dup_pairs(None, max_distance=4, bands=4)
     with pytest.raises(ValueError, match="divide evenly"):
         phash_near_dup_pairs(None, max_distance=2, bands=7)
+    with pytest.raises(ValueError, match="max_distance < bands"):
+        phash_cross_dup_ids(None, None, max_distance=4, bands=4)
+    with pytest.raises(ValueError, match="divide evenly"):
+        phash_cross_dup_ids(None, None, max_distance=2, bands=7)
 
 
 def test_phash_near_dup_spark_matches_brute_force(spark):

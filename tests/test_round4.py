@@ -249,9 +249,7 @@ def test_minhash_verify_validation_and_exact_dups(spark):
          (3, "totally different words here now ok")],
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError):
-        minhash_lsh_pairs(docs, verify="Exact")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5, verify="exact").collect()
+    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
 
 

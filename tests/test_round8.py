@@ -252,7 +252,7 @@ def test_group_one_or_more_unbounded_state_counted():
         Pattern.begin("a", lambda r: r["et"] == "a")
         .next("b", lambda r: r["et"] == "b")
     ).one_or_more().consecutive()
-    (pat, choice), = g.variants()
+    pat, choice = g.compile()
     assert choice == {0: -1}
     n = 10  # (a b) x 10 — far beyond any variant cap
     df = pd.DataFrame({
@@ -278,7 +278,7 @@ def test_group_one_or_more_bounded_is_state_counted():
         Pattern.begin("a", lambda r: r["et"] == "a")
         .next("b", lambda r: r["et"] == "b")
     ).one_or_more(max_repeats=3)
-    assert len(g.variants()) == 1
+    assert isinstance(g.compile()[0], Pattern)
     pat, eff = g.compile()
     assert eff == {0: -1}
     assert pat.steps[-1].group_max == 3 and pat.steps[-1].group_times is None
@@ -386,16 +386,16 @@ def test_group_loop_agrees_with_bounded_enumeration():
 
         def all_matches(g):
             out = []
-            for pat, choice in g.variants():
-                ms, _p, _t = _run_nfa(df, pat, "ts", "event_id")
-                for m in ms:
-                    r = choice.get(0)
-                    if r == -1:
-                        cnt = m["__gcnt__0"]
-                        out.append((m["a"][0], m["b"][0], cnt))
-                    else:
-                        last = f"a__g0r{r - 1}", f"b__g0r{r - 1}"
-                        out.append((m[last[0]][0], m[last[1]][0], r))
+            pat, choice = g.compile()
+            ms, _p, _t = _run_nfa(df, pat, "ts", "event_id")
+            for m in ms:
+                r = choice.get(0)
+                if r == -1:
+                    cnt = m["__gcnt__0"]
+                    out.append((m["a"][0], m["b"][0], cnt))
+                else:
+                    last = f"a__g0r{r - 1}", f"b__g0r{r - 1}"
+                    out.append((m[last[0]][0], m[last[1]][0], r))
             return sorted(out)
 
         unb = all_matches(build(None))

@@ -39,34 +39,42 @@ TABLE_NAMES = (
 # optimizer re-checks sizes — these are only the *always safe* set).
 BROADCAST_SAFE = {"region", "nation"}
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 def _path(sf_dir: str, name: str) -> str:
     p = os.path.join(sf_dir, f"{name}.parquet")
     return p
 
 
+def read_parquet_nanos(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet file under the engine's one policy for INT64
+    TIMESTAMP(NANOS) columns, which have no Spark type: they are read as
+    long nanoseconds (``spark.sql.legacy.parquet.nanosAsLong``) and the
+    caller divides them down to microseconds. ``get_session`` sets that
+    conf for every engine session, so there this is a plain read. A
+    session without it (a caller's own) rejects such a footer
+    (PARQUET_TYPE_ILLEGAL); the conf is then set on that session, for
+    every later read too, and the read retried once."""
+    try:
+        return spark.read.parquet(path)
+    except Exception:
+        if spark.conf.get(_NANOS_AS_LONG, "false") == "true":
+            raise
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        return spark.read.parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame (lazy scan; pushdown-capable)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    try:
-        df = spark.read.parquet(_path(sf_dir, name))
-    except Exception:
-        if name != "events":
-            raise
-        # A layout shipping events.ts as INT64 TIMESTAMP(NANOS) makes vanilla
-        # Spark reject the footer (PARQUET_TYPE_ILLEGAL); fall back to the
-        # legacy nanos-as-long read. The conf mutation is scoped to this
-        # failure path — the driver-generated parquet is timestamp[us] and
-        # never takes it.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(_path(sf_dir, name))
+    df = read_parquet_nanos(spark, _path(sf_dir, name))
     if name == "events":
-        # Under the legacy read ts arrives as long nanos; convert to
+        # Under the nanos-as-long read ts arrives as long nanos; convert to
         # microsecond timestamp with integer division — nanos ≈ 1.7e18
         # overflows double's exact integer range, so no float division here.
         # DuckDB truncates nanos→micros the same way.
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         if isinstance(df.schema["ts"].dataType, T.LongType):

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from proteus_engine_spark.sources.tables import read_parquet_nanos
+
 # The repo's scratch root: staged replays live directly under it (read by
 # concurrent queries, never collected); every per-invocation or staging
 # temp dir lives under its `tmp/`, the one directory swept by age.
@@ -61,15 +63,9 @@ def scratch_tmp(prefix: str) -> str:
 
 
 def probe_parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Footer-probe a parquet file's Spark-visible schema. If the file uses
-    INT64 TIMESTAMP(NANOS) (which vanilla Spark rejects), fall back to the
-    nanosAsLong legacy read — the conf mutation is scoped to the failure
-    path, never applied when the data doesn't require it."""
-    try:
-        return spark.read.parquet(path).schema
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path).schema
+    """Footer-probe a parquet file's Spark-visible schema, under the batch
+    source's TIMESTAMP(NANOS) read policy (``read_parquet_nanos``)."""
+    return read_parquet_nanos(spark, path).schema
 
 
 def parquet_stream(

@@ -156,3 +156,36 @@ def test_events_readable_in_vanilla_session(spark):
     # converts long→TimestampType. Both are event-time-capable.
     assert df.schema["ts"].dataType.typeName() in ("timestamp", "timestamp_ntz")
     assert df.count() > 0
+
+
+@pytest.mark.parametrize("engine_session", [True, False], ids=["engine", "vanilla"])
+def test_nanos_timestamps_load_through_batch_and_stream(spark, tmp_path, engine_session):
+    """An events file with INT64 TIMESTAMP(NANOS) ts loads through both the
+    batch source and the parquet stream, nanos truncated to micros, in an
+    engine session and in one without the nanos-as-long conf."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from proteus_engine_spark.sources import load_table
+    from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(nanos, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    expected = [(1, nanos[0] // 1000), (2, nanos[1] // 1000)]
+
+    def rows(df):
+        assert df.schema["ts"].dataType == T.TimestampType()
+        return sorted(tuple(r) for r in df.select("event_id", F.unix_micros("ts")).collect())
+
+    ss = spark if engine_session else spark.newSession()
+    if not engine_session:
+        ss.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert rows(load_table(ss, str(tmp_path), "events")) == expected
+    if not engine_session:
+        ss = spark.newSession()
+        ss.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    streamed = parquet_stream(ss, str(tmp_path), "events.parquet")
+    assert rows(run_to_completion(streamed, f"nanos_stream_{engine_session}", "append")) == expected

@@ -3,24 +3,8 @@ assign each to a fixed-size training sequence — the concat-then-chunk
 packing step of LLM pre-training pipelines (every document gets a global
 start offset; sequence k owns stream positions [k*ctx, (k+1)*ctx)).
 
-The core is a GLOBAL ordered prefix sum, which naively is a single-task
-window (ORDER BY over the whole corpus — the classic 100 TB scale
-killer). Here it is the same two-phase scheme as
-operators.partitioning.zip_with_index (DataSetUtils.java:68 parity, sums
-instead of counts): range-partition by the order key, per-partition token
-totals become cumulative partition offsets (a window over #partitions
-rows — trivial), and each partition computes its local exclusive prefix
-sum in parallel, shifted by its offset. Parallelism equals the partition
-count; the only data movement is the range shuffle.
-
-The range-partitioned frame is materialized once (localCheckpoint): the
-totals pass and the assign pass must see the IDENTICAL partitioning
-(under AQE a recomputed subplan may coalesce differently between
-evaluations — the same requirement zip_with_index documents). COST: the
-checkpoint holds a full copy of the (narrow: id + size) input projection
-in executor storage until the returned frame is garbage-collected — pass
-only the columns you need, and drop the reference when done (the same
-lifetime discipline as zip_with_index's checkpoint).
+The global ordered prefix sum is operators.partitioning.running_sum
+(the two-phase scheme, never a single-task window).
 """
 
 from __future__ import annotations
@@ -47,37 +31,14 @@ def pack_sequences(
     values. ``order_col`` must be a UNIQUE key (doc ids are): with
     duplicate keys the within-key order — and therefore each tied row's
     offset — is not defined, in this engine or any other."""
-    from pyspark.sql.window import Window
+    from proteus_engine_spark.operators.partitioning import running_sum
 
     if ctx_len <= 0:
         raise ValueError(f"ctx_len must be positive, got {ctx_len}")
-    size = (F.col(size_col) if isinstance(size_col, str) else size_col).cast("long")
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    tagged = (
-        df.repartitionByRange(n, F.col(order_col))
-        .withColumn("__sz__", size)
-        .withColumn("__pid__", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    totals = tagged.groupBy("__pid__").agg(F.sum("__sz__").alias("__psum__"))
-    w_off = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid__",
-        F.coalesce(F.sum("__psum__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = (
-        Window.partitionBy("__pid__")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = (
-        F.coalesce(F.sum("__sz__").over(w_local), F.lit(0)) + F.col("__off__")
-    ).cast("long")
-    return (
-        tagged.join(F.broadcast(offsets), "__pid__")
-        .withColumn("start_offset", start)
-        .withColumn("seq_bin", F.expr(f"start_offset DIV {int(ctx_len)}"))
-        .drop("__pid__", "__sz__", "__off__")
+    ordered = df.repartitionByRange(n, F.col(order_col)).sortWithinPartitions(order_col)
+    return running_sum(ordered, value=size_col, out="start_offset").withColumn(
+        "seq_bin", F.expr(f"start_offset DIV {int(ctx_len)}")
     )
 
 

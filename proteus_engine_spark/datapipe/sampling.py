@@ -271,12 +271,8 @@ def shuffle_order(
     above). Ties on the digest (only possible for duplicate keys) break
     by the key itself, so the permutation is total and stable.
 
-    Scale shape: one range-partitioned sort on the 16-byte digest (a
-    PARALLEL global sort — Spark samples range bounds, every partition
-    sorts independently) and the two-phase zip_with_index rank assign
-    (per-partition counts -> broadcast offsets; parallelism equals the
-    partition count). NO single-task row_number window anywhere; the only
-    data movement is the range shuffle of (key, payload)."""
+    Scale shape: one parallel range sort on the 16-byte digest, then the
+    rank is operators.partitioning.running_sum (zip_with_index)."""
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     from proteus_engine_spark.operators.partitioning import zip_with_index
 
@@ -302,12 +298,11 @@ def interleave_by_weight(
 
     Scale shape — two parallel range sorts, ZERO per-group windows (a
     window partitioned by source puts an entire 10 TB source in ONE
-    task): rank-in-group comes from a global sort on (group, digest) +
-    the two-phase zip_with_index rank, minus broadcast per-group offsets
-    (a window over #groups rows — config-bounded); the final position is
-    a second global sort on (virtual_time, group, key) + the same
-    two-phase rank. Virtual-time ties across groups break by (group,
-    key), so the permutation is total and engine-reproducible.
+    task): rank-in-group is operators.partitioning.running_sum over a
+    global sort on (group, digest); the final position is its row-count
+    case over a second sort on (virtual_time, group, key). Virtual-time
+    ties across groups break by (group, key), so the permutation is total
+    and engine-reproducible.
 
     Weight-coverage validation is IN-PLAN (r18, guide §5 — no driver
     work): a group value with no weight hits the pacing expression's
@@ -323,24 +318,17 @@ def interleave_by_weight(
     first offending group rather than the full sorted list."""
     from functools import reduce
 
-    from proteus_engine_spark.operators.partitioning import zip_with_index
+    from proteus_engine_spark.operators.partitioning import running_sum, zip_with_index
 
     for g, w in weights.items():
         if not w > 0:
             raise ValueError(f"weight for group {g!r} must be > 0, got {w}")
 
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
-    ranked = zip_with_index(
+    ranked = running_sum(
         df.withColumn("__h__", h).orderBy(group_col, "__h__", key_col),
+        group=group_col,
         out="__gr__",
-    )
-    counts = ranked.groupBy(group_col).agg(F.count(F.lit(1)).alias("__cnt__"))
-    from pyspark.sql import Window
-
-    w_off = Window.orderBy(group_col).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        group_col,
-        F.coalesce(F.sum("__cnt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
     )
     # in-plan coverage guard: an unweighted (or NULL) group value raises
     # from the executor instead of silently pacing with a NULL weight
@@ -357,13 +345,8 @@ def interleave_by_weight(
             )
         ).cast("double")
     )
-    vt = ((F.col("__gr__") - F.col("__off__") + 1) / weight_expr).alias("__vt__")
-    # null-safe: a NULL group must reach the guard, not vanish in the join
-    null_safe = F.col(group_col).eqNullSafe(F.col("__g__"))
-    paced = (
-        ranked.join(F.broadcast(offsets.withColumnRenamed(group_col, "__g__")), null_safe)
-        .select(*df.columns, "__h__", vt)
-    )
+    vt = ((F.col("__gr__") + 1) / weight_expr).alias("__vt__")
+    paced = ranked.select(*df.columns, "__h__", vt)
     final = zip_with_index(
         paced.orderBy("__vt__", group_col, key_col), out=out
     )
@@ -389,13 +372,9 @@ def sample_to_token_budget(
     actually cut). Adds ``group_cumsum`` (long, inclusive) to the kept
     rows.
 
-    Scale shape — the pack_sequences prefix-sum discipline, never a
-    data-sized window: rows range-partition on (group, digest, key);
-    per-partition totals roll into broadcast partition offsets (window
-    over #partitions rows); each partition computes its local running
-    sum in parallel; the within-GROUP total converts from the global one
-    by subtracting broadcast per-group bases (window over #groups rows).
-    One range shuffle, everything else map-side.
+    Scale shape: one parallel range sort on (group, digest, key), then
+    the within-group sum is operators.partitioning.running_sum — never a
+    data-sized window.
 
     Budget-coverage validation is IN-PLAN (r18, guide §5 — no driver
     work): a group value with no budget hits the budget expression's
@@ -407,7 +386,7 @@ def sample_to_token_budget(
     Spark USER_RAISED_EXCEPTION rather than a call-time driver
     ValueError, and names the first offending group rather than the
     full sorted list."""
-    from pyspark.sql.window import Window
+    from proteus_engine_spark.operators.partitioning import running_sum
 
     for g, b in budgets.items():
         if not b >= 0:
@@ -415,27 +394,12 @@ def sample_to_token_budget(
 
     size = (F.col(size_col) if isinstance(size_col, str) else size_col).cast("long")
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
-    n = df.sparkSession.sparkContext.defaultParallelism
-    tagged = (
-        df.withColumn("__sz__", size)
+    ordered = (
+        df.withColumn("__sz__", F.coalesce(size, F.lit(0)))
         .withColumn("__h__", h)
-        .repartitionByRange(n, F.col(group_col), F.col("__h__"), F.col(key_col))
-        .withColumn("__pid__", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # totals + assign must see ONE layout
+        .orderBy(group_col, "__h__", key_col)
     )
-    totals = tagged.groupBy("__pid__").agg(F.sum("__sz__").alias("__psum__"))
-    w_p = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
-    p_off = totals.select(
-        "__pid__",
-        F.coalesce(F.sum("__psum__").over(w_p), F.lit(0)).cast("long").alias("__poff__"),
-    )
-    g_tot = tagged.groupBy(group_col).agg(F.sum("__sz__").alias("__gsum__"))
-    w_g = Window.orderBy(group_col).rowsBetween(Window.unboundedPreceding, -1)
-    g_base = g_tot.select(
-        group_col,
-        F.coalesce(F.sum("__gsum__").over(w_g), F.lit(0)).cast("long").alias("__gbase__"),
-    )
-    w_local = Window.partitionBy("__pid__").orderBy(group_col, "__h__", key_col)
+    ranked = running_sum(ordered, value="__sz__", group=group_col, out="__before__")
     # in-plan coverage guard: an unbudgeted (or NULL) group value raises
     # from the executor instead of being silently dropped by a NULL cut
     budget_expr = F.raise_error(
@@ -447,18 +411,11 @@ def sample_to_token_budget(
     ).cast("long")
     for g, b in budgets.items():
         budget_expr = F.when(F.col(group_col) == g, F.lit(int(b))).otherwise(budget_expr)
-    # null-safe: a NULL group must reach the guard, not vanish in the join
-    null_safe = F.col(group_col).eqNullSafe(F.col("__g__"))
-    out = (
-        tagged.join(F.broadcast(p_off), "__pid__")
-        .join(F.broadcast(g_base.withColumnRenamed(group_col, "__g__")), null_safe)
-        .withColumn(
-            "group_cumsum",
-            F.sum("__sz__").over(w_local) + F.col("__poff__") - F.col("__gbase__"),
-        )
+    cumsum = (F.col("__before__") + F.col("__sz__")).alias("group_cumsum")
+    return (
+        ranked.select(*df.columns, cumsum)
         .filter(F.col("group_cumsum") <= budget_expr)
     )
-    return out.select(*df.columns, "group_cumsum")
 
 
 def dsir_select(
@@ -576,15 +533,11 @@ def bucketed_batches(
     deterministic assignment (the LAST batch of each bucket may be
     short, exactly like a training dataloader's remainder batch).
 
-    Scale shape: one scan computes lengths and buckets in the
-    projection; ONE range-partitioned global sort on (bucket, id) — a
-    PARALLEL sort, range bounds sampled — feeds the two-phase
-    zip_with_index rank; per-bucket offsets are a bucket-count-sized
-    aggregate BROADCAST back (bucket count = max_len/width, config-
-    bounded in practice — clamp pathological outliers upstream), so
-    rank-in-bucket is a subtraction, never a per-bucket window."""
+    Scale shape: one scan computes lengths and buckets, one parallel
+    range sort on (bucket, id), then rank-in-bucket is
+    operators.partitioning.running_sum — never a per-bucket window."""
     from proteus_engine_spark.datapipe.textstats import token_count
-    from proteus_engine_spark.operators.partitioning import zip_with_index
+    from proteus_engine_spark.operators.partitioning import running_sum
 
     if batch_size < 1 or bucket_width < 1:
         raise ValueError("batch_size and bucket_width must be >= 1")
@@ -592,21 +545,13 @@ def bucketed_batches(
         F.col(id_col),
         token_count(text_col).cast("long").alias("n_tokens"),
     ).withColumn("bucket", F.expr(f"n_tokens div {bucket_width}"))
-    ordered = base.orderBy("bucket", id_col)
-    idx = zip_with_index(ordered, out="__idx__")
-    offs = F.broadcast(
-        idx.groupBy("bucket").agg(F.min("__idx__").alias("__off__"))
-    )
-    return (
-        idx.join(offs, "bucket")
-        .withColumn("__rnk__", F.col("__idx__") - F.col("__off__"))
-        .select(
-            id_col,
-            "n_tokens",
-            "bucket",
-            F.expr(f"__rnk__ div {batch_size}").alias("batch_id"),
-            (F.col("__rnk__") % batch_size).alias("pos_in_batch"),
-        )
+    ranked = running_sum(base.orderBy("bucket", id_col), group="bucket", out="__rnk__")
+    return ranked.select(
+        id_col,
+        "n_tokens",
+        "bucket",
+        F.expr(f"__rnk__ div {batch_size}").alias("batch_id"),
+        (F.col("__rnk__") % batch_size).alias("pos_in_batch"),
     )
 
 
@@ -628,25 +573,21 @@ def fixed_n_sample(
     smaller than N keep everything. Returns the sampled rows as
     (group_col, key_col, rank_in_group long).
 
-    Scale shape: ONE parallel range sort on (group, digest, key) feeds
-    the two-phase zip_with_index rank; per-group offsets are a
-    group-enum-sized aggregate BROADCAST back, so rank-in-group is a
-    subtraction — never a per-group window (the bucketed_batches
-    discipline). The filter rank < N then cuts at scan rate."""
-    from proteus_engine_spark.operators.partitioning import zip_with_index
+    A NULL group is one group, as in ``row_number() OVER (PARTITION BY
+    group ...)``.
+
+    Scale shape: one parallel range sort on (group, digest, key), then
+    rank-in-group is operators.partitioning.running_sum — never a
+    per-group window. The filter rank < N then cuts at scan rate."""
+    from proteus_engine_spark.operators.partitioning import running_sum
 
     if n_per_group < 1:
         raise ValueError("n_per_group must be >= 1")
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     base = docs.select(F.col(group_col), F.col(key_col)).withColumn("__h__", h)
     ordered = base.orderBy(group_col, "__h__", key_col)
-    idx = zip_with_index(ordered, out="__idx__")
-    offs = F.broadcast(
-        idx.groupBy(group_col).agg(F.min("__idx__").alias("__off__"))
-    )
     return (
-        idx.join(offs, group_col)
-        .withColumn("rank_in_group", F.col("__idx__") - F.col("__off__"))
+        running_sum(ordered, group=group_col, out="rank_in_group")
         .filter(F.col("rank_in_group") < n_per_group)
         .select(group_col, key_col, "rank_in_group")
     )

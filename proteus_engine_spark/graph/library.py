@@ -37,6 +37,25 @@ def _vertices(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The canonical undirected edge set (a, b), a < b: self-loops
+    dropped, each edge once whatever its direction or multiplicity."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.filter(a != b)
+        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .distinct()
+    )
+
+
+def _adjacency(sym: DataFrame) -> DataFrame:
+    """Both directions (v, w) of an undirected edge set: "v has neighbor
+    w"."""
+    return sym.select(F.col("a").alias("v"), F.col("b").alias("w")).union(
+        sym.select(F.col("b").alias("v"), F.col("a").alias("w"))
+    )
+
+
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Vertex degrees on a directed edge list — Graph.java
     outDegrees():736 / inDegrees():768 / getDegrees():789 (out + in, the
@@ -78,13 +97,7 @@ def triangle_list(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataF
     # the degree agg AND the orientation join, and without truncation the
     # caller's edge-construction subplan (often a self-join) re-executes
     # per branch — the triangle plan referenced the raw scan 60× before.
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         sym.select(F.col("a").alias("vertex"))
         .union(sym.select(F.col("b").alias("vertex")))
@@ -338,18 +351,8 @@ def jaccard_index(
     Scale: pair generation is span-batched (JaccardIndex.java:187-202) —
     per-task fan-out bounded by group_size² even at million-degree hubs;
     see _shared_neighbor_pairs."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-    )
     # referenced three times (degree + both pair sides) — materialize
-    adj = (
-        sym.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .union(sym.select(F.col("b").alias("v"), F.col("a").alias("w")))
-        .localCheckpoint(eager=True)
-    )
+    adj = _adjacency(_undirected(edges, src, dst)).localCheckpoint(eager=True)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     shared = (
         _shared_neighbor_pairs(adj, group_size)
@@ -386,17 +389,7 @@ def adamic_adar(
     the group-span functions, AdamicAdar.java:171-188); the only addition
     is attaching 1/ln(d(shared)) to each generated pair before summing —
     a join against the degree frame on the shared-neighbor key."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-    )
-    adj = (
-        sym.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .union(sym.select(F.col("b").alias("v"), F.col("a").alias("w")))
-        .localCheckpoint(eager=True)
-    )
+    adj = _adjacency(_undirected(edges, src, dst)).localCheckpoint(eager=True)
     # degree-1 neighbors can't connect a pair, and ln(1) = 0 would trip
     # ANSI division — prune them before the weight join
     inv_log = (
@@ -494,13 +487,7 @@ def local_clustering_coefficient(
     count; score = triangles / C(degree, 2)). Triangles come from the
     degree-ordered enumerator; degree-< 2 vertices score 0. Returns
     (vertex, degree, triangle_count, lcc)."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         sym.select(F.col("a").alias("vertex"))
         .union(sym.select(F.col("b").alias("vertex")))
@@ -576,12 +563,7 @@ def vertex_metrics(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     bounds via sum of degrees, maximum degree, and triplet count
     (Σ C(d, 2) — the denominator pool for clustering coefficients). One
     row. Pure aggregation: one shuffle for degrees, one global fold."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-    )
+    sym = _undirected(edges, src, dst)
     deg = (
         sym.select(F.col("a").alias("vertex"))
         .union(sym.select(F.col("b").alias("vertex")))
@@ -694,13 +676,7 @@ def triadic_census(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
 
     Scale: the only superlinear work is the triangle count (degree-ordered
     enumeration); everything else is two scans worth of aggregation."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     metrics = vertex_metrics(sym, src="a", dst="b")
     tri = triangle_list(sym, src="a", dst="b").agg(
         F.count(F.lit(1)).alias("n_tri")
@@ -740,13 +716,7 @@ def global_clustering_coefficient(
     triangle count ×3 (each triangle closes three triplets), score =
     3·triangles / triplets (NaN on a triplet-free graph, :135). One row
     (n_triplets, n_closed_triplets, gcc)."""
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     triplets = vertex_metrics(sym, src="a", dst="b").select("n_triplets")
     tri = triangle_list(sym, src="a", dst="b").agg(F.count(F.lit(1)).alias("n_tri"))
     return triplets.crossJoin(tri).select(

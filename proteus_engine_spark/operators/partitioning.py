@@ -14,8 +14,9 @@ is only for (a) co-locating a join/agg ahead of several reuses, (b) width
 control for CPU-bound stages AQE would coalesce, (c) output file layout.
 zipWithUniqueId is exactly monotonically_increasing_id (unique, sparse,
 partition-prefixed — both schemes shift a partition id into high bits);
-zipWithIndex needs the same two-phase per-partition count scheme the
-reference uses, which is what RDD.zipWithIndex implements.
+zipWithIndex needs the reference's two-phase per-partition count scheme,
+which ``running_sum`` implements once for every rank and prefix sum in
+the package (counts or sums, global or restarting per group).
 """
 
 from __future__ import annotations
@@ -90,19 +91,35 @@ def zip_with_unique_id(df: DataFrame, out: str = "unique_id") -> DataFrame:
 
 def zip_with_index(df: DataFrame, out: str = "idx") -> DataFrame:
     """DataSetUtils.zipWithIndex: CONTIGUOUS 0-based ids in partition
-    order, via the same two-phase scheme as the reference (count per
-    partition, then cumulative offset — DataSetUtils.java:68). After an
-    orderBy, partition order is the sort order, so the index is the global
-    rank.
+    order — ``running_sum``'s row-count case. After an orderBy, partition
+    order is the sort order, so the index is the global rank."""
+    return running_sum(df, out=out)
 
-    Entirely JVM-side Catalyst — no RDD round-trip, no Python
-    serialization pass: rows are tagged with (spark_partition_id,
-    monotonically_increasing_id) in one projection, per-partition counts
-    become cumulative offsets (a window over #partitions rows, trivial),
-    and the offsets broadcast-join back onto the tag. The final
-    row_number window partitions by the ORIGINAL partition id, so
-    parallelism equals the input partition count — no single-task global
-    window.
+
+def running_sum(
+    df: DataFrame,
+    value: "str | Column | None" = None,
+    group: str | None = None,
+    out: str = "idx",
+) -> DataFrame:
+    """Exclusive running sum of ``value`` (cast to long, NULL as 0) in
+    partition order — the order after an orderBy — added as long column
+    ``out``. With ``value=None`` it counts rows (zip_with_index). With
+    ``group`` the sum restarts at each contiguous run of equal group
+    values; a group's base is the running sum at its first row, so any
+    sort direction on the group key works, and NULL is one group (joined
+    null-safe). Groups must be contiguous: sort by the group key first.
+
+    The reference's two-phase scheme (DataSetUtils.java:68), the package's
+    one copy of it, entirely JVM-side Catalyst — no RDD round-trip, no
+    Python pass and no single-task global window: rows are tagged with
+    (spark_partition_id, monotonically_increasing_id) in one projection;
+    each (partition, group) run's total and first tag fold into one
+    offset per run (a window over #partitions + #groups rows, trivial)
+    minus its group's base; the offsets broadcast-join back onto the tag;
+    and the local running sum is a window partitioned by the ORIGINAL
+    partition id (and the group), so parallelism is at least the input
+    partition count.
 
     The tagged frame is materialized ONCE (localCheckpoint): the count
     pass and the assign pass must see the IDENTICAL partitioning, and
@@ -111,26 +128,42 @@ def zip_with_index(df: DataFrame, out: str = "idx") -> DataFrame:
     inner join that silently dropped whole partitions. RDD.zipWithIndex
     carries the same requirement (its two passes run on one materialized
     RDD); the checkpoint is that materialization, and it also removes
-    the double computation of the input."""
+    the double computation of the input. COST: the checkpoint holds the
+    whole input in executor storage until the returned frame is
+    garbage-collected — pass only the columns you need."""
     from pyspark.sql.window import Window
 
-    tagged = (
-        df.withColumn("__mid__", F.monotonically_increasing_id())
-        .withColumn("__pid__", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    keys = ["__pid__"] + ([group] if group else [])
+    tagged = df.withColumn("__mid__", F.monotonically_increasing_id())
+    if value is not None:
+        v = F.col(value) if isinstance(value, str) else value
+        tagged = tagged.withColumn("__v__", F.coalesce(v.cast("long"), F.lit(0)))
+    tagged = tagged.withColumn("__pid__", F.spark_partition_id()).localCheckpoint(
+        eager=True
     )
-    counts = tagged.groupBy("__pid__").agg(F.count(F.lit(1)).alias("__cnt__"))
-    w_off = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid__",
-        F.coalesce(F.sum("__cnt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = Window.partitionBy("__pid__").orderBy("__mid__")
-    return (
-        tagged.join(F.broadcast(offsets), "__pid__")
-        .withColumn(
-            out,
-            (F.row_number().over(w_local).cast("long") - 1 + F.col("__off__")),
+    # one row per (partition, group) run: its total and its first tag
+    total = F.count(F.lit(1)) if value is None else F.sum("__v__")
+    runs = tagged.groupBy(*keys).agg(total.alias("__s__"), F.min("__mid__").alias("__m0__"))
+    before = Window.orderBy("__pid__", "__m0__").rowsBetween(Window.unboundedPreceding, -1)
+    off = F.coalesce(F.sum("__s__").over(before), F.lit(0))
+    runs = runs.select(F.col("__pid__").alias("__rp__"), *keys[1:], "__m0__", off.alias("__off__"))
+    on = F.col("__pid__") == F.col("__rp__")
+    if group:
+        bases = runs.groupBy(F.col(group).alias("__rg__")).agg(
+            F.min_by("__off__", "__m0__").alias("__base__")
         )
-        .drop("__pid__", "__mid__", "__off__")
+        runs = runs.join(bases, F.col(group).eqNullSafe(F.col("__rg__"))).select(
+            "__rp__", "__rg__", (F.col("__off__") - F.col("__base__")).alias("__off__")
+        )
+        on = on & F.col(group).eqNullSafe(F.col("__rg__"))
+    w_local = Window.partitionBy(*keys).orderBy("__mid__")
+    local = (
+        F.row_number().over(w_local) - 1
+        if value is None
+        else F.sum("__v__").over(w_local) - F.col("__v__")
+    )
+    return (
+        tagged.join(F.broadcast(runs.drop("__m0__")), on)
+        .withColumn(out, (local + F.col("__off__")).cast("long"))
+        .drop("__pid__", "__mid__", "__v__", "__rp__", "__rg__", "__off__")
     )

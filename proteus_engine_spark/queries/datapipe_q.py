@@ -1051,11 +1051,10 @@ def text_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-then-chunk sequence packing: every document's global start
     offset on the doc_id-ordered token stream and the 2048-token
-    training sequence it starts in. The global prefix sum runs as the
-    two-phase range-partitioned scheme (datapipe.packing) — parallel,
-    no single-task global window; the oracle recomputes it with a plain
-    SQL window, so a lost partition offset or a mis-ordered range fails
-    the hash."""
+    training sequence it starts in. The prefix sum is
+    operators.partitioning.running_sum; the oracle recomputes it with a
+    plain SQL window, so a lost partition offset or a mis-ordered range
+    fails the hash."""
     from proteus_engine_spark.datapipe.packing import pack_sequences
     from proteus_engine_spark.datapipe.textstats import token_count
 
@@ -1659,11 +1658,8 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic epoch shuffle (sampling.shuffle_order, salt='ep1'):
     every document's position in the md5-induced pseudo-random training
     permutation — reproducible across engines and re-seedable per epoch.
-    Engine side is a PARALLEL range-partitioned sort on the digest plus
-    the two-phase zip_with_index rank (per-partition counts -> broadcast
-    offsets — never a single-task row_number over the corpus); the
-    oracle, which is allowed to be naive, is exactly that single
-    window."""
+    The rank is operators.partitioning.running_sum; the oracle, which is
+    allowed to be naive, is the single global window."""
     from proteus_engine_spark.datapipe.sampling import shuffle_order
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1882,11 +1878,9 @@ def corpus_interleave_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sampling.interleave_by_weight): sources paced into one training
     stream by virtual time (rank_in_source + 1) / weight — weight
     1 + (source index mod 4), derived identically by both engines — with
-    the md5 epoch shuffle inside each source. The engine computes
-    rank-in-source WITHOUT a per-source window (a whole source in one
-    task at 100 TB): global (source, digest) range sort + two-phase rank
-    minus broadcast per-source offsets; the oracle, allowed to be naive,
-    uses the partitioned window directly."""
+    the md5 epoch shuffle inside each source. Rank-in-source is
+    operators.partitioning.running_sum, never a per-source window; the
+    oracle, allowed to be naive, uses the partitioned window directly."""
     from proteus_engine_spark.datapipe.sampling import interleave_by_weight
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -1919,10 +1913,8 @@ def corpus_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-shuffled prefix whose inclusive token cumsum fits the source's
     budget (600 + 300·(source index mod 4) — derived identically by both
     engines) — the absolute-quota tier completing mixture_weights (plan)
-    and stratified/rebalance (rates). Engine side computes the
-    within-group cumsum with the pack_sequences two-phase prefix sum
-    (range partition + broadcast partition offsets + broadcast group
-    bases) — never a data-sized window; the oracle uses the naive
+    and stratified/rebalance (rates). The within-group cumsum is
+    operators.partitioning.running_sum; the oracle uses the naive
     per-source window cumsum."""
     from proteus_engine_spark.datapipe.sampling import sample_to_token_budget
     from proteus_engine_spark.datapipe.textstats import token_count
@@ -2085,8 +2077,8 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase rank exactly (ties break on doc_id). Engine side never
     single-tasks: (doc, bucket) counts are the only corpus-sized
     shuffle, the model and its totals are broadcast, the selection
-    cut-off is a 1-row broadcast, and the rank is the zip_with_index
-    two-phase scheme over a range sort."""
+    cut-off is a 1-row broadcast, and the rank is
+    operators.partitioning.running_sum over a range sort."""
     from proteus_engine_spark.datapipe.sampling import dsir_select
 
     return dsir_select(
@@ -3110,9 +3102,9 @@ def corpus_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assignment (sampling.bucketed_batches,
     batch_size=8, bucket_width=32) — the BucketIterator shape that packs
     similar-length documents into the same inference batch so padding
-    waste stays bounded by the bucket width. One parallel range sort +
-    the two-phase zip_with_index rank with broadcast per-bucket offsets;
-    the oracle reproduces the assignment with a plain window."""
+    waste stays bounded by the bucket width. Rank-in-bucket is
+    operators.partitioning.running_sum; the oracle reproduces the
+    assignment with a plain window."""
     from proteus_engine_spark.datapipe.sampling import bucketed_batches
 
     return bucketed_batches(
@@ -3139,9 +3131,9 @@ def corpus_fixed_n_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     source): deterministically keep the first 10 docs of each source in
     the md5 permutation — the exact-count complement to rate-based
     stratified sampling (eval sets and per-source caps need exact
-    counts, not expected ones). One parallel range sort + two-phase rank
-    with broadcast per-group offsets — never a per-group window on the
-    engine side; the oracle uses the plain window."""
+    counts, not expected ones). Rank-in-group is
+    operators.partitioning.running_sum; the oracle uses the plain
+    window."""
     from proteus_engine_spark.datapipe.sampling import fixed_n_sample
 
     return fixed_n_sample(load_table(spark, sf_dir, "documents"), n_per_group=10)

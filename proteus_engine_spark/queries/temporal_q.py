@@ -628,11 +628,10 @@ def events_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values quantize to exact integer cents FIRST, so Σ rank·cents and
     the total are exact longs (accumulation-order-proof; only the final
     two-division formula is floating point, identical in both engines).
-    Ranks come from the parallel range sort + two-phase zip_with_index
-    with enum-sized per-type offsets broadcast back (the fixed_n_sample
-    shape) — never a data-cardinality window; (cents, event_id) ties
-    break identically in both engines."""
-    from proteus_engine_spark.operators.partitioning import zip_with_index
+    Ranks are operators.partitioning.running_sum over one parallel range
+    sort — never a data-cardinality window; (cents, event_id) ties break
+    identically in both engines."""
+    from proteus_engine_spark.operators.partitioning import running_sum
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -640,19 +639,13 @@ def events_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
     )
     ordered = ev.orderBy("event_type", "cents", "event_id")
-    idx = zip_with_index(ordered, out="__idx__")
-    offs = F.broadcast(
-        idx.groupBy("event_type").agg(F.min("__idx__").alias("__off__"))
-    )
-    ranked = idx.join(offs, "event_type").withColumn(
-        "rk", F.col("__idx__") - F.col("__off__") + 1
-    )
+    ranked = running_sum(ordered, group="event_type", out="rk")
     return (
         ranked.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").alias("total_cents"),
-            F.sum(F.col("rk") * F.col("cents")).alias("weighted"),
+            F.sum((F.col("rk") + 1) * F.col("cents")).alias("weighted"),
         )
         .select(
             "event_type",

@@ -1,7 +1,6 @@
 """Round-10 tests: relaxed batch-return UDF contract (1-d batches only),
 benchmark decontamination, mixture weights and per-row-rate sampling,
-percentile summaries, TF-IDF top terms, sequence packing (incl. a
-randomized layout-invariance sweep), the cheapened strict
+percentile summaries, TF-IDF top terms, the cheapened strict
 connected-components convergence, delta-iteration signalling, the
 insort ordering of late-admitted rows in triggered windows, the
 per-partition late splitter frontier (incl. a randomized prior-batch
@@ -325,43 +324,6 @@ def test_late_data_split_partitioned_frontiers(spark):
     assert late == {1: False, 2: False, 3: True, 4: True, 5: False}
 
 
-# ---------------- sequence packing ----------------
-
-
-def test_pack_sequences_small(spark):
-    from proteus_engine_spark.datapipe.packing import pack_sequences
-
-    rows = [(1, 5), (2, 3), (3, 4), (4, 10), (5, 2)]
-    df = spark.createDataFrame(rows, "doc_id long, n long")
-    out = pack_sequences(df, "n", "doc_id", ctx_len=8, n_partitions=3)
-    got = {r["doc_id"]: (r["start_offset"], r["seq_bin"]) for r in out.collect()}
-    # stream: d1 [0,5) d2 [5,8) d3 [8,12) d4 [12,22) d5 [22,24)
-    assert got == {1: (0, 0), 2: (5, 0), 3: (8, 1), 4: (12, 1), 5: (22, 2)}
-
-
-def test_pack_sequences_partition_invariance(spark):
-    """Values must not depend on how the range split lands."""
-    from proteus_engine_spark.datapipe.packing import pack_sequences
-
-    rows = [(i, (i * 7) % 13 + 1) for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, n long")
-    a = pack_sequences(df, "n", "doc_id", ctx_len=16, n_partitions=1)
-    b = pack_sequences(df, "n", "doc_id", ctx_len=16, n_partitions=7)
-    ra = sorted((r["doc_id"], r["start_offset"], r["seq_bin"]) for r in a.collect())
-    rb = sorted((r["doc_id"], r["start_offset"], r["seq_bin"]) for r in b.collect())
-    assert ra == rb
-    # last doc's start offset == total tokens before it
-    assert ra[-1][1] == sum(n for _i, n in rows[:-1])
-
-
-def test_pack_sequences_rejects_bad_ctx(spark):
-    from proteus_engine_spark.datapipe.packing import pack_sequences
-
-    df = spark.createDataFrame([(1, 1)], "doc_id long, n long")
-    with pytest.raises(ValueError, match="ctx_len"):
-        pack_sequences(df, "n", "doc_id", ctx_len=0)
-
-
 # ---------------- TF-IDF top terms ----------------
 
 
@@ -443,7 +405,7 @@ def test_iterate_delta_strict_raises_on_nonempty_workset(spark):
     assert any("non-empty workset" in str(w.message) for w in rec)
 
 
-# ---------------- packing property test ----------------
+# ---------------- late splitter property test ----------------
 
 
 try:
@@ -453,34 +415,6 @@ try:
     HAS_HYPOTHESIS = True
 except ImportError:  # pragma: no cover
     HAS_HYPOTHESIS = False
-
-
-@pytest.mark.skipif(not HAS_HYPOTHESIS, reason="hypothesis not installed")
-@settings(deadline=None, max_examples=12)
-@given(
-    sizes=st_.lists(st_.integers(min_value=0, max_value=40), min_size=1, max_size=40),
-    n_parts=st_.integers(min_value=1, max_value=8),
-    ctx=st_.integers(min_value=1, max_value=64),
-)
-def test_pack_sequences_properties(spark, sizes, n_parts, ctx):
-    """Randomized packing invariants at any range split: offsets are the
-    exclusive prefix sums in key order, bins are offset DIV ctx, and the
-    layout is gapless (each next offset = previous offset + size)."""
-    from proteus_engine_spark.datapipe.packing import pack_sequences
-
-    rows = [(i, s) for i, s in enumerate(sizes)]
-    df = spark.createDataFrame(rows, "doc_id long, n long")
-    out = sorted(
-        (r["doc_id"], r["start_offset"], r["seq_bin"])
-        for r in pack_sequences(df, "n", "doc_id", ctx_len=ctx, n_partitions=n_parts).collect()
-    )
-    expect_off = 0
-    for (i, s), (doc, off, b) in zip(rows, out):
-        assert doc == i and off == expect_off and b == off // ctx
-        expect_off += s
-
-
-# ---------------- late splitter property test ----------------
 
 
 def _capture_split_fn(spark, delay):
@@ -589,21 +523,6 @@ def test_sample_frames_stride_and_short_payload(spark):
 
 def _plan10(df):
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_pack_sequences_plan_parallel_prefix_sum(spark):
-    """The heavy window must partition by __pid__ (parallel), never run
-    as one global-sort window; offsets arrive by broadcast; no Python
-    node anywhere."""
-    from proteus_engine_spark.datapipe.packing import pack_sequences
-
-    df = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7 + 1).alias("n")
-    )
-    plan = _plan10(pack_sequences(df, "n", "doc_id", n_partitions=8))
-    assert "windowspecdefinition(__pid__" in plan
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_decontam_plan_stays_jvm_and_hash_keyed(spark):

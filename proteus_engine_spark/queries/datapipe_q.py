@@ -2990,28 +2990,30 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_* gate uses) and is LEFT-ANTI stream-static joined against
     the STATIC existing-corpus digest set (doc_id % 2 = 0) — Structured
     Streaming's stream-static join family, which needs no watermark or
-    state because the static side is fixed per micro-batch; survivors
+    state because the static side is drained once at query start; survivors
     roll up per source as a continuous complete-mode aggregate (count +
     id checksum — streaming aggregates cannot COUNT DISTINCT, and the
     checksum makes the surviving SET, not just its size, part of the
     hash). Only digests and ids cross the join; text never shuffles."""
+    from proteus_engine_spark.streaming.side_inputs import keyed_side_input
     from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
     raw = parquet_stream(spark, sf_dir, "documents.parquet")
-    # r17 optimization: pin the static digest set once per query — the
-    # static side of a stream-static join re-executes per micro-batch,
-    # so the scan+md5+distinct ran once per batch. Values unchanged.
+    # The digest set is a keyed side input: drained once per query, so the
+    # scan + md5 + distinct run once, not once per micro-batch.
     corpus_digests = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 2 == 0)
         .select(F.md5(F.col("text")).alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    survivors = (
-        raw.filter(F.col("doc_id") % 3 == 0)
-        .select("doc_id", "source", F.md5(F.col("text")).alias("h"))
-        .join(corpus_digests, "h", "left_anti")
+    survivors = keyed_side_input(
+        raw.filter(F.col("doc_id") % 3 == 0).select(
+            "doc_id", "source", F.md5(F.col("text")).alias("h")
+        ),
+        corpus_digests,
+        ["h"],
+        how="left_anti",
     )
     agg = survivors.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_new_docs"),
@@ -3868,6 +3870,7 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fingerprint table that broadcasts (or persists bucketed by
     (band, value) in a continuous-crawl deployment)."""
     from proteus_engine_spark.datapipe.multimodal import perceptual_hash, phash_banding
+    from proteus_engine_spark.streaming.side_inputs import keyed_side_input
     from proteus_engine_spark.streaming.sources import parquet_stream, run_to_completion
 
     ascii_docs = (
@@ -3883,13 +3886,6 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.encode("text", "utf-8").alias("payload"),
         )
     )
-    # r17 optimization: the STATIC side of a stream-static join is
-    # re-executed on every micro-batch — without this pin the corpus
-    # fingerprint mapInPandas pass ran once per batch (~3x per run).
-    # localCheckpoint runs it exactly once per query; values unchanged
-    # (verified rows-identical A/B). The production analogue is the
-    # docstring's persisted/bucketed corpus fingerprint table.
-    corpus_h = perceptual_hash(corpus).localCheckpoint(eager=True)
 
     stream = parquet_stream(spark, sf_dir, "documents.parquet")
     batch = (
@@ -3916,10 +3912,17 @@ def stream_dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = phash_banding(max_distance)
     bb = band(first, "phash", "phash")
     cb = band(
-        corpus_h, "phash", F.col("media_id").alias("corpus_id"), F.col("phash").alias("corpus_ph")
+        perceptual_hash(corpus),
+        "phash",
+        F.col("media_id").alias("corpus_id"),
+        F.col("phash").alias("corpus_ph"),
     )
+    # The banded corpus is a keyed side input: drained once per query, so
+    # the corpus fingerprint mapInPandas pass runs once, not once per
+    # micro-batch. The production analogue is the docstring's
+    # persisted/bucketed corpus fingerprint table.
     out = (
-        bb.join(cb, ["b", "bv"])
+        keyed_side_input(bb, cb, ["b", "bv"], how="inner")
         .filter(
             F.bit_count(F.col("phash").bitwiseXOR(F.col("corpus_ph"))) <= max_distance
         )

@@ -274,8 +274,9 @@ def stream_event_time_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_side_input_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROTEUS keyed side input (KeyedSideInput, DataStream.java:910): the
     side input is keyed like the stream; each key group sees its slice.
-    Stream-static equi-join on the derived key — Catalyst distributes the
-    static side by its stats (broadcast here; shuffled at 100 TB)."""
+    Stream-static equi-join on the derived key against the side drained
+    once at query start — Catalyst distributes the pinned side by its
+    stats (broadcast here; shuffled at 100 TB)."""
     ev = events_stream(spark, sf_dir).filter(F.col("event_type") == "signup")
     nation = load_table(spark, sf_dir, "nation")
     joined = keyed_side_input(
@@ -299,8 +300,9 @@ def stream_side_input_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_side_input_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROTEUS broadcast side input (DataStream.withSideInput,
     DataStream.java:902): stream enriched against a bounded broadcast
-    dataset via stream-static join — re-read per micro-batch, same
-    visibility as the side-input gate drain."""
+    dataset via stream-static join — the side is drained once at query
+    start, as the side-input gate is, and every micro-batch joins the
+    pinned snapshot."""
     ev = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     cust = load_table(spark, sf_dir, "customer")
     joined = broadcast_side_input(

@@ -14,7 +14,12 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from proteus_engine_spark.streaming.cep import Pattern, match_pattern, match_pattern_stream
-from proteus_engine_spark.streaming.side_inputs import forwarded_side_input
+from proteus_engine_spark.streaming.side_inputs import (
+    broadcast_side_input,
+    forwarded_side_input,
+    keyed_side_input,
+)
+from proteus_engine_spark.streaming.sources import run_to_completion
 from proteus_engine_spark.streaming.stateful import count_window_agg, process_keyed
 from tests.conftest import SF_DIR
 
@@ -132,6 +137,90 @@ def test_forwarded_side_input_tags_and_aligns(spark):
     rows = sorted(out.collect(), key=lambda r: r["id"])
     assert rows[0]["__side__"] is False and rows[0]["payload"] == "a" and rows[0]["weight"] is None
     assert rows[1]["__side__"] is True and rows[1]["weight"] == 9.5 and rows[1]["payload"] is None
+
+
+SIDE_INPUTS = {"broadcast": broadcast_side_input, "keyed": keyed_side_input}
+MAIN_SCHEMA = "id long, payload string"
+MAIN_A = [(1, "a"), (2, "b"), (3, "c")]
+MAIN_B = [(2, "d"), (4, "e"), (5, "f")]
+SIDE_ROWS = {"id": [1, 2, 2, 4, 9], "weight": [0.5, 1.5, 2.5, 4.5, 9.5]}
+
+
+def _write_side(path, name, cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir(exist_ok=True)
+    pq.write_table(pa.table(cols), path / name)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("how", ["left", "inner"])
+@pytest.mark.parametrize("on", ["list", "column", "none"])
+@pytest.mark.parametrize("mode", sorted(SIDE_INPUTS))
+def test_side_input_matches_batch_join(spark, tmp_path, mode, on, how):
+    """Over two micro-batches, a broadcast or keyed side input gives the
+    rows of the same join run as one batch."""
+    _write_side(tmp_path / "side", "side.parquet", SIDE_ROWS)
+    side = spark.read.parquet(str(tmp_path / "side"))
+    if on == "list":
+        cond = ["id"]
+    else:
+        side = side.withColumnRenamed("id", "sid")
+        cond = F.col("id") == F.col("sid") if on == "column" else None
+    stream = _two_batch_stream(spark, MAIN_A, MAIN_B, MAIN_SCHEMA)
+    out = SIDE_INPUTS[mode](stream, side, cond, how)
+    got = run_to_completion(out, f"side_input_{mode}_{on}_{how}_sink", "append")
+    want = spark.createDataFrame(MAIN_A + MAIN_B, MAIN_SCHEMA).join(side, cond, how)
+    assert _rows(got) == _rows(want)
+
+
+@pytest.mark.parametrize("mode", sorted(SIDE_INPUTS))
+def test_side_input_is_drained_at_query_start(spark, tmp_path, mode):
+    """A side input is a snapshot taken when the query is built: the side's
+    parquet rewritten with new values, and the old file deleted, before the
+    query runs change nothing it sees."""
+    side_dir = tmp_path / "side"
+    _write_side(side_dir, "v1.parquet", SIDE_ROWS)
+    stream = _two_batch_stream(spark, MAIN_A, MAIN_B, MAIN_SCHEMA)
+    out = SIDE_INPUTS[mode](stream, spark.read.parquet(str(side_dir)), ["id"], "inner")
+    _write_side(side_dir, "v2.parquet", {"id": [1, 2, 3, 4, 5], "weight": [-1.0] * 5})
+    (side_dir / "v1.parquet").unlink()
+    got = run_to_completion(out, f"side_input_snapshot_{mode}_sink", "append")
+    assert _rows(got) == [
+        (1, "a", 0.5), (2, "b", 1.5), (2, "b", 2.5), (2, "d", 1.5), (2, "d", 2.5), (4, "e", 4.5)
+    ]
+
+
+@pytest.mark.parametrize("mode", sorted(SIDE_INPUTS))
+def test_side_input_plan_has_no_side_scan(spark, tmp_path, mode):
+    """The running query's micro-batch plan reads the drained rows, not the
+    side's parquet: no FileScan is left over the side's path."""
+    side_dir = tmp_path / "side"
+    _write_side(side_dir, "side.parquet", SIDE_ROWS)
+    stream = _two_batch_stream(spark, MAIN_A, MAIN_B, MAIN_SCHEMA)
+    out = SIDE_INPUTS[mode](stream, spark.read.parquet(str(side_dir)), ["id"], "left")
+    q = out.writeStream.format("memory").queryName(f"side_input_plan_{mode}_sink").start()
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(True)
+    finally:
+        q.stop()
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert scans, plan  # the stream's own micro-batch scan is planned
+    assert not [line for line in scans if str(side_dir) in line], plan
+
+
+def test_side_input_rejects_a_stream(spark):
+    """A side input is bounded; a streaming side raises before any join."""
+    main = _two_batch_stream(spark, MAIN_A, MAIN_B, MAIN_SCHEMA)
+    side = _two_batch_stream(spark, MAIN_A, MAIN_B, MAIN_SCHEMA)
+    for fn in SIDE_INPUTS.values():
+        with pytest.raises(ValueError, match="a side input is a bounded dataset"):
+            fn(main, side, ["id"])
 
 
 def test_events_stream_schema(spark):
